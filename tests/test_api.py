@@ -132,3 +132,34 @@ def test_http_round_trip(api):
         for s in servers:
             s.shutdown()
             s.server_close()
+
+
+def test_only_typed_not_found_errors_map_to_404(api, monkeypatch):
+    """A missing segment or table is 404; a KeyError from inside the write
+    path is a server bug and must surface as 500, not as 'not found'."""
+    import io
+
+    from trough_spark.wsgi import write_app
+
+    assert api.write("nope", "INSERT INTO kv (v) VALUES ('x')")[0] == 404
+    assert api.read("nope", "SELECT 1")[0] == 404
+    api.put_schema_sql("s1", "create table kv (id INTEGER PRIMARY KEY, v TEXT);")
+    api.provision(json.dumps({"segment": "seg", "schema": "s1"}))
+    assert api.write("seg", "INSERT INTO no_such_table (x) VALUES (1)")[0] == 404
+
+    def broken(*_a, **_k):
+        raise KeyError("internal row-index bug")
+
+    monkeypatch.setattr(api.store, "_flush_inserts", broken)
+    with pytest.raises(KeyError):
+        api.write("seg", "INSERT INTO kv (v) VALUES ('x')")
+    body = b"INSERT INTO kv (v) VALUES ('x')"
+    environ = {
+        "REQUEST_METHOD": "POST",
+        "QUERY_STRING": "segment=seg",
+        "CONTENT_LENGTH": str(len(body)),
+        "wsgi.input": io.BytesIO(body),
+    }
+    statuses = []
+    out = write_app(api)(environ, lambda status, headers: statuses.append(status))
+    assert statuses[0].startswith("500") and b"internal row-index bug" in b"".join(out)

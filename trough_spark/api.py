@@ -19,7 +19,7 @@ from __future__ import annotations
 import json
 
 from trough_spark.dialect import QueryRejected
-from trough_spark.store import SegmentStore
+from trough_spark.store import SegmentNotFound, SegmentStore, TableNotFound
 
 JSON = "application/json"
 TEXT = "text/plain"
@@ -118,7 +118,7 @@ class SegmentManagerAPI:
             rows = self.store.read(segment_id, sql)
         except QueryRejected as e:
             return 400, str(e), TEXT
-        except KeyError:
+        except (SegmentNotFound, TableNotFound):
             return 404, "", TEXT
         return 200, json.dumps(rows, default=str), JSON
 
@@ -127,7 +127,7 @@ class SegmentManagerAPI:
             returned = self.store.write(segment_id, sql_script)
         except QueryRejected as e:
             return 400, str(e), TEXT
-        except KeyError:
+        except (SegmentNotFound, TableNotFound):
             return 404, "", TEXT
         if returned:
             # RETURNING rows (SQLite 3.35+) come back as the response body;

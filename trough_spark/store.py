@@ -42,9 +42,12 @@ import time
 from dataclasses import dataclass, field
 from weakref import WeakKeyDictionary
 
+import pyarrow as pa
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import _create_converter, _make_type_verifier
 
 from trough_spark import dialect
 from trough_spark.dialect import QueryRejected
@@ -1577,6 +1580,14 @@ class _RetCapture:
         self.depth = 0
 
 
+class SegmentNotFound(KeyError):
+    """The named segment is not provisioned (a client error: HTTP 404)."""
+
+
+class TableNotFound(KeyError):
+    """The named table is not in the segment (a client error: HTTP 404)."""
+
+
 class WriteLockError(RuntimeError):
     """Another process holds the segment's write lock (the reference's
     one-writer-per-segment rule, trough/write.py:55-57 / sync.py:130-145)."""
@@ -1905,7 +1916,7 @@ class SegmentStore:
     def _segment_info(self, segment_id: str) -> dict:
         info = self._meta["segments"].get(segment_id)
         if info is None:
-            raise KeyError(f"segment {segment_id!r} not provisioned")
+            raise SegmentNotFound(f"segment {segment_id!r} not provisioned")
         return info
 
     def _table_path(self, table: str) -> str:
@@ -1926,7 +1937,7 @@ class SegmentStore:
         else:
             schema = self.schema(info["schema"])
             if table not in schema.tables:
-                raise KeyError(f"no table {table!r} in segment {label!r}")
+                raise TableNotFound(f"no table {table!r} in segment {label!r}")
             ts = schema.tables[table]
         # segment-level CREATE UNIQUE INDEX constraints (round 8); skip any
         # col-set the table already carries (an ALTER may have persisted a
@@ -2223,7 +2234,7 @@ class SegmentStore:
             d = r.asDict() if hasattr(r, "asDict") else dict(r)
             low = {k.lower(): v for k, v in d.items()}
             tuples.append(tuple([i] + [low.get(c.lower()) for c in colnames]))
-        df = self.spark.createDataFrame(tuples, full)
+        df = _local_frame(self.spark, tuples, full)
         try:
             out = (
                 df.select(
@@ -2358,7 +2369,8 @@ class SegmentStore:
             [T.StructField("__trough_ord__", T.LongType(), False)]
             + list(ts.struct().fields)
         )
-        df = self.spark.createDataFrame(
+        df = _local_frame(
+            self.spark,
             [tuple([i] + [r[n] for n, _t in ts.fields]) for i, r in enumerate(rows)],
             full,
         )
@@ -2624,7 +2636,7 @@ class SegmentStore:
                         where=conflict.group("where"),
                     )
                     return False
-                df = self.spark.createDataFrame(rows, ts.struct())
+                df = _local_frame(self.spark, rows, ts.struct())
                 if sets is None:
                     self._upsert(segment_id, table, ts, df, "IGNORE")
                 else:
@@ -2652,13 +2664,13 @@ class SegmentStore:
                 # is a plain insert — but OR IGNORE still SKIPS rows that
                 # violate CHECK/NOT NULL (probed)
                 if mode == "IGNORE" and (ts.checks or ts.not_null):
-                    df = self.spark.createDataFrame(rows, ts.struct())
+                    df = _local_frame(self.spark, rows, ts.struct())
                     rows = self._drop_constraint_violations(ts, df).collect()
                 self._ret_add(table, rows)
                 pending.setdefault(table, []).extend(rows)
                 return True
             self._flush_inserts(segment_id, pending)
-            df = self.spark.createDataFrame(rows, ts.struct())
+            df = _local_frame(self.spark, rows, ts.struct())
             self._upsert(segment_id, table, ts, df, mode, skip_violations=mode == "IGNORE")
             return False
         # INSERT INTO ... SELECT: evaluate the query against this segment's
@@ -2941,7 +2953,7 @@ class SegmentStore:
         tuples = [
             tuple(d[n] for n in fields) for d in live.values()
         ]
-        out = self.spark.createDataFrame(tuples, ts.struct())
+        out = _local_frame(self.spark, tuples, ts.struct())
         self._assert_constraints(ts, out)
         self._ret_add(table, ret)
         self._overwrite_partition(segment_id, table, out)
@@ -3377,13 +3389,10 @@ class SegmentStore:
                 continue
             ts = self._table_schema(segment_id, table)
             self._assert_pk_unique_rows(segment_id, table, ts, rows)
-            # one file per flush: these are driver-side statement rows
-            # (small by construction); the default parallelize split wrote
-            # 8+ ~2 KB files per statement, making every later point read
-            # pay one task per fragment (PERF.md round-8 floor analysis —
-            # the reference's segment is ONE SQLite file for the same
-            # reason)
-            df = self.spark.createDataFrame(rows, ts.struct()).coalesce(1)
+            # one file per flush: a local frame spreads even 5 rows over one
+            # partition per core, and every file costs later point reads a
+            # scan task (the reference's segment is ONE SQLite file)
+            df = _local_frame(self.spark, rows, ts.struct()).coalesce(1)
             self._assert_constraints(ts, df)
             path = self._partition_path(table, segment_id)
             self._txn_before_write(table, segment_id)
@@ -3395,12 +3404,13 @@ class SegmentStore:
         constraint — the OR IGNORE per-row skip test (driver-local
         single-row evaluation; used only on the conflict-resolving
         triggered-insert path)."""
-        df = self.spark.createDataFrame(
-            [tuple(row[n] for n, _ in ts.fields)], ts.struct()
+        df = _local_frame(
+            self.spark, [tuple(row[n] for n, _ in ts.fields)], ts.struct()
         )
-        for _msg, cond in self._violation_conds(ts):
-            if df.filter(cond).limit(1).count():
-                return True
+        try:
+            self._assert_constraints(ts, df)
+        except QueryRejected:
+            return True
         return False
 
     def _violation_conds(self, ts: TableSchema) -> list[tuple[str, str]]:
@@ -3430,17 +3440,19 @@ class SegmentStore:
 
     def _assert_constraints(self, ts: TableSchema, df) -> None:
         """Raise SQLite's constraint error if any row of ``df`` violates a
-        CHECK/NOT NULL.  One combined filter job on the write batch (zero
-        cost for constraint-free tables); the per-constraint re-probe runs
-        only on the failure path to name the right constraint."""
+        CHECK/NOT NULL.  One combined probe: no job over a local frame (the
+        optimizer evaluates it), one job over a partition scan (coalesced,
+        so the limit never scales up over more partitions); zero cost for
+        constraint-free tables.  The per-constraint re-probe runs only on
+        the failure path to name the right constraint."""
         conds = self._violation_conds(ts)
         if not conds:
             return
         combined = " OR ".join(f"({c})" for _, c in conds)
-        if df.filter(combined).limit(1).count() == 0:
+        if not df.filter(combined).coalesce(1).limit(1).collect():
             return
         for msg, c in conds:
-            if df.filter(c).limit(1).count() > 0:
+            if df.filter(c).coalesce(1).limit(1).collect():
                 raise QueryRejected(msg)
 
     def _drop_constraint_violations(self, ts: TableSchema, df):
@@ -3451,9 +3463,6 @@ class SegmentStore:
             return df
         combined = " OR ".join(f"({c})" for _, c in conds)
         return df.filter(f"NOT ({combined})")
-
-    def _pk_error(self, table: str, ts: TableSchema) -> QueryRejected:
-        return self._unique_error(table, ts.primary_key)
 
     @staticmethod
     def _unique_error(table: str, cols: list[str]) -> QueryRejected:
@@ -3474,12 +3483,17 @@ class SegmentStore:
         return out
 
     def _assert_state_unique(
-        self, ts: TableSchema, table: str, state: DataFrame
+        self, ts: TableSchema, table: str, state: DataFrame, touched=None
     ) -> None:
         """Raise if a final table state contains duplicate keys under any
-        declared uniqueness constraint (collation-folded) — the post-hoc
-        guard for bulk paths that compute a whole-partition rewrite."""
+        declared uniqueness constraint (collation-folded; NULL key
+        components never conflict) — the post-hoc guard for paths that
+        compute a whole-partition state.  With ``touched`` (lower-case
+        column names), only constraints over one of those columns are
+        checked: one aggregate job per checked constraint."""
         for ucols, ucolls in ts.unique_constraints():
+            if touched is not None and not touched & {k.lower() for k in ucols}:
+                continue
             folded = self._fold_cols(ts, ucols, ucolls)
             dup = (
                 state.selectExpr(
@@ -3537,17 +3551,17 @@ class SegmentStore:
                 hit = proj.filter(F.col(cols[0]).isin([k[0] for k in keys]))
             else:
                 types = {n.lower(): t for n, t in ts.fields}
-                batch = self.spark.createDataFrame(
+                batch = _local_frame(
+                    self.spark,
                     keys,
                     T.StructType(
-                        [
-                            T.StructField(c, types[c.lower()], True)
-                            for c in cols
-                        ]
+                        [T.StructField(c, types[c.lower()], True) for c in cols]
                     ),
                 )
                 hit = proj.join(batch, cols, "left_semi")
-            if hit.limit(1).count() > 0:
+            # a plain collect is one job; its result is bounded by the
+            # batch, since existing keys are unique
+            if hit.collect():
                 raise self._unique_error(table, cols)
 
     def _assert_pk_unique_df(
@@ -3555,35 +3569,13 @@ class SegmentStore:
     ) -> None:
         """INSERT..SELECT flavor of the uniqueness check: any key (pk or
         UNIQUE, collation-folded) appearing twice across (new ∪ existing)
-        is a violation — one aggregate job per declared constraint."""
-        cons = ts.unique_constraints()
-        if not cons:
+        is a violation."""
+        if not ts.unique_constraints():
             return
         path = self._partition_path(table, segment_id)
-        existing = (
-            self._read_files(path, ts.struct()) if os.path.isdir(path) else None
-        )
-        for cols, colls in cons:
-            folded = self._fold_cols(ts, cols, colls)
-            sel = [f"{sql} AS `{c}`" for c, (sql, _e) in zip(cols, folded)]
-            side = new.selectExpr(*sel)
-            if existing is not None:
-                side = side.unionByName(existing.selectExpr(*sel))
-            # NULL key components never conflict — filter them from BOTH
-            # sides (two coexisting NULL keys are legal, and groupBy would
-            # wrongly bucket them together)
-            side = side.where(
-                " AND ".join(f"`{k}` IS NOT NULL" for k in cols)
-            )
-            dup = (
-                side.groupBy(*cols)
-                .count()
-                .filter(F.col("count") > 1)
-                .limit(1)
-                .count()
-            )
-            if dup:
-                raise self._unique_error(table, cols)
+        if os.path.isdir(path):
+            new = new.unionByName(self._read_files(path, ts.struct()))
+        self._assert_state_unique(ts, table, new)
 
     def _rewrite_partition(self, segment_id: str, stmt: str, kind: str) -> None:
         """UPDATE/DELETE = read-modify-overwrite of ONE segment partition —
@@ -3743,29 +3735,10 @@ class SegmentStore:
             # generated columns recompute from the post-update base values
             # (identical for untouched rows — deterministic by DDL rule)
             out = self._apply_generated_df(ts, out)
-            for ucols, ucolls in ts.unique_constraints():
-                # SQLite raises when an UPDATE lands two rows on one pk or
-                # UNIQUE key (probed round 8) — checked only when the SET
-                # touches the constraint's columns, collation-folded
-                if not set(sets) & {k.lower() for k in ucols}:
-                    continue
-                folded = self._fold_cols(ts, ucols, ucolls)
-                dup = (
-                    out.selectExpr(
-                        *[
-                            f"{sql} AS `{c}`"
-                            for c, (sql, _e) in zip(ucols, folded)
-                        ]
-                    )
-                    .where(" AND ".join(f"`{k}` IS NOT NULL" for k in ucols))
-                    .groupBy(*ucols)
-                    .count()
-                    .filter(F.col("count") > 1)
-                    .limit(1)
-                    .count()
-                )
-                if dup:
-                    raise self._unique_error(table, ucols)
+            # SQLite raises when an UPDATE lands two rows on one pk or
+            # UNIQUE key (probed round 8) — checked only when the SET
+            # touches the constraint's columns
+            self._assert_state_unique(ts, table, out, touched=set(sets))
             if ts.primary_key and set(sets) & {k.lower() for k in ts.primary_key}:
                 pk = ts.primary_key
                 if (
@@ -3986,7 +3959,7 @@ class SegmentStore:
             tuple(r[n] for n, _ in ts.fields)
             for r in list(state.values()) + null_existing + nullkey_rows
         ]
-        out = self.spark.createDataFrame(tuples, ts.struct())
+        out = _local_frame(self.spark, tuples, ts.struct())
         self._assert_constraints(ts, out)
         self._overwrite_partition(segment_id, table, out)
 
@@ -4187,7 +4160,7 @@ class SegmentStore:
         tuples = [
             tuple(r[n] for n, _ in ts.fields) for r in survivors
         ]
-        out = self.spark.createDataFrame(tuples, ts.struct())
+        out = _local_frame(self.spark, tuples, ts.struct())
         self._assert_constraints(ts, out)  # OR REPLACE: CHECK still raises
         self._overwrite_partition(segment_id, table, out)
 
@@ -5047,8 +5020,8 @@ class SegmentStore:
             cond = c if cond is None else (cond & c)
         kept = df.filter(~cond)
         if new_row is not None:
-            repl = self.spark.createDataFrame(
-                [tuple(new_row[n] for n, _ in ts.fields)], ts.struct()
+            repl = _local_frame(
+                self.spark, [tuple(new_row[n] for n, _ in ts.fields)], ts.struct()
             )
             out = kept.unionByName(repl)
             self._assert_constraints(ts, out)
@@ -5338,7 +5311,8 @@ class SegmentStore:
             [_T.StructField(f"__pk_{j}", typ[k.lower()]) for j, k in enumerate(pk)]
             + [_T.StructField(f"__n_{j}", t) for j, (_n, t) in enumerate(ts.fields)]
         )
-        news = self.spark.createDataFrame(
+        news = _local_frame(
+            self.spark,
             [
                 tuple(p[0][k] for k in pk) + tuple(p[1][n] for n in cols)
                 for p in pairs
@@ -5774,7 +5748,7 @@ class SegmentStore:
         ts = self._table_schema(segment_id, table)
         path = self._partition_path(table, segment_id)
         if not os.path.isdir(path):
-            return self.spark.createDataFrame([], ts.struct())
+            return _local_frame(self.spark, [], ts.struct())
         return self._read_files(path, ts.struct())
 
     _TABLE_INFO_SCHEMA = (
@@ -5809,7 +5783,7 @@ class SegmentStore:
         try:
             ts = self._table_schema_from_info(info, table, segment_id)
         except KeyError:
-            return self.spark.createDataFrame([], self._TABLE_INFO_SCHEMA)
+            return _local_frame(self.spark, [], self._TABLE_INFO_SCHEMA)
         pk_pos = {c.lower(): i + 1 for i, c in enumerate(ts.primary_key)}
         nn = {c.lower() for c in ts.not_null}
         gen = {c.lower() for c in ts.generated}
@@ -5829,7 +5803,7 @@ class SegmentStore:
                     pk_pos.get(name.lower(), 0),
                 )
             )
-        return self.spark.createDataFrame(rows, self._TABLE_INFO_SCHEMA)
+        return _local_frame(self.spark, rows, self._TABLE_INFO_SCHEMA)
 
     _FK_LIST_SCHEMA = (
         "id INT, seq INT, `table` STRING, `from` STRING, `to` STRING, "
@@ -5852,7 +5826,7 @@ class SegmentStore:
         try:
             ts = self._table_schema_from_info(info, table, segment_id)
         except KeyError:
-            return self.spark.createDataFrame([], self._FK_LIST_SCHEMA)
+            return _local_frame(self.spark, [], self._FK_LIST_SCHEMA)
         rows = []
         for fk_id, fk in enumerate(reversed(ts.fks)):
             to = fk.get("to")
@@ -5869,7 +5843,7 @@ class SegmentStore:
                         "NONE",
                     )
                 )
-        return self.spark.createDataFrame(rows, self._FK_LIST_SCHEMA)
+        return _local_frame(self.spark, rows, self._FK_LIST_SCHEMA)
 
     def _dir_fingerprint(self, path: str) -> tuple:
         """Cheap change detector for the view cache: (inode, mtime_ns, size)
@@ -5959,7 +5933,7 @@ class SegmentStore:
                 path = f"{dest}/data/{t}"
                 if not os.path.isdir(path):
                     return self._collated(
-                        self.spark.createDataFrame([], ts.struct()), ts
+                        _local_frame(self.spark, [], ts.struct()), ts
                     )
                 return self._collated(
                     self.spark.read.schema(ts.struct()).parquet(path), ts
@@ -6051,7 +6025,7 @@ class SegmentStore:
         if self._view_cache.get("sqlite_master") != key:
             # content-keyed: rebuilding this catalog DataFrame per read was
             # part of the measured point-read floor (PERF.md)
-            self.spark.createDataFrame(rows, schema).createOrReplaceTempView(
+            _local_frame(self.spark, rows, schema).createOrReplaceTempView(
                 "sqlite_master"
             )
             self._view_cache["sqlite_master"] = key
@@ -6134,8 +6108,8 @@ class SegmentStore:
         if not os.path.isdir(
             f"{path}/_delta_log" if self._fmt == "delta" else path
         ):
-            return self.spark.createDataFrame(
-                [], ts.struct().add("segment_id", T.StringType())
+            return _local_frame(
+                self.spark, [], ts.struct().add("segment_id", T.StringType())
             )
         if self._fmt == "delta":
             # single-partitioned-table layout (round 6): the whole table IS
@@ -6638,6 +6612,32 @@ def _sqlite_decl(typ: T.DataType) -> str:
     if isinstance(typ, T.DateType):
         return "DATE"
     return "TEXT"
+
+
+def _local_frame(spark: SparkSession, rows, struct) -> DataFrame:
+    """The one way this module builds a DataFrame from driver-side rows.
+
+    Row-list ``createDataFrame`` parallelizes a pickled Python RDD that
+    every action re-runs in pyspark Python workers.  An Arrow table becomes
+    a ``LocalRelation`` instead: no Python worker runs, and the optimizer
+    evaluates a filter/limit/collect over it without a Spark job.  Rows go
+    through pyspark's own verifier and ``toInternal`` first, so type
+    errors and value conversions (dates, timestamps in the process time
+    zone) are exactly the row-list path's.  ``struct`` may be a DDL string.
+    """
+    if isinstance(struct, str):
+        struct = T.StructType.fromDDL(struct)
+    verify, to_tuple = _make_type_verifier(struct), _create_converter(struct)
+    internal = []
+    for r in rows:
+        verify(r)
+        internal.append(struct.toInternal(to_tuple(r)))
+    schema = to_arrow_schema(struct)
+    cols = zip(*internal) if internal else [()] * len(schema)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, schema)], schema=schema
+    )
+    return spark.createDataFrame(table, struct)
 
 
 def _coerce(v, typ: T.DataType):
