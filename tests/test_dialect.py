@@ -42,6 +42,39 @@ def test_write_gate():
     assert len(dialect.assert_write_allowed("INSERT INTO t VALUES (1); DELETE FROM t")) == 2
 
 
+def test_bind_names_prefix_shadowing_and_quoting():
+    views = {"items": "v1", "u": "v2", "kv": "v3", "t2": "v4", "we`ird": "v5"}
+
+    def bind(sql):
+        return dialect.bind_names(sql, views.get, "__r_")
+
+    # every bound name gets one definition; literals and comments bind none
+    assert bind("SELECT a.x, 'kv' FROM `Items` a JOIN [u] ON a.id = u.id -- t2") == (
+        "WITH `items` AS (SELECT * FROM `v1`), `u` AS (SELECT * FROM `v2`) "
+        "SELECT a.x, 'kv' FROM `Items` a JOIN [u] ON a.id = u.id -- t2"
+    )
+    assert bind("SELECT 1") == "SELECT 1"
+    assert bind("SELECT * FROM `we``ird`").startswith(
+        "WITH `we``ird` AS (SELECT * FROM `v5`) "
+    )
+    # merged into the statement's own WITH list, minus the names it defines;
+    # a nested CTE shadows ours inside its scope only
+    assert bind(
+        "/* c */ with kv AS (SELECT * FROM t2) "
+        "SELECT * FROM kv, (WITH u AS (SELECT 1) SELECT * FROM u)"
+    ) == (
+        "/* c */ with `t2` AS (SELECT * FROM `v4`), `u` AS (SELECT * FROM `v2`), "
+        "kv AS (SELECT * FROM t2) SELECT * FROM kv, (WITH u AS (SELECT 1) SELECT * FROM u)"
+    )
+    assert bind("WITH RECURSIVE c(x) AS (SELECT 1 FROM t2) SELECT * FROM c") == (
+        "WITH RECURSIVE `t2` AS (SELECT * FROM `v4`), "
+        "c(x) AS (SELECT 1 FROM t2) SELECT * FROM c"
+    )
+    for sql in ("SELECT * FROM __r_x", 'SELECT * FROM "__R_X"', "SELECT __r_1.a FROM t"):
+        with pytest.raises(QueryRejected):
+            bind(sql)
+
+
 def test_like_becomes_ilike():
     assert "ILIKE" in dialect.sqlite_to_spark("SELECT * FROM t WHERE a LIKE 'x%'")
 

@@ -422,6 +422,42 @@ def test_budget_select_no_global_single_partition_sort(spark):
     assert out.columns == ["id", "c", "body", "cum_before"]
 
 
+def test_budget_select_duplicate_keys_paths_agree(spark):
+    """A repeated key: the slim path (key/cost/score only) and the
+    join-back path (extra payload column) keep the same rows with the same
+    running totals, one output row per kept input row — the join-back
+    used to give k² rows for a key seen k times.  Key 3 has two identical
+    (cost, score) rows of which the budget keeps one."""
+    rows = [
+        (1, "a", 5, 9), (1, "a", 5, 9), (1, "b", 7, 6), (2, "a", 3, 8),
+        (3, "b", 4, 4), (3, "b", 4, 4), (3, "a", 2, 1),
+    ]
+    df = spark.createDataFrame(
+        [(*r, f"body{i}") for i, r in enumerate(rows)],
+        "id long, g string, c long, s long, body string",
+    )
+
+    def run(fn, cols, *args):
+        slim = fn(df.select(*cols), "id", "c", "s", *args)
+        wide = fn(df, "id", "c", "s", *args)
+        got = [
+            sorted(tuple(r[c] for c in (*cols, "cum_before")) for r in out.collect())
+            for out in (slim, wide)
+        ]
+        assert got[0] == got[1]
+        assert len({r["body"] for r in wide.collect()}) == len(got[1])
+        return got[0]
+
+    # global order (score desc, key): cum 0, 5, 10, 13, 20 | 24, 28
+    assert run(SA.budget_select, ["id", "c", "s"], 22.0) == [
+        (1, 5, 9, 0), (1, 5, 9, 5), (1, 7, 6, 13), (2, 3, 8, 10), (3, 4, 4, 20),
+    ]
+    # per group: a → cum 0, 5 | 10, 13; b → cum 0, 7 | 11
+    assert run(SA.budget_select_per_group, ["id", "g", "c", "s"], "g", 8.0) == [
+        (1, "a", 5, 9, 0), (1, "a", 5, 9, 5), (1, "b", 7, 6, 0), (3, "b", 4, 4, 7),
+    ]
+
+
 def test_budget_select_per_group_budgets_each_group(spark):
     df = spark.range(300).select(
         F.col("id"),

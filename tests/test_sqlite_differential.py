@@ -495,6 +495,38 @@ def test_sqlite_vs_engine(engines, sql):
     assert not (math.nan in got and math.nan not in expected)
 
 
+def test_json_tree_empty_key_divergence_pinned(engines):
+    """An object key "" in json_tree.  A scalar under it matches SQLite.
+    A container under it is a KNOWN DIVERGENCE of
+    ``_json_tree_lateral_views``: the text re-extraction at ``$.""``
+    fails, so the container row's value is NULL and its children are
+    missing.  Pinned against live SQLite, so a fix or a further drift
+    shows here."""
+    conn, store = engines
+    cols = "CAST(key AS TEXT) AS k, CAST(value AS TEXT) AS v, type, fullkey"
+
+    def both(doc):
+        sql = f"SELECT {cols} FROM json_tree('{doc}') ORDER BY fullkey"
+        got = [tuple(r.values()) for r in store.read("diffseg", sql)]
+        return conn.execute(sql).fetchall(), got
+
+    expected, got = both('{"":5,"b":2}')
+    assert got == expected
+    expected, got = both('{"":[1,2],"b":2}')
+    assert expected == [
+        (None, '{"":[1,2],"b":2}', "object", "$"),
+        ("", "[1,2]", "array", '$.""'),
+        ("0", "1", "integer", '$.""[0]'),
+        ("1", "2", "integer", '$.""[1]'),
+        ("b", "2", "integer", "$.b"),
+    ]
+    assert got == [
+        expected[0],
+        ("", None, "array", '$.""'),
+        expected[4],
+    ]
+
+
 def test_like_case_sensitivity_modes(engines):
     """LIKE parity: default LIKE folds case identically for ASCII (above);
     PRAGMA case_sensitive_like = ON turns folding OFF in both engines.

@@ -669,3 +669,195 @@ def test_segment_partition_is_single_file(store, tmp_path):
     assert len(_glob.glob(f"{part}/*.parquet")) == 1
     store.write("seg_sf", "UPDATE kv SET v = 'x' WHERE k < 10")
     assert len(_glob.glob(f"{part}/*.parquet")) == 1
+
+
+# -- per-segment view names (name binding + view LRU) ------------------------
+
+
+def _tree_segment(store, seg="seg_nb"):
+    store.set_schema(
+        "nb", "CREATE TABLE items (id INTEGER PRIMARY KEY, name TEXT, parent INTEGER);"
+    )
+    store.provision(seg, "nb")
+    store.write(
+        seg, "INSERT INTO items VALUES (1, 'root', NULL), (2, 'leaf', 1), (3, 'twig', 1)"
+    )
+
+
+def test_name_binding_qualified_aliases_self_join(store):
+    _tree_segment(store)
+
+    def q(sql):
+        return store.read("seg_nb", sql)
+
+    assert q("SELECT items.id FROM items WHERE items.name = 'leaf'") == [{"id": 2}]
+    assert q("SELECT i.name FROM items AS i WHERE i.id = 3") == [{"name": "twig"}]
+    assert q(
+        "SELECT c.name AS child, p.name AS parent FROM items c "
+        "JOIN items p ON c.parent = p.id ORDER BY c.id"
+    ) == [{"child": "leaf", "parent": "root"}, {"child": "twig", "parent": "root"}]
+    assert q(
+        "SELECT name FROM items WHERE id = (SELECT max(id) FROM items)"
+    ) == [{"name": "twig"}]
+
+
+def test_name_binding_quoted_and_mixed_case_names(store):
+    store.set_schema("mc", 'CREATE TABLE "MixedCase" (k INTEGER, v TEXT);')
+    store.provision("seg_mc", "mc")
+    store.write("seg_mc", "INSERT INTO \"MixedCase\" VALUES (1, 'a'), (2, 'b')")
+    for ref in ('"MixedCase"', "MixedCase", "mixedcase", "[MIXEDCASE]", "`mixedCase`"):
+        rows = store.read("seg_mc", f"SELECT {ref}.v FROM {ref} WHERE k = 2")
+        assert rows == [{"v": "b"}], ref
+
+
+def test_name_binding_user_ctes_named_like_tables(store):
+    """A user CTE named like a segment table shadows it, at the top level
+    and nested, as in SQLite; a statement that begins with WITH still sees
+    the segment's tables from its own CTEs."""
+    _tree_segment(store)
+
+    def q(sql):
+        return store.read("seg_nb", sql)
+
+    assert q("WITH items AS (SELECT 42 AS id) SELECT id FROM items") == [{"id": 42}]
+    assert q(
+        "SELECT count(*) AS n FROM items WHERE id IN "
+        "(WITH items AS (SELECT 2 AS id) SELECT id FROM items)"
+    ) == [{"n": 1}]
+    assert q(
+        "SELECT n FROM (WITH items AS (SELECT 7 AS n) SELECT n FROM items)"
+    ) == [{"n": 7}]
+    assert q(
+        "WITH kids AS (SELECT * FROM items WHERE parent = 1), "
+        "named AS (SELECT kids.name FROM kids JOIN items p ON kids.parent = p.id) "
+        "SELECT count(*) AS n FROM named"
+    ) == [{"n": 2}]
+    # the shadowing does not outlive the statement
+    assert q("SELECT count(*) AS n FROM items") == [{"n": 3}]
+
+
+def test_segment_view_reread_after_write(store):
+    _tree_segment(store)
+    store.write("seg_nb", "CREATE VIEW kids AS SELECT id, name FROM items WHERE parent = 1")
+    assert store.read("seg_nb", "SELECT count(*) AS n FROM kids") == [{"n": 2}]
+    before = store.view_stats()
+    assert store.read("seg_nb", "SELECT count(*) AS n FROM kids") == [{"n": 2}]
+    assert store.view_stats()["registrations"] == before["registrations"]
+    store.write("seg_nb", "INSERT INTO items VALUES (4, 'bud', 1)")
+    assert store.read(
+        "seg_nb", "SELECT k.name FROM kids k ORDER BY k.id"
+    ) == [{"name": "leaf"}, {"name": "twig"}, {"name": "bud"}]
+
+
+def test_name_binding_as_of_master_and_recursive_cte(store):
+    _tree_segment(store)
+    v1 = store.snapshot("seg_nb")
+    store.write("seg_nb", "DELETE FROM items WHERE id = 3")
+    sql = "SELECT id FROM items ORDER BY id"
+    assert [r["id"] for r in store.read("seg_nb", sql, as_of=v1)] == [1, 2, 3]
+    assert [r["id"] for r in store.read("seg_nb", sql)] == [1, 2]
+    assert [r["id"] for r in store.read("seg_nb", sql, as_of=v1)] == [1, 2, 3]
+    # sqlite_master is keyed by content: a second segment of the same
+    # schema reuses the first one's registration
+    _tree_segment(store, "seg_nb2")
+    master = "SELECT name, type FROM sqlite_master"
+    assert store.read("seg_nb", master) == [{"name": "items", "type": "table"}]
+    regs = store.view_stats()["registrations"]
+    assert store.read("seg_nb2", master) == [{"name": "items", "type": "table"}]
+    assert store.view_stats()["registrations"] == regs
+    # a recursive CTE named like a table: its step and outer SELECT read
+    # the frontier, its base may not name it (SQLite: circular reference)
+    rows = store.read(
+        "seg_nb",
+        "WITH RECURSIVE items(n) AS (SELECT 1 UNION ALL SELECT n + 1 FROM items "
+        "WHERE n < 4) SELECT sum(n) AS s FROM items",
+    )
+    assert rows == [{"s": 10}]
+    rows = store.read(
+        "seg_nb",
+        "WITH RECURSIVE up(id) AS (SELECT id FROM items WHERE id = 2 "
+        "UNION ALL SELECT i.parent FROM items i JOIN up ON i.id = up.id "
+        "WHERE i.parent IS NOT NULL) SELECT id FROM up ORDER BY id",
+    )
+    assert rows == [{"id": 1}, {"id": 2}]
+    with pytest.raises(Exception):
+        store.read(
+            "seg_nb",
+            "WITH RECURSIVE items(n) AS (SELECT max(id) FROM items UNION ALL "
+            "SELECT n + 1 FROM items WHERE n < 4) SELECT n FROM items",
+        )
+    assert store.read("seg_nb", "SELECT count(*) AS n FROM items") == [{"n": 2}]
+
+
+def test_fanout_read_does_not_leak_into_segment_reads(store):
+    store.set_schema("sa", "CREATE TABLE only_a (x INTEGER);")
+    store.provision("fan_a", "sa")
+    store.write("fan_a", "INSERT INTO only_a (x) VALUES (1)")
+    store.provision("fan_b", "default")
+    total = store.read_many_df("^fan_", "SELECT count(*) AS n FROM only_a").collect()
+    assert total[0]["n"] == 1
+    with pytest.raises(Exception):
+        store.read("fan_b", "SELECT * FROM only_a")
+    assert store.read("fan_a", "SELECT * FROM only_a") == [{"x": 1}]
+
+
+def test_internal_view_names_are_rejected(spark, store, tmp_path):
+    """A statement naming an internal view — this store's or another
+    store's on the same session — never reaches that view's data."""
+    _tree_segment(store)
+    store.provision("seg_other", "default")
+    store.read("seg_nb", "SELECT * FROM items")
+    other = SegmentStore(spark, str(tmp_path / "other"))
+    _tree_segment(other)
+    other.read("seg_nb", "SELECT * FROM items")
+    names = [t.name for t in spark.catalog.listTables() if t.name.startswith("__trough_view_")]
+    assert len(names) >= 2
+    for name in names:
+        for ref in (name, f'"{name}"', name.upper()):
+            with pytest.raises(QueryRejected):
+                store.read("seg_other", f"SELECT * FROM {ref}")
+        with pytest.raises(QueryRejected):
+            store.read_many_df("^seg_", f"SELECT * FROM {name}")
+
+
+def _bulk_segments(spark, store, n, rows_per=3):
+    import pyspark.sql.functions as F
+
+    df = spark.range(n * rows_per).select(
+        F.col("id").alias("k"),
+        (F.col("id") * 10).alias("v"),
+        F.format_string("lru%03d", F.col("id") % n).alias("seg"),
+    )
+    return store.bulk_load("kv", df, "seg")
+
+
+def test_view_lru_evicts_and_rereads_correctly(spark, store):
+    """More segments than the LRU holds: every read stays correct after its
+    segment's view was evicted, and the cache never holds more than its
+    capacity once a statement is analysed."""
+    store._view_capacity = 4
+    segs = _bulk_segments(spark, store, 6)
+    for _ in range(2):
+        for i, seg in enumerate(segs):
+            rows = store.read(seg, "SELECT k, v FROM kv ORDER BY k")
+            assert rows == [{"k": k, "v": 10 * k} for k in (i, i + 6, i + 12)]
+            assert store.view_stats()["cached"] <= 4
+    stats = store.view_stats()
+    assert stats["evictions"] == stats["registrations"] - stats["cached"] > 0
+
+
+def test_view_cache_holds_64_segments(spark, store):
+    """The point_read shape: 64 segments with one table name.  The first
+    pass registers one view per segment; the second registers none."""
+    segs = _bulk_segments(spark, store, 64, rows_per=1)
+    sql = "SELECT v FROM kv WHERE k = %s"
+    for i, seg in enumerate(segs):
+        assert store.read(seg, sql, (i,)) == [{"v": 10 * i}]
+    first = store.view_stats()
+    assert first["registrations"] == 64
+    for i, seg in enumerate(segs):
+        assert store.read(seg, sql, (i,)) == [{"v": 10 * i}]
+    second = store.view_stats()
+    assert second["registrations"] == first["registrations"]
+    assert second["hits"] - first["hits"] == 64
+    assert second["evictions"] == 0

@@ -248,6 +248,92 @@ def assert_write_allowed(script: str) -> list[str]:
 
 
 # ---------------------------------------------------------------------------
+# name binding: a statement's table names as WITH definitions
+# ---------------------------------------------------------------------------
+
+_IDENT_KINDS = ("word", "bquote", "dquote", "bracket")
+
+
+def _top_level_cte_names(tokens: list[Token], sig: list[int]) -> set[str]:
+    """Lowercased names the statement's own leading WITH list defines."""
+    if not sig or tokens[sig[0]].text.upper() != "WITH":
+        return set()
+    names: set[str] = set()
+    n = 1
+    if n < len(sig) and tokens[sig[n]].text.upper() == "RECURSIVE":
+        n += 1
+    while n < len(sig) and tokens[sig[n]].kind in _IDENT_KINDS:
+        names.add(_strip_ident(tokens[sig[n]].text).lower())
+        n += 1
+        if n < len(sig) and tokens[sig[n]].text == "(":  # column list
+            n = (_balanced_close(tokens, sig, n) or len(sig)) + 1
+        # AS [NOT] [MATERIALIZED] ( body )
+        while n < len(sig) and tokens[sig[n]].text != "(":
+            n += 1
+        n = (_balanced_close(tokens, sig, n) or len(sig)) + 1
+        if n >= len(sig) or tokens[sig[n]].text != ",":
+            break
+        n += 1
+    return names
+
+
+def bindable_names(sql: str) -> list[str]:
+    """Every word and quoted identifier of a Spark SQL statement,
+    lowercased and unquoted, in first-seen order, except the names the
+    statement's own top-level WITH list defines."""
+    tokens = tokenize(sql)
+    sig = _significant(tokens)
+    own = _top_level_cte_names(tokens, sig)
+    out: dict[str, None] = {}
+    for i in sig:
+        t = tokens[i]
+        if t.kind in _IDENT_KINDS:
+            name = _strip_ident(t.text).lower()
+            if name not in own:
+                out.setdefault(name, None)
+    return list(out)
+
+
+_LEADING_WITH_RE = re.compile(
+    r"(?:\s+|--[^\n]*|/\*.*?\*/)*WITH(?:\s+RECURSIVE)?\b", re.I | re.S
+)
+
+
+def _prepend_ctes(sql: str, defs: list[tuple[str, str]]) -> str:
+    """``name AS (body)`` definitions ahead of the statement: merged into
+    the front of its own WITH list when it has one (its definitions may
+    then read ours), else as a new WITH clause."""
+    if not defs:
+        return sql
+    head = ", ".join(f"`{n.replace('`', '``')}` AS ({body})" for n, body in defs)
+    m = _LEADING_WITH_RE.match(sql)
+    if m:
+        return f"{sql[: m.end()]} {head},{sql[m.end():]}"
+    return f"WITH {head} {sql}"
+
+
+def bind_names(sql: str, resolve, reserved: str) -> str:
+    """Bind a Spark SQL statement's table names to views: every word or
+    quoted identifier that ``resolve`` maps to a view name gets a
+    ``WITH name AS (SELECT * FROM view)`` definition ahead of the
+    statement.  Qualified columns, aliases, self-joins and subqueries keep
+    working with no respelling, and Spark inlines the definitions, so the
+    executed plan is unchanged.  A name the statement's own top-level WITH
+    defines is left to it: a user CTE shadows a table of the same name in
+    SQLite and in Spark alike, and a nested one shadows ours.  Keywords are
+    looked up too and simply miss.  A name starting with ``reserved`` (the
+    internal views' prefix) is rejected."""
+    defs = []
+    for name in bindable_names(sql):
+        if name.startswith(reserved):
+            raise QueryRejected(f"no such table: {name}")
+        view = resolve(name)
+        if view is not None:
+            defs.append((name, f"SELECT * FROM `{view}`"))
+    return _prepend_ctes(sql, defs)
+
+
+# ---------------------------------------------------------------------------
 # GLOB → regex
 # ---------------------------------------------------------------------------
 

@@ -654,8 +654,10 @@ def budget_select(
        its slice offset — an exact global prefix-sum with every sort
        bounded to corpus/n_ranges.
 
-    Ties across the whole frame are totally ordered by (score, key), so
-    ``key`` must be unique (it is also the join-back key below).  Costs
+    Ties across the whole frame are totally ordered by (score, key) when
+    ``key`` is unique.  Rows sharing a key and a score take an arbitrary
+    order among themselves; each input row still yields at most one
+    output row, on both the slim and the join-back path.  Costs
     are summed as the column's own type — pass an integer cost column
     (token counts) for an exact BIGINT prefix-sum (the
     float-associativity trap never arises).
@@ -705,15 +707,11 @@ def budget_select(
         .orderBy(F.desc("_bs_score"), F.col(key_name).asc())
         .rowsBetween(W.unboundedPreceding, -1)
     )
-    kept_full = (
-        ranged.join(F.broadcast(offsets), "_bs_pid")
-        .withColumn(
-            cum_col,
-            F.col("_bs_off")
-            + F.coalesce(F.sum("_bs_cost").over(in_w), F.lit(0)),
-        )
-        .where(F.col(cum_col) < F.lit(budget))
+    summed = ranged.join(F.broadcast(offsets), "_bs_pid").withColumn(
+        cum_col,
+        F.col("_bs_off") + F.coalesce(F.sum("_bs_cost").over(in_w), F.lit(0)),
     )
+    kept_full = summed.where(F.col(cum_col) < F.lit(budget))
     if df.columns == [key_name]:
         return kept_full.select(key_name, cum_col)  # nothing to reattach
     if (
@@ -732,9 +730,39 @@ def budget_select(
         return kept_full.select(
             *[F.col(colmap[c]).alias(c) for c in df.columns], cum_col
         )
-    kept = kept_full.select(key_name, cum_col)
-    out = base.join(kept, on=key_name, how="inner")
-    return out.select(*df.columns, cum_col)
+    return _budget_join_back(
+        base, summed, key_name, [], costc, scorec, cum_col, budget, df.columns
+    )
+
+
+def _budget_join_back(
+    base, summed, key_name, lead, costc, scorec, cum_col, budget, out_cols
+) -> DataFrame:
+    """Reattach the caller's columns to the kept rows by ``key_name``.  A
+    key may repeat: its rows are numbered in (``lead``, cost, score) order
+    on both sides and paired by number, so each input row yields at most
+    one output row carrying its own running total, as the slim path gives
+    (joining on the key alone would give k² rows for a key seen k times).
+    Rows alike in those columns are interchangeable; among them the
+    numbering follows the running total.  The window partitions by the
+    join key, so the join reuses its exchange."""
+    order = [F.col(c) for c in lead]
+    w = W.partitionBy(key_name)
+    kept = (
+        summed.withColumn(
+            "_bs_krn",
+            F.row_number().over(
+                w.orderBy(*order, "_bs_cost", "_bs_score", cum_col)
+            ),
+        )
+        .where(F.col(cum_col) < F.lit(budget))
+        .select(key_name, "_bs_krn", cum_col)
+    )
+    body = base.withColumn(
+        "_bs_rn", F.row_number().over(w.orderBy(*order, costc, scorec))
+    )
+    out = body.join(kept, on=key_name).where(F.col("_bs_rn") == F.col("_bs_krn"))
+    return out.select(*out_cols, cum_col)
 
 
 def budget_select_per_group(
@@ -772,9 +800,10 @@ def budget_select_per_group(
         .orderBy(F.desc("_bs_score"), F.col(key_name).asc())
         .rowsBetween(W.unboundedPreceding, -1)
     )
-    kept_full = proj.withColumn(
+    summed = proj.withColumn(
         cum_col, F.coalesce(F.sum("_bs_cost").over(w), F.lit(0))
-    ).where(F.col(cum_col) < F.lit(budget))
+    )
+    kept_full = summed.where(F.col(cum_col) < F.lit(budget))
     if (
         isinstance(cost, str)
         and isinstance(score, str)
@@ -792,9 +821,10 @@ def budget_select_per_group(
         return kept_full.select(
             *[F.col(colmap[c]).alias(c) for c in df.columns], cum_col
         )
-    kept = kept_full.select(key_name, cum_col)
-    out = base.join(kept, on=key_name, how="inner")
-    return out.select(*df.columns, cum_col)
+    return _budget_join_back(
+        base, summed, key_name, [group_col], costc, scorec, cum_col, budget,
+        df.columns,
+    )
 
 
 def interleave_order(

@@ -36,11 +36,12 @@ import itertools
 import json
 import os
 import re
+import secrets
 import shutil
 import socket
 import time
+from collections import OrderedDict
 from dataclasses import dataclass, field
-from weakref import WeakKeyDictionary
 
 import pyarrow as pa
 import pyspark.sql.functions as F
@@ -52,8 +53,9 @@ from pyspark.sql.types import _create_converter, _make_type_verifier
 from trough_spark import dialect
 from trough_spark.dialect import QueryRejected
 
-# per-SparkSession temp-view registration cache (see SegmentStore.__init__)
-_SESSION_VIEW_CACHE: "WeakKeyDictionary" = WeakKeyDictionary()
+# every temp view a store registers is named ``<prefix><store token>_<n>``;
+# a statement naming one directly is rejected (dialect.bind_names)
+_VIEW_PREFIX = "__trough_view_"
 
 # ---------------------------------------------------------------------------
 # SQLite DDL → Spark schema (type affinity, reference model SURVEY §1.2)
@@ -1745,22 +1747,19 @@ class SegmentStore:
         os.makedirs(f"{self.root}/tables", exist_ok=True)
         self._registry_path = f"{self.root}/_meta.json"
         self._meta = self._load_meta()
-        # temp-view names this store registered in the session catalog; stale
-        # entries are dropped before each read so one segment's tables/views
-        # can never resolve inside another segment's query
-        self._registered_names: set[str] = set()
-        # point-read view cache (VERDICT r7 item 6): temp-view name ->
-        # registration key; a view is re-registered only when its key
-        # (store root + data-file fingerprint + declared schema, or view
-        # SQL + its tables' keys) changes, cutting the per-read Catalyst
-        # re-analysis that bounds point-read p50.  Keys embed an os.stat
-        # fingerprint of the data directory, so writes from ANY process
-        # invalidate.  The cache is SHARED per SparkSession (temp views
-        # are session-global): two stores on one session would otherwise
-        # silently serve each other's same-named registrations.
-        self._view_cache: dict[str, tuple] = _SESSION_VIEW_CACHE.setdefault(
-            self.spark, {}
-        )
+        # point-read view cache: each segment table, segment view and
+        # sqlite_master content is a temp view under its own internal name,
+        # bound into each statement by a WITH prefix, so segments never
+        # share or replace each other's registrations.  slot -> (key, view
+        # name), least recently used first; a table's key embeds an os.stat
+        # fingerprint of its data directory, so writes from ANY process
+        # invalidate, and the superseded view is dropped at once.
+        self._views: OrderedDict[tuple, tuple] = OrderedDict()
+        self._view_capacity = 256  # point_read's 64 segments, and room
+        token = secrets.token_hex(8)
+        self._view_names = (f"{_VIEW_PREFIX}{token}_{n}" for n in itertools.count())
+        self._frontier_view = next(self._view_names)  # WITH RECURSIVE
+        self._view_counts = {"registrations": 0, "hits": 0, "evictions": 0}
         # per-(segment, table) auto-increment high-water marks, lazily
         # initialized from storage (segments are small by design)
         self._hwm: dict[tuple[str, str], int] = {}
@@ -3613,9 +3612,9 @@ class SegmentStore:
             # would drop them, found by the write-path fuzzer)
             if has_subquery:
                 # a WHERE subquery reads OTHER tables of the segment: route
-                # the survivor scan through the read path (all segment
-                # tables registered; the subquery sees pre-delete state
-                # like SQLite); type-clean 3VL via CASE
+                # the survivor scan through the read path (every segment
+                # name bound; the subquery sees pre-delete state like
+                # SQLite); type-clean 3VL via CASE
                 types = {n.lower(): t for n, t in
                          self._table_schema(segment_id, table).fields}
                 out = self.read_df(
@@ -3689,8 +3688,8 @@ class SegmentStore:
                 )
             elif has_subquery:
                 # SET/WHERE subqueries read OTHER tables of the segment —
-                # evaluate the whole post-image through the read path (all
-                # segment tables registered), SQLite-dialect in, one scan
+                # evaluate the whole post-image through the read path (every
+                # segment name bound), SQLite-dialect in, one scan
                 # out; subqueries see pre-update state like SQLite (pending
                 # rows were flushed by the caller)
                 w = where_text
@@ -4211,9 +4210,8 @@ class SegmentStore:
     ):
         """(value, state_read) — see _eval_scalar."""
         if segment_id is not None and re.search(r"\bSELECT\b", expr, re.IGNORECASE):
-            # a subquery MUST resolve against current segment state: the
-            # zero-table fold would silently read whatever (stale) temp
-            # views an earlier read left registered in the session
+            # a subquery MUST resolve against current segment state, which
+            # only the read path binds; the zero-table fold sees no tables
             if pending:
                 self._flush_inserts(segment_id, pending)
             try:
@@ -4226,12 +4224,8 @@ class SegmentStore:
             # view — a constant subquery like (SELECT 1+2) is position-
             # independent and must not trip the multi-row-VALUES reject
             info = self._segment_info(segment_id)
-            names = set(self._segment_tables(segment_id)) | set(info.get("views", {}))
-            touches = any(
-                re.search(rf"\b{re.escape(n)}\b", expr, re.IGNORECASE)
-                for n in names
-            )
-            return rows[0]["_v"], touches
+            names = {n.lower() for n in [*self._segment_tables(segment_id), *info.get("views", {})]}
+            return rows[0]["_v"], not names.isdisjoint(dialect.bindable_names(expr))
         sql = dialect.sqlite_to_spark(expr)
         try:
             return self.spark.sql(f"SELECT ({sql})").collect()[0][0], False
@@ -5766,11 +5760,7 @@ class SegmentStore:
         pk = the column's 1-based position in the PRIMARY KEY.  An unknown
         table yields zero rows, exactly like SQLite.  Driver-local, no
         scan — catalog introspection must not launch a job."""
-        if as_of is None:
-            info = self._segment_info(segment_id)
-        else:
-            _dest, manifest = self._snapshot_manifest(segment_id, as_of)
-            info = manifest["segment"]
+        info, _data_dir = self._info_as_of(segment_id, as_of)
         if table in info.get("views", {}):
             # SQLite answers with the view's inferred column decltypes,
             # which would require full select-list type derivation here —
@@ -5818,11 +5808,7 @@ class SegmentStore:
         id 0), `to` NULL when the target columns were omitted, actions
         defaulting to 'NO ACTION', match always 'NONE'.  Introspection
         only — enforcement stays off like the reference's connections."""
-        if as_of is None:
-            info = self._segment_info(segment_id)
-        else:
-            _dest, manifest = self._snapshot_manifest(segment_id, as_of)
-            info = manifest["segment"]
+        info, _data_dir = self._info_as_of(segment_id, as_of)
         try:
             ts = self._table_schema_from_info(info, table, segment_id)
         except KeyError:
@@ -5913,76 +5899,7 @@ class SegmentStore:
                 return self._pragma_table_info(segment_id, name, as_of)
             return self._pragma_foreign_key_list(segment_id, name, as_of)
         stmt = dialect.assert_single_select(sql)
-        if as_of is None:
-            info = self._segment_info(segment_id)
-            tables = self._segment_tables(segment_id)
-
-            def read_tbl(t: str) -> DataFrame:
-                return self._collated(
-                    self._read_partition(segment_id, t),
-                    self._table_schema(segment_id, t),
-                )
-
-        else:
-            dest, manifest = self._snapshot_manifest(segment_id, as_of)
-            info = manifest["segment"]
-            tables = sorted(set(info.get("tables", [])) | set(info.get("extra_tables", {})))
-
-            def read_tbl(t: str) -> DataFrame:
-                ts = self._table_schema_from_info(info, t, segment_id)
-                path = f"{dest}/data/{t}"
-                if not os.path.isdir(path):
-                    return self._collated(
-                        _local_frame(self.spark, [], ts.struct()), ts
-                    )
-                return self._collated(
-                    self.spark.read.schema(ts.struct()).parquet(path), ts
-                )
-
-        # sqlite_master is always re-registered below (content-keyed), so
-        # sweeping it here would drop + rebuild the catalog DataFrame on
-        # EVERY read — that churn was most of the measured point-read floor
-        current = set(tables) | set(info.get("views", {})) | {"sqlite_master"}
-        for stale in self._registered_names - current:
-            self.spark.catalog.dropTempView(stale)
-            self._view_cache.pop(stale, None)
-        self._registered_names -= self._registered_names - current
-        table_keys: dict[str, tuple] = {}
-        tables_changed = False
-        for table in tables:
-            if as_of is None:
-                ts = self._table_schema(segment_id, table)
-                key = (
-                    "tbl",
-                    self.root,
-                    segment_id,
-                    self._dir_fingerprint(self._partition_path(table, segment_id)),
-                    tuple((n, t.simpleString()) for n, t in ts.fields),
-                    tuple(sorted(ts.collations.items())),
-                )
-            else:
-                key = ("asof", object())  # snapshots: never cache-hit
-            table_keys[table] = key
-            if self._view_cache.get(table) == key:
-                self._registered_names.add(table)
-                continue
-            read_tbl(table).createOrReplaceTempView(table)
-            self._view_cache[table] = key
-            self._registered_names.add(table)
-            tables_changed = True
-        for vname, vsql in info.get("views", {}).items():
-            # a view's temp-view plan captures its tables' CURRENT plans at
-            # creation, so it must re-register whenever any table view did
-            key = ("view", segment_id, vsql, tuple(sorted(table_keys.items())))
-            if not tables_changed and self._view_cache.get(vname) == key:
-                self._registered_names.add(vname)
-                continue
-            self.spark.sql(dialect.sqlite_to_spark(vsql)).createOrReplaceTempView(vname)
-            self._view_cache[vname] = key
-            self._registered_names.add(vname)
-        self._register_sqlite_master(
-            info, tables, lambda t: self._table_schema_from_info(info, t, segment_id)
-        )
+        resolve = self._segment_resolver(segment_id, as_of)
         # last_insert_rowid() is connection state, not SQL — substitute the
         # segment's last assigned autoincrement id (0 before any insert,
         # matching a fresh sqlite3 connection); literal-aware so quoted
@@ -5990,61 +5907,142 @@ class SegmentStore:
         stmt = _sub_last_insert_rowid(stmt, self._last_auto.get(segment_id, 0))
         rec = _parse_recursive_cte(stmt)
         if rec is not None:
-            return self._execute_recursive(rec)
-        return self.spark.sql(dialect.sqlite_to_spark(stmt))
+            return self._execute_recursive(rec, resolve)
+        return self._sql(dialect.sqlite_to_spark(stmt), resolve)
 
-    def _register_sqlite_master(self, info: dict, tables: list[str], schema_of) -> None:
+    # -- temp views: internal names, one LRU per store ----------------------
+
+    def view_stats(self) -> dict[str, int]:
+        """Temp-view counters: ``registrations`` made, cache ``hits``,
+        ``evictions`` (least recently used, or superseded by a write) and
+        the registrations ``cached`` now."""
+        return {**self._view_counts, "cached": len(self._views)}
+
+    def _register_view(self, df: DataFrame, name: str | None = None) -> str:
+        name = name or next(self._view_names)
+        df.createOrReplaceTempView(name)
+        self._view_counts["registrations"] += 1
+        return name
+
+    def _cached_view(self, slot: tuple, key, build) -> str:
+        """The view registered for ``slot`` under ``key``; on a miss,
+        ``build()`` is registered and the slot's superseded view dropped."""
+        old = self._views.pop(slot, None)
+        if old is not None and old[0] == key:
+            self._view_counts["hits"] += 1
+        else:
+            if old is not None:
+                self.spark.catalog.dropTempView(old[1])
+                self._view_counts["evictions"] += 1
+            old = (key, self._register_view(build()))
+        self._views[slot] = old
+        return old[1]
+
+    def _sql(self, sql: str, resolve) -> DataFrame:
+        """Analyse a Spark SQL statement with its names bound to internal
+        views by ``resolve``, then trim the LRU.  An analysed plan holds
+        its views' plans, so later drops never break the returned frame."""
+        try:
+            return self.spark.sql(dialect.bind_names(sql, resolve, _VIEW_PREFIX))
+        finally:
+            while len(self._views) > self._view_capacity:
+                self.spark.catalog.dropTempView(self._views.popitem(last=False)[1][1])
+                self._view_counts["evictions"] += 1
+
+    def _info_as_of(self, segment_id: str, as_of: str | None):
+        """(segment info, table -> data directory), live or as of a
+        snapshot."""
+        if as_of is None:
+            info = self._segment_info(segment_id)
+            return info, lambda t: self._partition_path(t, segment_id)
+        dest, manifest = self._snapshot_manifest(segment_id, as_of)
+        return manifest["segment"], lambda t: f"{dest}/data/{t}"
+
+    def _segment_resolver(self, segment_id: str, as_of: str | None):
+        """name (lowercased) -> internal view of the segment's table, view or
+        ``sqlite_master``, registered on first use.  A table's key is its
+        data directory's stat fingerprint, declared schema and collations;
+        a view's is its bound body, which names its tables' current views."""
+        info, data_dir = self._info_as_of(segment_id, as_of)
+        tables = sorted(set(info.get("tables", [])) | set(info.get("extra_tables", {})))
+        by_name = {t.lower(): t for t in tables}
+        views = {v.lower(): vsql for v, vsql in info.get("views", {}).items()}
+
+        def schema_of(t: str) -> TableSchema:
+            return self._table_schema_from_info(info, t, segment_id)
+
+        def table_view(t: str) -> str:
+            ts, path = schema_of(t), data_dir(t)
+            key = (
+                self._dir_fingerprint(path),
+                tuple((n, typ.simpleString()) for n, typ in ts.fields),
+                tuple(sorted(ts.collations.items())),
+            )
+            return self._cached_view(("tbl", path), key, lambda: self._collated(
+                self._read_files(path, ts.struct())
+                if os.path.isdir(path)
+                else _local_frame(self.spark, [], ts.struct()),
+                ts,
+            ))
+
+        def resolve(name: str, outer: frozenset = frozenset()) -> str | None:
+            if name in by_name:
+                return table_view(by_name[name])
+            if name in views and name not in outer:
+                body = dialect.bind_names(
+                    dialect.sqlite_to_spark(views[name]),
+                    lambda n: resolve(n, outer | {name}),
+                    _VIEW_PREFIX,
+                )
+                slot = ("view", segment_id, as_of, name)
+                return self._cached_view(slot, body, lambda: self.spark.sql(body))
+            if name == "sqlite_master":
+                return self._master_view(info, tables, schema_of)
+            return None
+
+        return resolve
+
+    def _master_view(self, info: dict, tables: list[str], schema_of) -> str:
         """Synthetic ``sqlite_master`` per segment: the reference's shell
         rewrites SHOW TABLES to sqlite_master queries
         (shell/__init__.py:149-155) and applications query it directly, so
         the catalog is exposed with the same shape (type, name, tbl_name,
-        rootpage, sql).  Takes the segment info dict + table list directly
-        so time-travel reads can surface the catalog as of a snapshot."""
+        rootpage, sql).  Content-keyed: segments with one schema share one
+        registration."""
         rows = []
-        for table in tables:
-            ts = schema_of(table)
-            cols = ", ".join(f"{n} {_sqlite_decl(t)}" for n, t in ts.fields)
-            rows.append(
-                Row(
-                    type="table",
-                    name=table,
-                    tbl_name=table,
-                    rootpage=0,
-                    sql=f"CREATE TABLE {table} ({cols})",
-                )
-            )
-        for vname, vsql in info.get("views", {}).items():
-            rows.append(
-                Row(
-                    type="view", name=vname, tbl_name=vname, rootpage=0,
-                    sql=f"CREATE VIEW {vname} AS {vsql}",
-                )
-            )
+        for t in tables:
+            cols = ", ".join(f"{n} {_sqlite_decl(ty)}" for n, ty in schema_of(t).fields)
+            rows.append(("table", t, t, 0, f"CREATE TABLE {t} ({cols})"))
+        for v, vsql in info.get("views", {}).items():
+            rows.append(("view", v, v, 0, f"CREATE VIEW {v} AS {vsql}"))
         schema = "type string, name string, tbl_name string, rootpage bigint, sql string"
-        key = ("master", tuple(tuple(r) for r in rows))
-        if self._view_cache.get("sqlite_master") != key:
-            # content-keyed: rebuilding this catalog DataFrame per read was
-            # part of the measured point-read floor (PERF.md)
-            _local_frame(self.spark, rows, schema).createOrReplaceTempView(
-                "sqlite_master"
-            )
-            self._view_cache["sqlite_master"] = key
-        self._registered_names.add("sqlite_master")
+        key = ("master", tuple(rows))
+        return self._cached_view(key, None, lambda: _local_frame(self.spark, rows, schema))
 
-    def _execute_recursive(self, rec: "RecursiveCTE") -> DataFrame:
+    def _execute_recursive(self, rec: "RecursiveCTE", resolve) -> DataFrame:
         """WITH RECURSIVE via driver-side fixpoint iteration (SURVEY §2.B11:
         Spark SQL has no recursive CTE; the plan is an iterated union).
         Each step is one small Spark job over the frontier; depth is bounded.
         Scale note: recursion depth — not data size — bounds the loop; each
-        iteration's frontier is distributed as usual."""
-        base = self.spark.sql(dialect.sqlite_to_spark(rec.base_sql))
+        iteration's frontier is distributed as usual.  The frontier, then
+        the result, is the store's one frontier view, which the step and
+        outer SELECT bind the CTE's name to; the base may not name it
+        (SQLite: "circular reference")."""
+        cte, view = rec.name.lower(), None
+
+        def bound(n: str) -> str | None:
+            return view if n == cte else resolve(n)
+
+        base = self._sql(dialect.sqlite_to_spark(rec.base_sql), bound)
         if rec.cols:
             base = base.toDF(*rec.cols)
         acc = base.distinct() if not rec.union_all else base
         frontier = acc
+        step_sql = dialect.sqlite_to_spark(rec.step_sql)
+        view = self._frontier_view
         for _ in range(rec.max_iterations):
-            frontier.createOrReplaceTempView(rec.name)
-            step = self.spark.sql(dialect.sqlite_to_spark(rec.step_sql))
+            self._register_view(frontier, view)
+            step = self._sql(step_sql, bound)
             if rec.cols:
                 step = step.toDF(*rec.cols)
             if rec.union_all:
@@ -6062,12 +6060,8 @@ class SegmentStore:
             raise QueryRejected(
                 f"recursive CTE exceeded {rec.max_iterations} iterations"
             )
-        acc.createOrReplaceTempView(rec.name)
-        self._registered_names.add(rec.name)  # swept by the next read_df
-        # the CTE name may shadow a cached table/view registration — drop
-        # the cache entry so the next read re-registers the real one
-        self._view_cache.pop(rec.name, None)
-        return self.spark.sql(dialect.sqlite_to_spark(rec.outer_sql))
+        self._register_view(acc, view)
+        return self._sql(dialect.sqlite_to_spark(rec.outer_sql), bound)
 
     def read(self, segment_id: str, sql: str, values=(), as_of: str | None = None) -> list[dict]:
         """A2: rows as a JSON-ready list of {column: value} dicts
@@ -6135,22 +6129,27 @@ class SegmentStore:
         segs = self.segments_matching(segment_regex)
         if not segs:
             raise KeyError(f"no segments match {segment_regex!r}")
-        tables = set()
-        for seg in segs:
-            tables.update(self._segment_tables(seg))
-        for table in tables:
-            with_table = [s for s in segs if table in self._segment_tables(s)]
-            df = self.table_df(table, reference_segment=with_table[0])
+        # each table's schema comes from the first matching segment with it
+        first = {t.lower(): (t, s) for s in reversed(segs) for t in self._segment_tables(s)}
+        fanout: list[str] = []
+
+        def resolve(name: str) -> str | None:
+            if name not in first:
+                return None
+            table, ref = first[name]
             # rlike has re.search semantics, matching A13 (client.py:181)
-            df.filter(F.col("segment_id").rlike(segment_regex)).createOrReplaceTempView(table)
-            # track for read_df's stale-view sweep — otherwise a later
-            # single-segment read can silently resolve these cross-segment
-            # views and leak rows across the per-segment isolation boundary
-            self._registered_names.add(table)
-            # and invalidate the point-read view cache: this registration
-            # SHADOWS any cached single-segment view of the same name
-            self._view_cache.pop(table, None)
-        return self.spark.sql(spark_sql)
+            df = self.table_df(table, reference_segment=ref).filter(
+                F.col("segment_id").rlike(segment_regex)
+            )
+            fanout.append(self._register_view(df))
+            return fanout[-1]
+
+        try:
+            return self._sql(spark_sql, resolve)
+        finally:
+            # one-off views: the analysed frame keeps their plans
+            for name in fanout:
+                self.spark.catalog.dropTempView(name)
 
     def append_dataframe(
         self, table: str, df: DataFrame, segment_col: str = "segment_id"
