@@ -4,25 +4,36 @@ import os
 import sys
 
 import pytest
+from pyspark.sql import DataFrameReader, DataFrameWriter
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-# delta-spark cannot be vendored in this sandbox (no network, no Delta JVM
-# jars anywhere on the image) — make the pure-Python protocol double
-# importable as `delta` so the engine's storage_format='delta' branches
-# execute in the suite (tests/delta_double/delta/__init__.py documents the
-# subset + deviations).  Real delta-spark, when installed, wins by order.
-import importlib.util  # noqa: E402
-
-if importlib.util.find_spec("delta") is None:
-    sys.path.append(
-        os.path.join(os.path.dirname(os.path.abspath(__file__)), "delta_double")
-    )
 
 from trough_spark.session import get_spark  # noqa: E402
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = os.environ.get("TROUGH_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+
+# PySpark's own reader/writer entry points, taken before any test module is
+# collected: the suite must test the program on the PySpark it ships with
+_STOCK_READWRITER = {
+    (cls, name): cls.__dict__[name]
+    for cls, names in ((DataFrameWriter, ("save", "mode")), (DataFrameReader, ("load",)))
+    for name in names
+}
+
+
+@pytest.fixture(scope="session", autouse=True)
+def stock_pyspark():
+    """Fail the session if anything replaced a PySpark reader/writer method
+    and left it replaced (a test double that patches PySpark globally)."""
+    yield
+    patched = [
+        f"{cls.__name__}.{name}"
+        for (cls, name), fn in _STOCK_READWRITER.items()
+        if cls.__dict__.get(name) is not fn or fn.__module__ != "pyspark.sql.readwriter"
+    ]
+    assert not patched, f"PySpark patched for the rest of the session: {patched}"
 
 
 @pytest.fixture(scope="session")

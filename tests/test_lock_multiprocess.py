@@ -119,9 +119,8 @@ def test_maintenance_races_writer_cross_process(spark, tmp_path):
     This is the plain-Parquet atomicity boundary: mutual exclusion comes
     from the O_EXCL lockfile (one writer OR one maintenance job per
     segment), and in-flight readers of a partition being rewritten see the
-    old files until the staged-rename swap — the window a table format with
-    a transaction log (Delta/Iceberg) would close with snapshot isolation
-    (COVERAGE.md, snapshots row)."""
+    old files until the staged-rename swap — the window that versioned
+    segment commits (ROADMAP direction 3) are to close."""
     from trough_spark.store import SegmentStore, WriteLockError
 
     root = str(tmp_path / "store")

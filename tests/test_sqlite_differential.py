@@ -527,6 +527,39 @@ def test_json_tree_empty_key_divergence_pinned(engines):
     ]
 
 
+TREE_DDL = "CREATE TABLE nodes (id INTEGER PRIMARY KEY, name TEXT, parent INTEGER)"
+TREE_ROWS = "(1, 'root', NULL), (2, 'a', 1), (3, 'b', 1), (4, 'a1', 2), (5, 'a1x', 4)"
+
+
+@pytest.mark.parametrize(
+    "sql",
+    [
+        # ancestors with their depth: two columns in base and step
+        "WITH RECURSIVE up(id, depth) AS (SELECT id, 0 FROM nodes WHERE id = 5 "
+        "UNION ALL SELECT n.parent, up.depth + 1 FROM nodes n JOIN up ON n.id = up.id "
+        "WHERE n.parent IS NOT NULL) SELECT id, depth FROM up ORDER BY depth",
+        # descendants with a path string, UNION (distinct) termination
+        "WITH RECURSIVE down(id, path) AS (SELECT id, name FROM nodes WHERE id = 1 "
+        "UNION SELECT n.id, down.path || '/' || n.name FROM nodes n "
+        "JOIN down ON n.parent = down.id) SELECT id, path FROM down ORDER BY id",
+        # a function call with arguments in the step's select list
+        "WITH RECURSIVE c(x, y) AS (SELECT 1, 1 UNION ALL "
+        "SELECT x + 1, max(y * 2, x) FROM c WHERE x < 5) SELECT x, y FROM c ORDER BY x",
+    ],
+)
+def test_recursive_cte_multi_column_matches_sqlite(spark, tmp_path, sql):
+    conn = sqlite3.connect(":memory:")
+    conn.execute(TREE_DDL)
+    conn.execute(f"INSERT INTO nodes VALUES {TREE_ROWS}")
+    store = SegmentStore(spark, str(tmp_path / "store"))
+    store.set_schema("tree", TREE_DDL + ";")
+    store.provision("treeseg", "tree")
+    store.write("treeseg", f"INSERT INTO nodes VALUES {TREE_ROWS}")
+    expected = conn.execute(sql).fetchall()
+    assert expected
+    assert [tuple(r.values()) for r in store.read("treeseg", sql)] == expected
+
+
 def test_like_case_sensitivity_modes(engines):
     """LIKE parity: default LIKE folds case identically for ASCII (above);
     PRAGMA case_sensitive_like = ON turns folding OFF in both engines.

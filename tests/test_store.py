@@ -3,6 +3,8 @@ re-asserted against the Spark-native store (SURVEY §5, FIXTURES.md F1-F3, F6)."
 
 from __future__ import annotations
 
+import gc
+
 import pytest
 
 from trough_spark.dialect import QueryRejected
@@ -540,10 +542,40 @@ def test_midscript_io_failure_rolls_back(store, monkeypatch):
     assert len(store.read("seg_io", "SELECT * FROM a")) == 2
 
 
+def test_write_path_contract(store):
+    """INSERT, UPDATE + DELETE rewrites, INSERT OR REPLACE on the declared
+    pk, and a mid-script failure that rolls the whole script back."""
+    store.set_schema(
+        "kv_schema",
+        "CREATE TABLE kv (k INTEGER PRIMARY KEY, v TEXT);\n"
+        "CREATE TABLE log (k INTEGER, note TEXT);\n",
+    )
+    store.provision("seg1", "kv_schema")
+    store.write(
+        "seg1",
+        "INSERT INTO kv VALUES (1, 'a');\n"
+        "INSERT INTO kv VALUES (2, 'b');\n"
+        "INSERT INTO log VALUES (1, 'first')",
+    )
+    store.write("seg1", "UPDATE kv SET v = 'B' WHERE k = 2; DELETE FROM log WHERE k = 1")
+    store.write("seg1", "INSERT OR REPLACE INTO kv VALUES (1, 'A2'), (3, 'c')")
+    rows = {r["k"]: r["v"] for r in store.read("seg1", "SELECT k, v FROM kv")}
+    assert rows == {1: "A2", 2: "B", 3: "c"}
+    assert store.read("seg1", "SELECT count(*) AS n FROM log")[0]["n"] == 0
+    with pytest.raises(Exception):
+        store.write(
+            "seg1",
+            "INSERT INTO kv VALUES (4, 'd');\n"
+            "INSERT INTO nosuch VALUES (1)",
+        )
+    rows = {r["k"]: r["v"] for r in store.read("seg1", "SELECT k, v FROM kv")}
+    assert rows == {1: "A2", 2: "B", 3: "c"}, "rollback must undo the partial insert"
+
+
 def test_segment_id_charset_enforced(store, spark):
-    """Round-6 (code-review): segment ids become partition directory names
-    and Delta replaceWhere literals — enforce the charset at every entry
-    point instead of letting a quote or colon corrupt paths/predicates."""
+    """Round-6 (code-review): segment ids become partition directory and
+    lock-file names — enforce the charset at every entry point instead of
+    letting a quote or colon corrupt paths."""
     store.set_schema("sid", "create table t (k INTEGER);")
     for bad in ("se'g", "a:b", "x=1", "", "%41", ".hidden", "a b"):
         with pytest.raises(QueryRejected, match="invalid segment id"):
@@ -787,6 +819,29 @@ def test_name_binding_as_of_master_and_recursive_cte(store):
             "SELECT n + 1 FROM items WHERE n < 4) SELECT n FROM items",
         )
     assert store.read("seg_nb", "SELECT count(*) AS n FROM items") == [{"n": 2}]
+
+
+def test_discarded_stores_drop_their_views(spark, tmp_path):
+    prefixes = []
+    for i in range(3):
+        store = SegmentStore(spark, str(tmp_path / f"leak{i}"))
+        _tree_segment(store)
+        store.read("seg_nb", "SELECT count(*) AS n FROM items")
+        store.read(
+            "seg_nb",
+            "WITH RECURSIVE c(x) AS (SELECT 1 UNION ALL SELECT x + 1 FROM c "
+            "WHERE x < 3) SELECT sum(x) AS s FROM c",
+        )
+        prefix = store._frontier_view.rsplit("_", 1)[0] + "_"
+        live = [t.name for t in spark.catalog.listTables() if t.name.startswith(prefix)]
+        assert len(live) >= 2, live  # a table view and the frontier view
+        prefixes.append(prefix)
+        del store
+    gc.collect()
+    left = [
+        t.name for t in spark.catalog.listTables() if t.name.startswith(tuple(prefixes))
+    ]
+    assert left == []
 
 
 def test_fanout_read_does_not_leak_into_segment_reads(store):

@@ -40,6 +40,7 @@ import secrets
 import shutil
 import socket
 import time
+import weakref
 from collections import OrderedDict
 from dataclasses import dataclass, field
 
@@ -818,28 +819,17 @@ _SEGMENT_ID_RE = re.compile(r"^[A-Za-z0-9][A-Za-z0-9._-]*$")
 
 
 def _validate_segment_id(segment_id) -> str:
-    """Segment ids become partition DIRECTORY names, file-lock names, and —
-    under Delta — ``replaceWhere`` predicate literals, so the charset is
-    enforced at every entry point (provision / bulk ingest).  Without this,
-    an id containing ``'`` could break (or widen!) the replaceWhere
-    predicate, and Hive partition escaping (':' -> '%3A') would make raw
-    ``os.path`` existence checks silently miss written data."""
+    """Segment ids become partition DIRECTORY names and file-lock names, so
+    the charset is enforced at every entry point (provision / bulk ingest).
+    Without this, an id containing ``/`` or ``..`` could address a path
+    outside its table, and Hive partition escaping (':' -> '%3A') would
+    make raw ``os.path`` existence checks silently miss written data."""
     if not isinstance(segment_id, str) or not _SEGMENT_ID_RE.match(segment_id):
         raise QueryRejected(
             f"invalid segment id {segment_id!r}: must match "
             "[A-Za-z0-9][A-Za-z0-9._-]*"
         )
     return segment_id
-
-
-def _split_partition_path(path: str) -> tuple[str, str]:
-    """(table root, segment id) from a ``.../tables/<t>/segment_id=<seg>``
-    partition path — the Delta single-table layout addresses the one table
-    root plus a partition predicate instead of the directory itself."""
-    root, sep, seg = path.rpartition("/segment_id=")
-    if not sep:
-        raise ValueError(f"not a partition path: {path!r}")
-    return root, seg
 
 
 def _strip_parens_and_strings(s: str) -> str:
@@ -1595,6 +1585,15 @@ class WriteLockError(RuntimeError):
     one-writer-per-segment rule, trough/write.py:55-57 / sync.py:130-145)."""
 
 
+def _drop_views(spark: SparkSession, views: OrderedDict, frontier: str) -> None:
+    """Finalizer of a ``SegmentStore``: drop its temp views from the
+    session.  A stopped session has no views left to drop."""
+    if spark.sparkContext._jsc is None:
+        return
+    for name in [frontier, *(name for _, name in views.values())]:
+        spark.catalog.dropTempView(name)
+
+
 class _WriteTxn:
     """Script-level rollback journal, giving the write path the reference's
     all-or-nothing transaction semantics (BEGIN…COMMIT per POST,
@@ -1609,11 +1608,6 @@ class _WriteTxn:
         self.snapshots: dict[str, set[str] | None] = {}
         self.overwrites: list[tuple[str, str]] = []  # (live_path, backup_path)
         self.moves: list[tuple[str, str]] = []  # (src, dst) dir renames
-        # pre-script bytes of files Delta OVERWRITES in place (the one
-        # exception to its append-only file model: the `_last_checkpoint`
-        # hint is rewritten at every checkpoint, so a listing diff alone
-        # would leave it naming a checkpoint the rollback deleted)
-        self.inplace_contents: dict[str, bytes] = {}
         self.meta_before = json.loads(json.dumps(store._meta))
         self.hwm_before = dict(store._hwm)
         self.last_auto_before = dict(store._last_auto)
@@ -1621,8 +1615,8 @@ class _WriteTxn:
     @staticmethod
     def _listing(path: str) -> set[str]:
         """Recursive relative file listing — recursive (not top-level) so
-        entries added inside subdirectories during the script (e.g. a Delta
-        table's _delta_log commits) are rolled back too."""
+        entries added inside subdirectories during the script are rolled
+        back too."""
         out: set[str] = set()
         for base, _, files in os.walk(path):
             rel = os.path.relpath(base, path)
@@ -1633,12 +1627,6 @@ class _WriteTxn:
     def before_append(self, path: str) -> None:
         if path not in self.snapshots:
             self.snapshots[path] = self._listing(path) if os.path.isdir(path) else None
-            if self.snapshots[path] is not None:
-                for rel in self.snapshots[path]:
-                    if os.path.basename(rel) == "_last_checkpoint":
-                        full = os.path.join(path, rel)
-                        with open(full, "rb") as fh:
-                            self.inplace_contents[full] = fh.read()
 
     def register_overwrite(self, path: str, bak: str) -> None:
         # NB: the pre-overwrite snapshot must already have been taken
@@ -1675,28 +1663,6 @@ class _WriteTxn:
                 for base, _, _ in os.walk(path, topdown=False):
                     if base != path and not os.listdir(base):
                         os.rmdir(base)
-        # restore files that were overwritten IN PLACE during the script
-        # (Delta's _last_checkpoint hint) to their pre-script bytes
-        for full, data in self.inplace_contents.items():
-            if os.path.isdir(os.path.dirname(full)):
-                with open(full, "wb") as fh:
-                    fh.write(data)
-        # Delta keeps a driver-side DeltaLog snapshot cache keyed by table
-        # path; the file-listing restore above deleted commits BEHIND that
-        # cache, so without invalidation a post-rollback read in the same
-        # SparkSession can serve the rolled-back (now file-less) snapshot.
-        # DeltaLog.clearCache() is the documented test-facing hammer; the
-        # catalog clearCache drops any cached relations on top.
-        if getattr(self.store, "_fmt", "parquet") == "delta":
-            try:
-                jvm = self.store.spark._jvm
-                jvm.org.apache.spark.sql.delta.DeltaLog.clearCache()
-            except Exception:
-                pass
-            try:
-                self.store.spark.catalog.clearCache()
-            except Exception:
-                pass
         self.store._meta = self.meta_before
         self.store._save_meta()
         self.store._hwm = self.hwm_before
@@ -1710,33 +1676,7 @@ class SegmentStore:
     (trough/wsgi/segment_manager.py:8-130, read.py, write.py).
     """
 
-    def __init__(self, spark: SparkSession, root: str, storage_format: str = "parquet"):
-        if storage_format not in ("parquet", "delta"):
-            raise ValueError(f"storage_format must be parquet or delta, got {storage_format!r}")
-        if storage_format == "delta":
-            try:
-                import delta  # noqa: F401  (registers the Python-side surface)
-            except ImportError as e:
-                raise ImportError(
-                    "storage_format='delta' requires the delta-spark package "
-                    "(and a session built with configure_spark_with_delta_pip / "
-                    "the DeltaSparkSessionExtension)"
-                ) from e
-        # Storage-format upgrade path (SURVEY §2.B15; VERDICT r4 item 6 +
-        # r5 item 2): with storage_format='delta' each logical table is ONE
-        # Delta table partitioned by segment_id (the single-partitioned-
-        # table layout) — per-segment appends/overwrites are transaction-log
-        # commits (replaceWhere on the partition), and the cross-segment
-        # surfaces (table_df / read_many_df / append_dataframe / bulk_load)
-        # are one log-pruned scan or one partitioned commit.  The
-        # script-level rollback journal remains correct under Delta on a
-        # single-writer store (its file-listing restore replays to the
-        # pre-script log state, since Delta state = log replay and Delta
-        # never mutates files in place); on a multi-writer cluster
-        # deployment, DeltaTable.restoreToVersion is the equivalent
-        # primitive.  snapshot/restore/compact are parquet-scoped (their
-        # Delta equivalents are time travel / RESTORE / OPTIMIZE).
-        self._fmt = storage_format
+    def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root.rstrip("/")
         # register the reference's three SQL functions for un-shimmed SQL,
@@ -1760,6 +1700,10 @@ class SegmentStore:
         self._view_names = (f"{_VIEW_PREFIX}{token}_{n}" for n in itertools.count())
         self._frontier_view = next(self._view_names)  # WITH RECURSIVE
         self._view_counts = {"registrations": 0, "hits": 0, "evictions": 0}
+        # the session outlives the store: a discarded store drops its views
+        weakref.finalize(
+            self, _drop_views, spark, self._views, self._frontier_view
+        ).atexit = False
         # per-(segment, table) auto-increment high-water marks, lazily
         # initialized from storage (segments are small by design)
         self._hwm: dict[tuple[str, str], int] = {}
@@ -1794,8 +1738,8 @@ class SegmentStore:
         Stale locks from dead local processes are stolen; a live holder
         fails the acquirer with WriteLockError after ``timeout``.  Re-entrant
         per store instance (write() holds the segment lock while _save_meta
-        takes the meta lock — different names, no deadlock).  On a cluster
-        filesystem this is Delta/metastore territory — documented upgrade."""
+        takes the meta lock — different names, no deadlock).  It is a local-
+        filesystem lock, not a cluster one."""
         os.makedirs(os.path.join(self.root, "_locks"), exist_ok=True)
         path = os.path.join(self.root, "_locks", f"{name}.lock")
         deadline = time.monotonic() + (self.lock_timeout if timeout is None else timeout)
@@ -3054,7 +2998,7 @@ class SegmentStore:
         when_matched: str | dict = "update",
         when_not_matched: str = "insert",
     ) -> dict:
-        """Delta-style MERGE INTO for the segment store: upsert a DataFrame
+        """MERGE INTO for the segment store: upsert a DataFrame
         into one segment's table in a single bounded partition rewrite.
 
         ``on`` defaults to the table's PRIMARY KEY.  ``when_matched`` is
@@ -3147,92 +3091,6 @@ class SegmentStore:
             self._overwrite_partition(segment_id, table, out)
         return {"matched": matched, "inserted": inserted}
 
-    def merge_many(
-        self,
-        table: str,
-        source: DataFrame,
-        on: list[str],
-        when_matched: str | dict = "update",
-        segments: list[str] | None = None,
-    ) -> bool:
-        """ONE native Delta MERGE for a multi-segment upsert batch: the
-        source carries a ``segment_id`` column and the merge keys on
-        (segment_id, *on) against the single partitioned table — the
-        streaming sink's Delta end state (one transaction-log commit per
-        micro-batch instead of a rewrite per touched segment; Delta prunes
-        the scan to the touched partitions via the segment_id equi-clause).
-
-        Returns False when the Delta table does not exist yet (first-ever
-        batch) or the delta package is unavailable — callers fall back to
-        the per-segment merge loop, which also creates the table."""
-        if self._fmt != "delta":
-            return False
-        try:
-            from delta.tables import DeltaTable
-        except ImportError:
-            return False
-        path = self._table_path(table)
-        if not os.path.isdir(f"{path}/_delta_log"):
-            return False
-        if segments is None:
-            segments = sorted(
-                r["segment_id"] for r in source.select("segment_id").distinct().collect()
-            )
-        if not segments:
-            # empty micro-batch: nothing to merge — report handled so the
-            # streaming sink's fallback loop (also a no-op on zero
-            # segments) isn't entered with a source that has no rows
-            return True
-        # same column-subset/extra-column contract as merge(): declared
-        # columns only, missing ones null-filled (an undeclared event-time
-        # column in the stream must not become a Delta schema mismatch)
-        ts = self._table_schema(segments[0], table)
-        declared = {n.lower(): (n, t) for n, t in ts.fields}
-        src_cols = [c for c in source.columns if c.lower() in declared]
-        src = source.select(
-            "segment_id",
-            *[
-                F.col(c).cast(declared[c.lower()][1]).alias(declared[c.lower()][0])
-                for c in src_cols
-            ],
-            *[
-                F.lit(None).cast(t).alias(n)
-                for n, t in ts.fields
-                if n.lower() not in {c.lower() for c in src_cols}
-            ],
-        )
-        src = self._dedupe_last(src, ["segment_id", *on])
-        cond = " AND ".join(
-            f"t.`{k}` = s.`{k}`" for k in ("segment_id", *on)
-        )
-        # take the SAME per-segment locks every other writer takes (sorted,
-        # so concurrent multi-segment writers can't deadlock) — a
-        # table-level-only lock would not exclude a script write holding
-        # segment-X while this merge commits to the shared log
-        with contextlib.ExitStack() as stack:
-            for seg in sorted(segments):
-                stack.enter_context(self._file_lock(f"segment-{seg}"))
-            m = DeltaTable.forPath(self.spark, path).alias("t").merge(
-                src.alias("s"), cond
-            )
-            if when_matched == "update":
-                m = m.whenMatchedUpdateAll()
-            elif isinstance(when_matched, dict):
-                sets = {
-                    c: re.sub(
-                        r"\b(source|target)\s*\.\s*",
-                        lambda mm: "s." if mm.group(1).lower() == "source" else "t.",
-                        e,
-                        flags=re.IGNORECASE,
-                    )
-                    for c, e in when_matched.items()
-                }
-                m = m.whenMatchedUpdate(set=sets)
-            elif when_matched != "ignore":
-                raise QueryRejected(f"bad when_matched: {when_matched!r}")
-            m.whenNotMatchedInsertAll().execute()
-        return True
-
     def _parse_values(self, rest: str, segment_id: str | None = None, pending=None):
         """Parse VALUES (..),(..) literal tuples via the dialect tokenizer.
 
@@ -3276,71 +3134,12 @@ class SegmentStore:
         return tuples
 
     def _write_files(self, df: DataFrame, path: str, mode: str) -> None:
-        """Format-dispatched partition write (parquet default, Delta opt-in).
-
-        Parquet: ``path`` IS the partition directory.  Delta (round 6,
-        single-partitioned-table layout): each logical table is ONE Delta
-        table at ``<root>/tables/<t>`` partitioned by ``segment_id``; the
-        ``segment_id=<seg>`` suffix of ``path`` selects the partition — an
-        append adds the column back, an overwrite becomes ``replaceWhere``
-        on it (one transactional log commit, no rename swap).  The single
-        table is what lets the cross-segment surfaces (table_df /
-        read_many_df / append_dataframe / bulk_load) stay ONE scan or write
-        under Delta, and it collapses the reference's per-segment
-        provision→POST→promote choreography into log commits."""
-        if self._fmt == "delta":
-            root, seg = _split_partition_path(path)
-            out = df.withColumn("segment_id", F.lit(seg))
-            w = out.write.format("delta").partitionBy("segment_id")
-            if mode == "overwrite":
-                # mergeSchema also on overwrite: an ALTER ADD COLUMN
-                # backfill legitimately widens the shared table schema
-                # during its partition rewrite, and real Delta requires the
-                # option for that (overwriteSchema would be wrong here —
-                # it can't combine with replaceWhere and would drop other
-                # segments' columns)
-                w = w.mode("overwrite").option(
-                    "replaceWhere", f"segment_id = '{seg}'"
-                ).option("mergeSchema", "true")
-            else:
-                # same-named tables across segments share the one Delta
-                # schema; mergeSchema widens on append (documented layout
-                # constraint: schemas must be compatible across segments)
-                w = w.mode(mode).option("mergeSchema", "true")
-            w.save(root)
-            return
+        """Write ``df`` as parquet into the partition directory ``path``."""
         df.write.mode(mode).parquet(path)
 
     def _read_files(self, path: str, schema: T.StructType | None = None) -> DataFrame:
-        """Format-dispatched partition read.  Delta: one partition-pruned
-        scan of the single table (the segment_id filter hits the partition
-        column, so the log prunes to one directory); the declared schema is
-        applied as a cast-select (same column order/type alignment the
-        parquet path gets for free)."""
-        if self._fmt == "delta":
-            root, seg = _split_partition_path(path)
-            df = (
-                self.spark.read.format("delta")
-                .load(root)
-                .filter(F.col("segment_id") == seg)
-                .drop("segment_id")
-            )
-            if schema is not None:
-                # null-fill declared columns the Delta table doesn't have
-                # yet (ALTER TABLE ADD COLUMN backfill reads with the NEW
-                # schema before the rewrite lands — parquet's explicit read
-                # schema null-fills missing columns for free, Delta's scan
-                # resolves names and would raise on the absent one)
-                have = {c.lower() for c in df.columns}
-                df = df.select(
-                    [
-                        (
-                            F.col(f.name) if f.name.lower() in have else F.lit(None)
-                        ).cast(f.dataType).alias(f.name)
-                        for f in schema.fields
-                    ]
-                )
-            return df
+        """Read the partition directory ``path``; a declared ``schema``
+        null-fills columns its files lack (ALTER TABLE ADD COLUMN)."""
         r = self.spark.read
         if schema is not None:
             r = r.schema(schema)
@@ -3368,19 +3167,10 @@ class SegmentStore:
         return self._hwm[key]
 
     def _txn_before_write(self, table: str, segment_id: str) -> None:
-        """Snapshot the about-to-be-mutated storage region for script
-        rollback: the partition directory (parquet) or the whole single
-        Delta table root (its ``_delta_log`` lives there, and Delta
-        mutations are file-level append-only, so a listing-diff rollback
-        restores the exact pre-script log state)."""
-        if self._active_txn is None:
-            return
-        path = (
-            self._table_path(table)
-            if self._fmt == "delta"
-            else self._partition_path(table, segment_id)
-        )
-        self._active_txn.before_append(path)
+        """Snapshot the about-to-be-mutated partition directory for script
+        rollback."""
+        if self._active_txn is not None:
+            self._active_txn.before_append(self._partition_path(table, segment_id))
 
     def _flush_inserts(self, segment_id: str, pending: dict[str, list[Row]]) -> None:
         for table, rows in pending.items():
@@ -5371,22 +5161,11 @@ class SegmentStore:
         # the driver-side sequential write paths that collect() it back
         aligned = df.select([F.col(n).cast(t) for n, t in ts.fields]).coalesce(1)
         path = self._partition_path(table, segment_id)
-        if self._fmt == "delta":
-            # Delta overwrite IS the atomic swap: one replaceWhere commit on
-            # the single partitioned table; snapshot isolation lets the plan
-            # read the pre-overwrite version of its own input.  Script
-            # rollback: the txn's file-listing snapshot of the TABLE ROOT
-            # (where _delta_log lives) restores the log to its pre-script
-            # state — Delta never mutates files in place, so every mutation
-            # is file-level append-only and listing-diff rollback is exact.
-            self._txn_before_write(table, segment_id)
-            self._write_files(aligned, path, "overwrite")
-            return
         tmp = f"{self.root}/_staging/{table}/segment_id={segment_id}"
         shutil.rmtree(tmp, ignore_errors=True)
         aligned.write.mode("overwrite").parquet(tmp)
-        # atomic-ish swap (single filesystem rename pair); on a cluster FS
-        # this is Delta's job — documented upgrade path
+        # atomic-ish swap (single filesystem rename pair; a crash-atomic
+        # commit is ROADMAP direction 3)
         bak = path + "._old"
         if self._active_txn is not None:
             self._active_txn.before_append(path)  # pre-swap snapshot
@@ -5643,10 +5422,6 @@ class SegmentStore:
         info.setdefault("extra_tables", {})[table] = _tableschema_to_json(ts)
         self._save_meta()
 
-    def _read_partition_raw(self, segment_id: str, table: str) -> DataFrame:
-        path = self._partition_path(table, segment_id)
-        return self._read_files(path)
-
     def _write_path_drop(self, segment_id: str, stmt: str) -> None:
         tm = re.match(
             r"^\s*DROP\s+TRIGGER\s+(?:IF\s+EXISTS\s+)?(?P<name>[\w\"\[\]`]+)\s*$",
@@ -5713,20 +5488,6 @@ class SegmentStore:
             trigs.pop(name)
         self._save_meta()
         path = self._partition_path(table, segment_id)
-        if self._fmt == "delta":
-            # single-table layout: the partition dir belongs to the shared
-            # Delta table, so DROP = one replaceWhere commit emptying the
-            # segment's partition (renaming the dir would corrupt the log).
-            # DOCUMENTED DIVERGENCE: the shared table's column schema
-            # survives the drop, so re-creating the table with a CHANGED
-            # column type fails loudly at the next append (mergeSchema
-            # widens, never retypes); the parquet layout deletes the
-            # directory and accepts the retype.
-            if os.path.isdir(f"{self._table_path(table)}/_delta_log"):
-                self._txn_before_write(table, segment_id)
-                empty = self._read_partition_raw(segment_id, table).limit(0)
-                self._write_files(empty, path, "overwrite")
-            return
         if self._active_txn is not None and os.path.isdir(path):
             self._active_txn.before_append(path)  # pre-drop snapshot
             bak = path + "._dropped"
@@ -5834,13 +5595,7 @@ class SegmentStore:
     def _dir_fingerprint(self, path: str) -> tuple:
         """Cheap change detector for the view cache: (inode, mtime_ns, size)
         of the data directory — any append, overwrite swap, or delete from
-        ANY process moves it.  Under Delta the data files are immutable and
-        state lives in the commit log, so the fingerprint stats the table's
-        ``_delta_log`` instead (a replaceWhere overwrite touches only the
-        log, never the partition directory)."""
-        if self._fmt == "delta":
-            root, _seg = _split_partition_path(path)
-            path = os.path.join(root, "_delta_log")
+        ANY process moves it."""
         try:
             st = os.stat(path)
         except OSError:
@@ -5879,7 +5634,7 @@ class SegmentStore:
 
         ``as_of`` names a snapshot version (see ``snapshot``): the query then
         runs against the snapshot's data files, table set, views, and schema
-        AS OF that point — Delta/Iceberg-style time travel without touching
+        AS OF that point — time travel without touching
         the live segment.  Snapshot files are immutable, so a time-travel
         reader never races a concurrent writer.  (Named schemas resolve
         against the current registry; per-segment DDL state is versioned.)"""
@@ -6095,27 +5850,13 @@ class SegmentStore:
                 raise KeyError(f"no segment has table {table!r}")
             reference_segment = candidates[0]
         ts = self._table_schema(reference_segment, table)
-        # declared-but-never-written table (provisioned DDL, no INSERT yet):
-        # neither a parquet directory nor a Delta log exists — the whole-
-        # table frame is the declared schema, empty (same contract as
-        # _read_partition's isdir guard on the per-segment path)
-        if not os.path.isdir(
-            f"{path}/_delta_log" if self._fmt == "delta" else path
-        ):
-            return _local_frame(
-                self.spark, [], ts.struct().add("segment_id", T.StringType())
-            )
-        if self._fmt == "delta":
-            # single-partitioned-table layout (round 6): the whole table IS
-            # one Delta table, so this is one log-pruned scan; segment_id
-            # filters prune via the partition column exactly like the
-            # parquet PartitionFilters path
-            df = self.spark.read.format("delta").load(path)
-            return df.select(
-                *[F.col(n).cast(t).alias(n) for n, t in ts.fields],
-                F.col("segment_id").cast(T.StringType()).alias("segment_id"),
-            )
         schema = ts.struct().add("segment_id", T.StringType())
+        # declared-but-never-written table (provisioned DDL, no INSERT yet):
+        # no parquet directory exists — the whole-table frame is the
+        # declared schema, empty (same contract as _read_partition's isdir
+        # guard on the per-segment path)
+        if not os.path.isdir(path):
+            return _local_frame(self.spark, [], schema)
         return self.spark.read.schema(schema).option("basePath", path).parquet(path)
 
     def read_many_df(self, segment_regex: str, sql: str) -> DataFrame:
@@ -6157,8 +5898,7 @@ class SegmentStore:
         """Append a (micro-)batch carrying a segment column — the
         foreachBatch streaming sink target (streaming/events.py
         write_to_segments) and the incremental sibling of ``bulk_load``.
-        One partitioned append per call ≡ one atomic commit per trigger —
-        under Delta literally one transaction-log commit."""
+        One partitioned append per call ≡ one atomic commit per trigger."""
         data = df.withColumnRenamed(segment_col, "segment_id")
         fields = [(f.name, f.dataType) for f in data.schema.fields if f.name != "segment_id"]
         ts = TableSchema(name=table, fields=fields)
@@ -6210,13 +5950,9 @@ class SegmentStore:
     def _write_partitioned(self, data: DataFrame, table: str) -> None:
         """One partitioned append of a segment_id-carrying DataFrame to the
         whole table — the shared tail of append_dataframe / bulk_load."""
-        w = data.write.partitionBy("segment_id").mode("append")
-        if self._fmt == "delta":
-            w.format("delta").option("mergeSchema", "true").save(
-                self._table_path(table)
-            )
-        else:
-            w.parquet(self._table_path(table))
+        data.write.partitionBy("segment_id").mode("append").parquet(
+            self._table_path(table)
+        )
 
     # -- promotion / deletion (A20, A22) -------------------------------------
 
@@ -6255,7 +5991,6 @@ class SegmentStore:
         the classic lakehouse degradation; compaction is the classic cure.
         Bounded work (one partition), atomic via the same staged swap as
         UPDATE/DELETE.  Returns {table: {files_before, files_after, rows}}."""
-        self._require_parquet("compact", "OPTIMIZE / auto-compaction")
         report: dict = {}
         with self._file_lock(f"segment-{segment_id}"):
             for t in [table] if table else self._segment_tables(segment_id):
@@ -6275,27 +6010,13 @@ class SegmentStore:
                 }
         return report
 
-    def _require_parquet(self, op: str, delta_equiv: str) -> None:
-        """File-granular maintenance ops copy/rename partition directories,
-        which under the single-Delta-table layout would bypass (and corrupt)
-        the shared transaction log — Delta's own primitive replaces them."""
-        if self._fmt == "delta":
-            raise NotImplementedError(
-                f"{op} is parquet-scoped: under storage_format='delta' use "
-                f"Delta's {delta_equiv} instead (the shared _delta_log owns "
-                "the partition directories)"
-            )
-
     def _snapshot_root(self, segment_id: str) -> str:
         return f"{self.root}/_snapshots/{segment_id}"
 
     def snapshot(self, segment_id: str, tag: str | None = None) -> str:
         """Create a named point-in-time snapshot of one segment (data files
         + segment metadata).  Segments are bounded by design, so a snapshot
-        is a bounded file copy; on a cluster FS the same API would be backed
-        by Delta/Iceberg time travel (documented upgrade path, README).
-        Returns the version id."""
-        self._require_parquet("snapshot", "time travel (VERSION AS OF)")
+        is a bounded file copy.  Returns the version id."""
         info = self._segment_info(segment_id)
         with self._file_lock(f"segment-{segment_id}"):
             existing = self.list_snapshots(segment_id)
@@ -6335,7 +6056,6 @@ class SegmentStore:
         metadata swap in atomically per table (staged rename, same protocol
         as partition rewrites); autoincrement high-water marks reset so the
         next id continues from the restored data."""
-        self._require_parquet("restore", "RESTORE TABLE ... VERSION AS OF")
         dest, manifest = self._snapshot_manifest(segment_id, version)
         with self._file_lock(f"segment-{segment_id}"):
             current = set(self._segment_tables(segment_id))
@@ -6355,16 +6075,6 @@ class SegmentStore:
         """A22 (reference sync.py:439-509, segment_manager.py:117-128)."""
         tables = self._segment_tables(segment_id)
         for t in tables:
-            if self._fmt == "delta":
-                # one replaceWhere commit per table empties the segment's
-                # partition of the shared Delta table (rmtree would corrupt
-                # the log); old files become tombstones until VACUUM
-                if os.path.isdir(f"{self._table_path(t)}/_delta_log"):
-                    empty = self._read_partition_raw(segment_id, t).limit(0)
-                    self._write_files(
-                        empty, self._partition_path(t, segment_id), "overwrite"
-                    )
-                continue
             shutil.rmtree(self._partition_path(t, segment_id), ignore_errors=True)
         del self._meta["segments"][segment_id]
         self._save_meta()
@@ -6408,10 +6118,8 @@ def _parse_recursive_cte(sql: str) -> RecursiveCTE | None:
     pos += 1
     if pos >= len(words) or words[pos].text != "(":
         raise QueryRejected(f"unsupported WITH RECURSIVE form: {sql[:80]!r}")
-    body_args, close_sig = _find_sig_args(words, pos)
-    if len(body_args) != 1:
-        raise QueryRejected("unsupported WITH RECURSIVE form (top-level comma in body)")
-    body = body_args[0]
+    _, close_sig = _find_sig_args(words, pos)
+    body = words[pos + 1 : close_sig]
     outer_sql = dialect.render(
         tokens[sig[close_sig + 1] :] if close_sig + 1 < len(words) else []
     ).strip()

@@ -135,17 +135,6 @@ def upsert_to_segments(
         for seg in segs:
             store.provision(seg, schema_id)
 
-        # Delta end state: ONE native MERGE per micro-batch, keyed on
-        # (segment_id, *keys) against the single partitioned table — one
-        # log commit regardless of how many segments the batch touches.
-        # Falls back below on the first-ever batch (table not created yet)
-        # or when delta-spark is absent.
-        merge_many = getattr(store, "merge_many", None)
-        if merge_many is not None and merge_many(
-            table, data, keys, when_matched, segments=segs
-        ):
-            return
-
         def _one(seg: str) -> None:
             store.merge(
                 seg,
@@ -161,13 +150,7 @@ def upsert_to_segments(
         # N segments runs ~min(N, pool) concurrent jobs instead of N serial
         # driver-coordinated ones (the one scale seam the per-segment write
         # model had).  TROUGH_SINK_THREADS=1 restores the serial loop.
-        # Delta stores serialize: every segment's merge commits to the SAME
-        # shared table log, and concurrent metadata/overwrite commits
-        # conflict (the native end state there is ONE MERGE per micro-batch,
-        # not parallel per-segment rewrites).
         workers = min(int(os.environ.get("TROUGH_SINK_THREADS", "8")), max(len(segs), 1))
-        if getattr(store, "_fmt", "parquet") == "delta":
-            workers = 1
         if workers <= 1:
             for seg in segs:
                 _one(seg)
