@@ -23,16 +23,22 @@ _STOCK_READWRITER = {
 }
 
 
-@pytest.fixture(scope="session", autouse=True)
-def stock_pyspark():
-    """Fail the session if anything replaced a PySpark reader/writer method
-    and left it replaced (a test double that patches PySpark globally)."""
-    yield
-    patched = [
+def _patched_readwriter() -> list[str]:
+    """Names of the PySpark reader/writer methods no longer PySpark's own."""
+    return [
         f"{cls.__name__}.{name}"
         for (cls, name), fn in _STOCK_READWRITER.items()
         if cls.__dict__.get(name) is not fn or fn.__module__ != "pyspark.sql.readwriter"
     ]
+
+
+@pytest.fixture(scope="session", autouse=True)
+def stock_pyspark():
+    """Fail the session if anything replaced a PySpark reader/writer method
+    and left it replaced (a test double that patches PySpark globally).
+    Yields the check itself, so a test can run it mid-session."""
+    yield _patched_readwriter
+    patched = _patched_readwriter()
     assert not patched, f"PySpark patched for the rest of the session: {patched}"
 
 

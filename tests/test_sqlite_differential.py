@@ -545,6 +545,13 @@ TREE_ROWS = "(1, 'root', NULL), (2, 'a', 1), (3, 'b', 1), (4, 'a1', 2), (5, 'a1x
         # a function call with arguments in the step's select list
         "WITH RECURSIVE c(x, y) AS (SELECT 1, 1 UNION ALL "
         "SELECT x + 1, max(y * 2, x) FROM c WHERE x < 5) SELECT x, y FROM c ORDER BY x",
+        # three columns, a CASE in the step; no column list, a comma in a literal
+        "WITH RECURSIVE f(n, a, b) AS (SELECT 0, 0, 1 UNION ALL SELECT n + 1, b, "
+        "CASE WHEN n % 2 = 0 THEN a + b ELSE b + a END FROM f WHERE n < 10) "
+        "SELECT n, a, b FROM f ORDER BY n",
+        "WITH RECURSIVE w AS (SELECT id, parent, name || ', ' AS trail FROM nodes "
+        "WHERE id = 5 UNION ALL SELECT n.id, n.parent, w.trail || n.name || ', ' "
+        "FROM nodes n JOIN w ON n.id = w.parent) SELECT id, trail FROM w ORDER BY id",
     ],
 )
 def test_recursive_cte_multi_column_matches_sqlite(spark, tmp_path, sql):

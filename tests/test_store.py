@@ -4,11 +4,20 @@ re-asserted against the Spark-native store (SURVEY §5, FIXTURES.md F1-F3, F6)."
 from __future__ import annotations
 
 import gc
+import weakref
+from collections import OrderedDict
 
 import pytest
+from py4j.protocol import Py4JError
 
 from trough_spark.dialect import QueryRejected
-from trough_spark.store import SegmentStore, parse_create_table, parse_schema_sql
+from trough_spark.store import (
+    SegmentStore,
+    _drop_views,
+    _validate_segment_id,
+    parse_create_table,
+    parse_schema_sql,
+)
 
 F1_DDL = "CREATE TABLE test (id INTEGER PRIMARY KEY AUTOINCREMENT, test varchar(4));"
 
@@ -842,6 +851,114 @@ def test_discarded_stores_drop_their_views(spark, tmp_path):
         t.name for t in spark.catalog.listTables() if t.name.startswith(tuple(prefixes))
     ]
     assert left == []
+
+
+def test_store_view_finalizer(spark, tmp_path):
+    """The finalizer that drops a store's views neither keeps the store
+    alive nor runs at interpreter exit (the session may be gone by then)."""
+    store = SegmentStore(spark, str(tmp_path / "fin"))
+    _tree_segment(store)
+    store.read("seg_nb", "SELECT count(*) AS n FROM items")
+    finalizers = [
+        f
+        for f in gc.get_objects()
+        if isinstance(f, weakref.finalize) and f.alive and f.peek()[0] is store
+    ]
+    assert [(f.peek()[1], f.atexit) for f in finalizers] == [(_drop_views, False)]
+    ref = weakref.ref(store)
+    del store, finalizers
+    gc.collect()
+    assert ref() is None
+
+
+def test_drop_views_drops_cached_and_frontier_views(spark):
+    names = ["__drop_views_t_0", "__drop_views_t_1"]
+    for name in names:
+        spark.range(1).createOrReplaceTempView(name)
+    views = OrderedDict([(("tbl", "/data/t"), (("key",), names[1]))])
+    _drop_views(spark, views, names[0])
+    live = {t.name for t in spark.catalog.listTables()}
+    assert live.isdisjoint(names)
+    # a store that never ran WITH RECURSIVE has no frontier view to drop
+    _drop_views(spark, OrderedDict(), "__drop_views_never_registered")
+
+
+def test_drop_views_skips_a_stopped_session():
+    class _Catalog:
+        def dropTempView(self, name):
+            raise AssertionError("a stopped session's catalog was called")
+
+    class _StoppedSession:
+        sparkContext = type("_Context", (), {"_jsc": None})()
+        catalog = _Catalog()
+
+    _drop_views(_StoppedSession(), OrderedDict([("slot", ("key", "v1"))]), "v0")
+
+
+def test_drop_views_ignores_a_failing_jvm_call():
+    dropped = []
+
+    class _Catalog:
+        def dropTempView(self, name):
+            dropped.append(name)
+            raise Py4JError("An error occurred while calling o88.dropTempView")
+
+    class _Session:
+        sparkContext = type("_Context", (), {"_jsc": object()})()
+        catalog = _Catalog()
+
+    _drop_views(_Session(), OrderedDict([("slot", ("key", "v1"))]), "v0")
+    assert dropped == ["v0"]
+
+
+@pytest.mark.parametrize("segment_id", ["a", "seg-1", "A.b_c", "9lives"])
+def test_segment_id_accepted(segment_id):
+    assert _validate_segment_id(segment_id) == segment_id
+
+
+@pytest.mark.parametrize(
+    "segment_id", ["../x", "a/b", "seg\n", "-lead", None, 5]
+)
+def test_segment_id_rejected(segment_id):
+    with pytest.raises(QueryRejected, match="invalid segment id"):
+        _validate_segment_id(segment_id)
+
+
+def test_cross_segment_surfaces(store, spark):
+    """bulk_load lands several segments in one partitioned write, table_df
+    scans the whole table with its segment_id column, read_many_df runs a
+    regex fan-out as one query and append_dataframe adds to a bulk table."""
+    store.set_schema("kv_schema", "CREATE TABLE kv (k INTEGER PRIMARY KEY, v TEXT);")
+    for seg in ("xs1", "xs2", "xs3"):
+        store.provision(seg, "kv_schema")
+        store.write(seg, f"INSERT INTO kv VALUES (1, '{seg}')")
+    extra = spark.createDataFrame(
+        [(10, "x", "xs1"), (11, "y", "xs2")], "k int, v string, sid string"
+    )
+    assert store.bulk_load("kv2", extra, segment_col="sid") == ["xs1", "xs2"]
+    tdf = store.table_df("kv")
+    assert tdf.count() == 3
+    assert [r["v"] for r in tdf.filter("segment_id = 'xs2'").collect()] == ["xs2"]
+    n = store.read_many_df("^xs[12]$", "SELECT count(*) AS n FROM kv").collect()[0]["n"]
+    assert n == 2
+    more = spark.createDataFrame([(12, "z", "xs3")], "k int, v string, sid string")
+    store.append_dataframe("kv2", more, segment_col="sid")
+    assert store.table_df("kv2").count() == 3
+    assert store.read("xs3", "SELECT k, v FROM kv2") == [{"k": 12, "v": "z"}]
+
+
+def test_delete_segment_leaves_other_segments(store):
+    """Segments share one partitioned table; deleting one empties only its
+    partition."""
+    store.set_schema("kv_schema", "CREATE TABLE kv (k INTEGER PRIMARY KEY, v TEXT);")
+    for seg in ("iso_a", "iso_b"):
+        store.provision(seg, "kv_schema")
+        store.write(seg, f"INSERT INTO kv VALUES (7, '{seg}')")
+    assert store.read("iso_a", "SELECT v FROM kv") == [{"v": "iso_a"}]
+    store.delete_segment("iso_a")
+    assert store.list_segments() == ["iso_b"]
+    assert store.table_df("kv").count() == 1
+    assert store.read("iso_b", "SELECT v FROM kv") == [{"v": "iso_b"}]
 
 
 def test_fanout_read_does_not_leak_into_segment_reads(store):

@@ -322,3 +322,44 @@ def test_streaming_upsert_sink_wide_fanout(spark, tmp_path, event_dir):
             del os.environ["TROUGH_SINK_THREADS"]
         threaded_warm = run("ck_threaded_warm")
         assert threaded_warm < serial * 0.8, (threaded_warm, serial)
+
+
+@pytest.mark.parametrize("threads", ["1", "8"])
+def test_streaming_upsert_sink_expression_merge(spark, tmp_path, monkeypatch, threads):
+    """One micro-batch updating and inserting keys in two segments, with an
+    expression ``when_matched``: every segment gets its own merge, on the
+    serial loop (one worker) and on the thread pool alike."""
+    import json
+
+    from trough_spark.store import SegmentStore
+
+    monkeypatch.setenv("TROUGH_SINK_THREADS", threads)
+    store = SegmentStore(spark, str(tmp_path / "expr_store"))
+    store.set_schema("kv_schema", "CREATE TABLE kv (k INTEGER PRIMARY KEY, v TEXT);")
+    for seg in ("s1", "s2"):
+        store.provision(seg, "kv_schema")
+        store.write(seg, f"INSERT INTO kv VALUES (1, 'old-{seg}'), (2, 'keep-{seg}')")
+    src_dir = tmp_path / "expr_src"
+    src_dir.mkdir()
+    with open(src_dir / "batch0.json", "w") as fh:
+        for k, v, seg in ((1, "new", "s1"), (3, "ins", "s1"), (2, "new", "s2")):
+            fh.write(json.dumps({"k": k, "v": v, "segment_id": seg}) + "\n")
+    stream = spark.readStream.schema("k int, v string, segment_id string").json(
+        str(src_dir)
+    )
+    q = (
+        E.upsert_to_segments(
+            stream, store, "kv", str(tmp_path / "expr_ck"), keys=["k"],
+            schema_id="kv_schema",
+            when_matched={"v": "source.v || '-' || target.v"},
+        )
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(180)
+    assert q.exception() is None
+    kv = "SELECT k, v FROM kv ORDER BY k"
+    assert store.read("s1", kv) == [
+        {"k": 1, "v": "new-old-s1"}, {"k": 2, "v": "keep-s1"}, {"k": 3, "v": "ins"}
+    ]
+    assert store.read("s2", kv) == [{"k": 1, "v": "old-s2"}, {"k": 2, "v": "new-keep-s2"}]

@@ -44,6 +44,7 @@ import weakref
 from collections import OrderedDict
 from dataclasses import dataclass, field
 
+from py4j.protocol import Py4JError
 import pyarrow as pa
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
@@ -815,7 +816,7 @@ def parse_create_table(stmt: str) -> TableSchema:
     )
 
 
-_SEGMENT_ID_RE = re.compile(r"^[A-Za-z0-9][A-Za-z0-9._-]*$")
+_SEGMENT_ID_RE = re.compile(r"[A-Za-z0-9][A-Za-z0-9._-]*")
 
 
 def _validate_segment_id(segment_id) -> str:
@@ -824,7 +825,7 @@ def _validate_segment_id(segment_id) -> str:
     Without this, an id containing ``/`` or ``..`` could address a path
     outside its table, and Hive partition escaping (':' -> '%3A') would
     make raw ``os.path`` existence checks silently miss written data."""
-    if not isinstance(segment_id, str) or not _SEGMENT_ID_RE.match(segment_id):
+    if not isinstance(segment_id, str) or not _SEGMENT_ID_RE.fullmatch(segment_id):
         raise QueryRejected(
             f"invalid segment id {segment_id!r}: must match "
             "[A-Za-z0-9][A-Za-z0-9._-]*"
@@ -1587,11 +1588,17 @@ class WriteLockError(RuntimeError):
 
 def _drop_views(spark: SparkSession, views: OrderedDict, frontier: str) -> None:
     """Finalizer of a ``SegmentStore``: drop its temp views from the
-    session.  A stopped session has no views left to drop."""
+    session.  A stopped session has no views left to drop.  The collector
+    runs this at any point on any thread, where a JVM call can fail (a
+    ``Py4JError`` from ``dropTempView`` was seen in the test suite); the
+    views are then left to the session."""
     if spark.sparkContext._jsc is None:
         return
-    for name in [frontier, *(name for _, name in views.values())]:
-        spark.catalog.dropTempView(name)
+    try:
+        for name in [frontier, *(name for _, name in views.values())]:
+            spark.catalog.dropTempView(name)
+    except Py4JError:
+        pass
 
 
 class _WriteTxn:
@@ -5789,17 +5796,20 @@ class SegmentStore:
             return view if n == cte else resolve(n)
 
         base = self._sql(dialect.sqlite_to_spark(rec.base_sql), bound)
-        if rec.cols:
-            base = base.toDF(*rec.cols)
+        # without a column list the CTE's columns are the base's (SQLite)
+        cols = rec.cols or base.columns
+        base = base.toDF(*cols)
         acc = base.distinct() if not rec.union_all else base
         frontier = acc
         step_sql = dialect.sqlite_to_spark(rec.step_sql)
         view = self._frontier_view
         for _ in range(rec.max_iterations):
             self._register_view(frontier, view)
-            step = self._sql(step_sql, bound)
-            if rec.cols:
-                step = step.toDF(*rec.cols)
+            # the checkpoint cuts the step's plan off the frontier plans it
+            # would nest: a union of nested self-joins of one table view can
+            # fail Spark's planning ("Could not find parent#N") and recomputes
+            # every earlier step
+            step = self._sql(step_sql, bound).toDF(*cols).localCheckpoint()
             if rec.union_all:
                 if step.isEmpty():
                     break
