@@ -552,6 +552,9 @@ TREE_ROWS = "(1, 'root', NULL), (2, 'a', 1), (3, 'b', 1), (4, 'a1', 2), (5, 'a1x
         "WITH RECURSIVE w AS (SELECT id, parent, name || ', ' AS trail FROM nodes "
         "WHERE id = 5 UNION ALL SELECT n.id, n.parent, w.trail || n.name || ', ' "
         "FROM nodes n JOIN w ON n.id = w.parent) SELECT id, trail FROM w ORDER BY id",
+        # a plain CTE after the recursive one, joined in the outer SELECT
+        "WITH RECURSIVE c(x) AS (SELECT 1 UNION ALL SELECT x + 1 FROM c WHERE x < 3), "
+        "d AS (SELECT 7 AS y) SELECT x, y FROM c, d",
     ],
 )
 def test_recursive_cte_multi_column_matches_sqlite(spark, tmp_path, sql):

@@ -205,6 +205,88 @@ CASES = [
          "INSERT INTO t VALUES (1,'x')",
          "INSERT OR IGNORE INTO t SELECT x, y FROM src"],
     ),
+    # ALTER keeps the table record consistent: a renamed column keeps its
+    # key, NOT NULL, DEFAULT and collation; a dropped one leaves no trace
+    (
+        "rename pk column then insert",
+        "CREATE TABLE t (a INTEGER PRIMARY KEY, b TEXT)",
+        ["INSERT INTO t VALUES (1,'x')", "ALTER TABLE t RENAME COLUMN a TO k",
+         "INSERT INTO t VALUES (2,'y')", "INSERT INTO t (k, b) VALUES (2,'z')"],
+    ),
+    (
+        "rename not null column then insert",
+        "CREATE TABLE t (a INT NOT NULL, b TEXT)",
+        ["ALTER TABLE t RENAME COLUMN a TO c", "INSERT INTO t VALUES (1,'x')",
+         "INSERT INTO t (b) VALUES ('y')"],
+    ),
+    (
+        "rename unique column then insert",
+        "CREATE TABLE t (a INT, b TEXT UNIQUE)",
+        ["INSERT INTO t VALUES (1,'x')", "ALTER TABLE t RENAME COLUMN b TO c",
+         "INSERT INTO t VALUES (2,'y')", "INSERT INTO t VALUES (3,'x')"],
+    ),
+    (
+        "rename unique-indexed column then insert",
+        "CREATE TABLE t (a INT, b TEXT)",
+        ["CREATE UNIQUE INDEX iu ON t (b)", "INSERT INTO t VALUES (1,'x')",
+         "ALTER TABLE t RENAME COLUMN b TO c", "INSERT INTO t VALUES (2,'y')",
+         "INSERT INTO t VALUES (3,'x')"],
+    ),
+    (
+        "renamed column keeps default and nocase",
+        "CREATE TABLE t (a INT, b TEXT DEFAULT 'Zed' COLLATE NOCASE UNIQUE)",
+        ["INSERT INTO t VALUES (1,'Xy')", "ALTER TABLE t RENAME COLUMN b TO c",
+         "INSERT INTO t (a) VALUES (2)", "INSERT INTO t VALUES (3,'xY')",
+         "INSERT INTO t VALUES (4,'ZED')"],
+    ),
+    (
+        "drop not null column then insert",
+        "CREATE TABLE t (a INT, b INT NOT NULL)",
+        ["INSERT INTO t VALUES (1,2)", "ALTER TABLE t DROP COLUMN b",
+         "INSERT INTO t VALUES (3)"],
+    ),
+    (
+        "dropped column added back starts empty",
+        "CREATE TABLE t (a INT, b INT)",
+        ["INSERT INTO t VALUES (1,2)", "ALTER TABLE t DROP COLUMN b",
+         "ALTER TABLE t ADD COLUMN b INT", "INSERT INTO t VALUES (3,4)"],
+    ),
+    (
+        "drop pk column refused",
+        "CREATE TABLE t (a INTEGER PRIMARY KEY, b INT)",
+        ["INSERT INTO t VALUES (1,2)", "ALTER TABLE t DROP COLUMN a",
+         "INSERT INTO t VALUES (2,3)"],
+    ),
+    (
+        "drop unique column refused",
+        "CREATE TABLE t (a INT, b TEXT UNIQUE)",
+        ["INSERT INTO t VALUES (1,'x')", "ALTER TABLE t DROP COLUMN b",
+         "INSERT INTO t VALUES (2,'y')", "INSERT INTO t VALUES (3,'x')"],
+    ),
+    # a unique index is part of its table's record: DROP INDEX works after
+    # ALTER, RENAME TO carries it, DROP TABLE drops it
+    (
+        "drop index after add column",
+        "CREATE TABLE t (a INT, b INT)",
+        ["CREATE UNIQUE INDEX iu ON t (b)", "ALTER TABLE t ADD COLUMN c INT",
+         "DROP INDEX iu", "INSERT INTO t VALUES (1,1,1)", "INSERT INTO t VALUES (2,1,2)"],
+    ),
+    (
+        "drop index after rename to",
+        "CREATE TABLE t (a INT, b INT)",
+        ["CREATE UNIQUE INDEX iu ON t (b)", "ALTER TABLE t RENAME TO u",
+         "INSERT INTO u VALUES (1,1)", "INSERT INTO u VALUES (2,1)",
+         "DROP INDEX iu", "ALTER TABLE u RENAME TO t", "INSERT INTO t VALUES (3,1)"],
+    ),
+    (
+        "drop table drops its unique index",
+        "CREATE TABLE t (a INT, b INT)",
+        ["CREATE TABLE x (p INT, q INT)", "CREATE UNIQUE INDEX ix ON x (q)",
+         "DROP TABLE x", "CREATE TABLE x (p INT, q INT)",
+         "INSERT INTO x VALUES (1,1)", "INSERT INTO x VALUES (2,1)",
+         "CREATE UNIQUE INDEX ix ON t (b)", "INSERT INTO t VALUES (1,1)",
+         "INSERT INTO t VALUES (2,1)"],
+    ),
 ]
 
 
@@ -230,8 +312,16 @@ def test_schema_level_unique_index_enforced(spark, tmp_path):
     store.write("seg", "INSERT INTO t VALUES (1,'Xy')")
     with pytest.raises(QueryRejected, match="UNIQUE constraint failed: t.b"):
         store.write("seg", "INSERT INTO t VALUES (2,'xY')")
-    with pytest.raises(QueryRejected, match="schema-level UNIQUE INDEX"):
-        store.write("seg", "DROP INDEX iu")
+    # the index is the segment's own, so dropping it works as in SQLite
+    _run_differential(
+        spark,
+        tmp_path,
+        "drop schema-level unique index",
+        "CREATE TABLE t (a INTEGER PRIMARY KEY, b TEXT);"
+        "CREATE UNIQUE INDEX iu ON t (b COLLATE NOCASE)",
+        ["INSERT INTO t VALUES (1,'Xy')", "INSERT INTO t VALUES (2,'xY')",
+         "DROP INDEX iu", "INSERT INTO t VALUES (3,'xY')"],
+    )
 
 
 def test_write_path_unique_index_lifecycle(spark, tmp_path):
@@ -254,6 +344,50 @@ def test_write_path_unique_index_lifecycle(spark, tmp_path):
     store2.write("seg", "INSERT INTO t VALUES (3,'x')")  # constraint gone
     rows = sorted(d["a"] for d in store2.read("seg", "SELECT * FROM t"))
     assert rows == [1, 3]
+
+
+def test_alter_column_errors(spark, tmp_path):
+    """SQLite's messages for a refused DROP COLUMN, and a refusal, before
+    anything changes, where a rename or drop would leave a CHECK,
+    generated column, trigger or view naming a missing column."""
+    store = SegmentStore(spark, str(tmp_path / "st"))
+    store.set_schema(
+        "s",
+        "CREATE TABLE t (a INTEGER PRIMARY KEY, b TEXT UNIQUE, c INT CHECK (c > 0),"
+        " d INT, e INT AS (d * 2), f INT, g INT, h INT, i INT, UNIQUE (f, h));"
+        "CREATE TABLE log (n INT);"
+        "CREATE TRIGGER tr AFTER INSERT ON t BEGIN INSERT INTO log VALUES (NEW.g); END;"
+        "CREATE VIEW v AS SELECT i FROM t;",
+    )
+    store.provision("seg", "s")
+    store.write("seg", "INSERT INTO t (a, b, c, d, f, g, h, i) VALUES (1, 'x', 1, 2, 3, 4, 5, 6)")
+    refused = {
+        "DROP COLUMN a": 'cannot drop PRIMARY KEY column: "a"',
+        "DROP COLUMN b": 'cannot drop UNIQUE column: "b"',
+        "DROP COLUMN c": "error in table t after drop column: no such column: c",
+        "DROP COLUMN d": "error in table t after drop column: no such column: d",
+        "DROP COLUMN f": "error in table t after drop column: no such column: f",
+        "DROP COLUMN g": "error in trigger tr after drop column: no such column: g",
+        "DROP COLUMN zz": 'no such column: "zz"',
+        "RENAME COLUMN c TO c2": "RENAME COLUMN c is not supported: table t refers to it",
+        "RENAME COLUMN d TO d2": "RENAME COLUMN d is not supported: table t refers to it",
+        "RENAME COLUMN g TO g2": "RENAME COLUMN g is not supported: trigger tr refers to it",
+        "RENAME COLUMN b TO a": "error in table t after rename: duplicate column name: a",
+    }
+    before = store.read("seg", "PRAGMA table_info(t)")
+    for alter, message in refused.items():
+        with pytest.raises(QueryRejected) as e:
+            store.write("seg", f"ALTER TABLE t {alter}")
+        assert str(e.value) == message
+    store.write("seg", "CREATE UNIQUE INDEX ig ON t (g)")
+    with pytest.raises(QueryRejected, match="error in index ig after drop column"):
+        store.write("seg", "ALTER TABLE t DROP COLUMN g")
+    with pytest.raises(QueryRejected, match="error in view v after drop column"):
+        store.write("seg", "ALTER TABLE t DROP COLUMN i")
+    assert store.read("seg", "PRAGMA table_info(t)") == before
+    assert store.read("seg", "SELECT * FROM t") == [
+        {"a": 1, "b": "x", "c": 1, "d": 2, "e": 4, "f": 3, "g": 4, "h": 5, "i": 6}
+    ]
 
 
 def test_partial_and_expression_unique_indexes_rejected(spark, tmp_path):

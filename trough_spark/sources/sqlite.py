@@ -190,10 +190,10 @@ def import_sqlite_segment(store, segment_id: str, sqlite_path: str, schema_id: s
         df = read_sqlite_shards(
             store.spark, {segment_id: sqlite_path}, table, schema
         ).drop("segment_id")
-        from trough_spark.store import TableSchema, _tableschema_to_json
+        from trough_spark.store import TableSchema
 
-        ts = TableSchema(name=table, fields=[(f.name, f.dataType) for f in schema.fields])
-        info.setdefault("extra_tables", {})[table] = _tableschema_to_json(ts)
-        store._save_meta()
+        store._save_table(
+            info, TableSchema(table, [(f.name, f.dataType) for f in schema.fields])
+        )
         df.write.mode("overwrite").parquet(store._partition_path(table, segment_id))
     return store

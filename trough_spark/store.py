@@ -32,6 +32,9 @@ engine is driver-coordinated) rather than by a lock table.
 from __future__ import annotations
 
 import contextlib
+import copy
+import dataclasses
+import decimal
 import itertools
 import json
 import os
@@ -95,6 +98,15 @@ def sqlite_type_to_spark(decl: str) -> T.DataType:
     return T.StringType()  # SQLite: anything else has, effectively, no affinity
 
 
+def _struct(spec: str) -> T.StructType:
+    """``"name type, ..."`` with JSON type names as a StructType, built in
+    Python: ``StructType.fromDDL`` is a JVM call."""
+    out = T.StructType()
+    for f in spec.split(","):
+        out.add(*f.split())
+    return out
+
+
 @dataclass
 class TableSchema:
     name: str
@@ -156,6 +168,10 @@ class TableSchema:
     # errors (probed); ANY columns are rejected loudly — a declared-schema
     # engine has no untyped storage class
     strict: bool = False
+    # CREATE UNIQUE INDEX constraints by lowercased index name -> (cols,
+    # collations), checked after ``uniques``; DROP INDEX removes one, and
+    # they move and go with their table, as SQLite's indexes do
+    unique_indexes: dict = field(default_factory=dict)
 
     def struct(self) -> T.StructType:
         return T.StructType([T.StructField(n, t, True) for n, t in self.fields])
@@ -168,13 +184,16 @@ class TableSchema:
         if self.primary_key:
             colls = list(self.pk_collations) or ["BINARY"] * len(self.primary_key)
             out.append((list(self.primary_key), colls))
-        out.extend((list(c), list(cl)) for c, cl in self.uniques)
+        out.extend(
+            (list(c), list(cl))
+            for c, cl in [*self.uniques, *self.unique_indexes.values()]
+        )
         return out
 
     def has_extended_uniqueness(self) -> bool:
         """True when conflict handling needs more than the binary pk fast
         path: extra UNIQUE constraints, or a non-BINARY pk collation."""
-        return bool(self.uniques) or any(
+        return bool(self.uniques or self.unique_indexes) or any(
             c != "BINARY" for c in self.pk_collations
         )
 
@@ -188,11 +207,6 @@ class Schema:
     sql: str
     tables: dict[str, TableSchema] = field(default_factory=dict)
     seed_statements: list[str] = field(default_factory=list)
-    # schema-level CREATE UNIQUE INDEX names -> table (round 8): attached
-    # to the table's uniques at parse time; tracked so a write-path DROP
-    # INDEX of one can be rejected loudly (a per-segment drop of a
-    # schema-wide constraint is not representable)
-    unique_index_names: dict = field(default_factory=dict)
 
 
 _CREATE_RE = re.compile(
@@ -1062,6 +1076,11 @@ _CREATE_WHAT_RE = re.compile(
 )
 
 
+def _if_not_exists(stmt: str) -> bool:
+    """True for ``CREATE ... IF NOT EXISTS name``."""
+    return re.match(r"(?is)[^(]*?\bIF\s+NOT\s+EXISTS\b", stmt) is not None
+
+
 def _create_kind(stmt: str) -> str:
     """What a CREATE statement creates — from the statement PREFIX, never a
     body word-search (a table named ``trigger_log`` or a trigger body
@@ -1152,9 +1171,9 @@ def parse_schema_sql(schema_id: str, sql: str) -> Schema:
                 schema.seed_statements.append(stmt)
             elif what in ("INDEX", "VIEW"):
                 # plain indexes are a no-op (Parquet stats + pruning
-                # replace them); UNIQUE indexes are CONSTRAINTS — attached
-                # to the table after the loop (the table must parse first);
-                # views recorded and materialized per segment at provision
+                # replace them); UNIQUE indexes are CONSTRAINTS — checked
+                # after the loop (the table must parse first); both they
+                # and views land in each segment by the seed replay
                 if what == "INDEX" and re.match(
                     r"^\s*CREATE\s+UNIQUE\s", stmt, re.IGNORECASE
                 ):
@@ -1168,24 +1187,18 @@ def parse_schema_sql(schema_id: str, sql: str) -> Schema:
             continue
         else:
             raise QueryRejected(f"invalid schema sql statement type {kind}: {stmt[:80]!r}")
+    by_lower = {t.lower(): ts for t, ts in schema.tables.items()}
     for stmt in unique_index_stmts:
-        iname, tbl, _u, entries = parse_create_index(stmt)
-        by_lower = {t.lower(): t for t in schema.tables}
+        _iname, tbl, _u, entries = parse_create_index(stmt)
         if tbl.lower() not in by_lower:
             raise QueryRejected(f"no such table: {tbl} in {stmt[:80]!r}")
-        ts = schema.tables[by_lower[tbl.lower()]]
-        cols, colls = _resolve_index_uniques(ts, entries, stmt)
-        ts.uniques.append((cols, colls))
-        schema.unique_index_names[iname.lower()] = ts.name
+        _resolve_index_uniques(by_lower[tbl.lower()], entries, stmt)
     return schema
 
 
 # ---------------------------------------------------------------------------
 # the store
 # ---------------------------------------------------------------------------
-
-_DEFAULT_SCHEMA = Schema(id="default", sql="")
-
 
 _LAST_ROWID_RE = re.compile(r"(?i)\blast_insert_rowid\s*\(\s*\)")
 
@@ -1795,7 +1808,7 @@ class SegmentStore:
         with self._file_lock("_meta"):
             tmp = self._registry_path + ".tmp"
             with open(tmp, "w") as f:
-                json.dump(self._meta, f, indent=1, sort_keys=True)
+                json.dump(self._meta, f, sort_keys=True, separators=(",", ":"))
             os.replace(tmp, self._registry_path)  # atomic, like the reference's
             # _COPYING_ + mv publish (sync.py:1130-1146)
 
@@ -1850,9 +1863,11 @@ class SegmentStore:
         schema = self.schema(schema_id)
         existing = self._meta["segments"].get(segment_id)
         if existing is None:
+            # the segment owns its copy of the table records from here on:
+            # re-registering the schema changes only later segments
             self._meta["segments"][segment_id] = {
                 "schema": schema_id,
-                "tables": sorted(schema.tables),
+                "tables": {t: _table_record(ts) for t, ts in schema.tables.items()},
             }
             self._save_meta()
             if schema.seed_statements:
@@ -1879,38 +1894,17 @@ class SegmentStore:
         return self._table_schema_from_info(self._segment_info(segment_id), table, segment_id)
 
     def _table_schema_from_info(self, info: dict, table: str, label: str) -> TableSchema:
-        # per-segment overrides (write-path DDL, ALTER) take precedence over
-        # the shared registered schema
-        extra = info.get("extra_tables", {})
-        if table in extra:
-            ts = _tableschema_from_json(extra[table])
-        else:
-            schema = self.schema(info["schema"])
-            if table not in schema.tables:
-                raise TableNotFound(f"no table {table!r} in segment {label!r}")
-            ts = schema.tables[table]
-        # segment-level CREATE UNIQUE INDEX constraints (round 8); skip any
-        # col-set the table already carries (an ALTER may have persisted a
-        # merged copy into extra_tables — merging again would duplicate)
-        have = {
-            tuple(sorted(c.lower() for c in ucols))
-            for ucols, _uc in ts.uniques
-        }
-        seg_u = [
-            (d["cols"], d["collations"])
-            for d in info.get("unique_indexes", {}).values()
-            if d["table"].lower() == table.lower()
-            and tuple(sorted(c.lower() for c in d["cols"])) not in have
-        ]
-        if seg_u:
-            import dataclasses
+        rec = info["tables"].get(table)
+        if rec is None:
+            raise TableNotFound(f"no table {table!r} in segment {label!r}")
+        return _record_table(table, rec)
 
-            ts = dataclasses.replace(ts, uniques=list(ts.uniques) + seg_u)
-        return ts
+    def _save_table(self, info: dict, ts: TableSchema) -> None:
+        info["tables"][ts.name] = _table_record(ts)
+        self._save_meta()
 
     def _segment_tables(self, segment_id: str) -> list[str]:
-        info = self._segment_info(segment_id)
-        return sorted(set(info.get("tables", [])) | set(info.get("extra_tables", {})))
+        return sorted(self._segment_info(segment_id)["tables"])
 
     # -- write path (A5; reference write.py:23-44) ---------------------------
 
@@ -5205,16 +5199,13 @@ class SegmentStore:
             # CREATE UNIQUE INDEX is a CONSTRAINT (probed: raises 'UNIQUE
             # constraint failed: t.col' exactly like table-level UNIQUE)
             iname, table, _u, entries = parse_create_index(stmt)
+            info = self._segment_info(segment_id)
+            if self._index_table(info, iname) is not None:
+                if _if_not_exists(stmt):
+                    return
+                raise QueryRejected(f"index {iname} already exists")
             ts = self._table_schema(segment_id, table)
             cols, colls = _resolve_index_uniques(ts, entries, stmt)
-            key = sorted(c.lower() for c in cols)
-            if any(
-                key == sorted(c.lower() for c in ucols)
-                for ucols, _uc in ts.unique_constraints()
-            ):
-                # already constrained (schema-level attach makes the seed
-                # replay of the same statement land here) — idempotent
-                return
             # SQLite: creating a unique index over existing duplicate data
             # fails with the constraint error (probed)
             folded = self._fold_cols(ts, cols, colls)
@@ -5236,13 +5227,8 @@ class SegmentStore:
                 )
                 if dup:
                     raise self._unique_error(table, cols)
-            info = self._segment_info(segment_id)
-            info.setdefault("unique_indexes", {})[iname.lower()] = {
-                "table": ts.name,
-                "cols": cols,
-                "collations": colls,
-            }
-            self._save_meta()
+            ts.unique_indexes[iname.lower()] = (cols, colls)
+            self._save_table(info, ts)
             return
         if what == "TRIGGER":
             tr = parse_create_trigger(stmt)
@@ -5259,9 +5245,7 @@ class SegmentStore:
                     f"cannot create {tr.timing} trigger on view: {tr.table}"
                 )
             trigs = info.setdefault("triggers", {})
-            if tr.name in trigs and "IF NOT EXISTS" in re.sub(
-                r"\s+", " ", stmt.upper()
-            ):
+            if tr.name in trigs and _if_not_exists(stmt):
                 return
             trigs[tr.name] = stmt
             self._save_meta()
@@ -5283,14 +5267,25 @@ class SegmentStore:
             raise QueryRejected(f"unsupported CREATE on write path: {stmt[:80]!r}")
         ts = parse_create_table(stmt)
         info = self._segment_info(segment_id)
-        info.setdefault("extra_tables", {})[ts.name] = _tableschema_to_json(ts)
-        self._save_meta()
+        if ts.name.lower() in map(str.lower, info["tables"]):
+            if _if_not_exists(stmt):
+                return
+            raise QueryRejected(f"table {ts.name} already exists")
+        self._save_table(info, ts)
+
+    def _index_table(self, info: dict, iname: str) -> TableSchema | None:
+        """The table whose record holds unique index ``iname``, if any."""
+        for t in info["tables"]:
+            ts = self._table_schema_from_info(info, t, "")
+            if iname.lower() in ts.unique_indexes:
+                return ts
+        return None
 
     def _write_path_alter(self, segment_id: str, stmt: str) -> None:
         """SQLite ALTER TABLE surface (SURVEY §2.B14): ADD COLUMN,
         RENAME TO, RENAME COLUMN, DROP COLUMN.  Schema changes land in the
-        per-segment override (different segments may diverge, exactly like
-        per-file SQLite schemas in the reference)."""
+        segment's own table record (different segments may diverge, exactly
+        like per-file SQLite schemas in the reference)."""
         m = re.match(
             r"^\s*ALTER\s+TABLE\s+(?P<name>[\w\"\[\]`]+)\s+(?P<rest>.+)$",
             stmt,
@@ -5303,188 +5298,137 @@ class SegmentStore:
         rest = m.group("rest").strip()
         ru = rest.upper()
         info = self._segment_info(segment_id)
+        path = self._partition_path(table, segment_id)
         if ru.startswith("ADD"):
             body = re.sub(r"^ADD\s+(COLUMN\s+)?", "", rest, flags=re.IGNORECASE)
-            parts = body.split(None, 1)
-            col = _unquote(parts[0])
-            decl = parts[1] if len(parts) > 1 else ""
-            decl_bare = _strip_parens_and_strings(decl.upper())
-            if ts.strict:
-                # STRICT tables restrict ADD COLUMN types too (probed DDL
-                # rule, SQLite's verbatim errors)
-                head = decl.split()[0].strip().upper() if decl.split() else ""
-                if not head:
-                    raise QueryRejected(f"missing datatype for {table}.{col}")
-                if head == "ANY":
-                    raise QueryRejected(
-                        f"ANY column {table}.{col} is not supported: this "
-                        "engine stores declared types (SURVEY 7.4)"
-                    )
-                if head not in ("INT", "INTEGER", "REAL", "TEXT", "BLOB"):
-                    raise QueryRejected(
-                        f'unknown datatype for {table}.{col}: "{head}"'
-                    )
-            if re.search(r"\bUNIQUE\b", decl_bare):
-                # SQLite's own error, verbatim
+            # the column parses as a one-column table of the same kind (its
+            # STRICT type rules included); SQLite's own errors, verbatim
+            add = parse_create_table(
+                f"CREATE TABLE {table} ({body}){' STRICT' if ts.strict else ''}"
+            )
+            [(col, typ)] = add.fields
+            if col.lower() in {n.lower() for n, _ in ts.fields}:
+                raise QueryRejected(f"duplicate column name: {col}")
+            if add.uniques:
                 raise QueryRejected("Cannot add a UNIQUE column")
-            if re.search(r"\bPRIMARY\s+KEY\b", decl_bare):
+            if add.primary_key:
                 raise QueryRejected("Cannot add a PRIMARY KEY column")
-            mcoll = re.search(r"\bCOLLATE\s+(\w+)", decl_bare)
-            if mcoll:
-                ts.collations[col.lower()] = _check_collation(mcoll.group(1))
-            # ALTER ADD of a generated column: SQLite allows VIRTUAL only
-            # ('cannot add a STORED column', verbatim — probed); the engine
-            # stores the computed values, so the add is a backfill rewrite
-            gen_m = re.search(
-                r"(?is)\b(?:GENERATED\s+ALWAYS\s+)?AS\s*\(", decl
-            )
-            gen_expr2 = None
-            if gen_m:
-                d3, k3 = 0, decl.index("(", gen_m.start())
-                for k3 in range(decl.index("(", gen_m.start()), len(decl)):
-                    if decl[k3] == "(":
-                        d3 += 1
-                    elif decl[k3] == ")":
-                        d3 -= 1
-                        if d3 == 0:
-                            break
-                gen_expr2 = decl[decl.index("(", gen_m.start()) + 1 : k3].strip()
-                if re.search(r"(?is)\bSTORED\b", _strip_parens_and_strings(decl)):
-                    # SQLite's own error, verbatim
-                    raise QueryRejected("cannot add a STORED column")
-                _validate_generated_expr(col, gen_expr2)
-            typ = sqlite_type_to_spark(
-                decl[: gen_m.start()] if gen_m else decl
-            )
-            dv = _parse_default(list(dialect.tokenize(decl))) if decl else None
-            if dv is not None:
-                if gen_expr2 is not None:
-                    raise QueryRejected("cannot use DEFAULT on a generated column")
-                ts.defaults[col] = dv
-            body_toks = list(dialect.tokenize(body))
-            ts.col_decls[col.lower()] = _col_decl_info(body_toks, body_toks[0])
+            if add.not_null and col not in add.defaults:
+                raise QueryRejected("Cannot add a NOT NULL column with default value NULL")
+            # SQLite adds VIRTUAL generated columns only; the engine stores
+            # the computed values, so the add is a backfill rewrite
+            gen_expr, stored = add.generated.get(col, (None, False))
+            if stored:
+                raise QueryRejected("cannot add a STORED column")
+            dv = add.defaults.get(col)
             ts.fields.append((col, typ))
-            if gen_expr2 is not None:
-                ts.generated[col] = (gen_expr2, False)
-                info.setdefault("extra_tables", {})[table] = _tableschema_to_json(ts)
-                self._save_meta()
-                if os.path.isdir(self._partition_path(table, segment_id)):
-                    # backfill: compute the new column over existing rows
-                    df = self._apply_generated_df(
-                        ts,
-                        self._read_partition(segment_id, table),
-                    )
-                    self._overwrite_partition(segment_id, table, df)
-                return
-            if dv is not None and os.path.isdir(self._partition_path(table, segment_id)):
-                # SQLite: ADD COLUMN .. DEFAULT backfills EXISTING rows with
-                # the default value (one bounded partition rewrite, same
-                # cost model as UPDATE); without a default, reads null-fill
+            ts.not_null += add.not_null
+            ts.checks += add.checks
+            ts.fks += add.fks
+            for part in ("defaults", "collations", "col_decls", "generated"):
+                getattr(ts, part).update(getattr(add, part))
+            self._save_table(info, ts)
+            if os.path.isdir(path) and (gen_expr is not None or dv is not None):
+                # SQLite computes a generated column, and fills in a DEFAULT,
+                # over EXISTING rows (one bounded partition rewrite, same
+                # cost model as UPDATE); without either, reads null-fill
                 # missing columns across mixed-generation files for free
-                info.setdefault("extra_tables", {})[table] = _tableschema_to_json(ts)
-                self._save_meta()
-                df = self._read_partition(segment_id, table).withColumn(
-                    col, F.lit(self._default_for(ts, col)).cast(typ)
-                )
+                df = self._read_partition(segment_id, table)
+                if gen_expr is not None:
+                    df = self._apply_generated_df(ts, df)
+                else:
+                    df = df.withColumn(col, F.lit(self._default_for(ts, col)).cast(typ))
                 self._overwrite_partition(segment_id, table, df)
-                return
+            return
         elif ru.startswith("RENAME TO"):
             new_name = _unquote(rest[len("RENAME TO") :].strip())
-            old_path = self._partition_path(table, segment_id)
+            if new_name.lower() in map(str.lower, info["tables"]):
+                raise QueryRejected(f"there is already another table or index with this name: {new_name}")
+            # the record, its unique indexes included, moves to the new name
+            del info["tables"][table]
             ts.name = new_name
-            info.setdefault("extra_tables", {})[new_name] = _tableschema_to_json(ts)
-            info.get("extra_tables", {}).pop(table, None)
-            if table in info.get("tables", []):
-                info["tables"].remove(table)
-            if os.path.isdir(old_path):
+            if os.path.isdir(path):
                 new_path = self._partition_path(new_name, segment_id)
                 os.makedirs(os.path.dirname(new_path), exist_ok=True)
-                shutil.move(old_path, new_path)
+                shutil.move(path, new_path)
                 if self._active_txn is not None:
-                    self._active_txn.record_move(old_path, new_path)
-            self._save_meta()
-            return
-        elif ru.startswith("RENAME COLUMN") or ru.startswith("RENAME"):
+                    self._active_txn.record_move(path, new_path)
+        elif ru.startswith("RENAME"):
             mm = re.match(r"RENAME\s+(?:COLUMN\s+)?(\S+)\s+TO\s+(\S+)", rest, re.IGNORECASE)
             if not mm:
                 raise QueryRejected(f"unsupported ALTER form: {stmt[:80]!r}")
-            old, new = _unquote(mm.group(1)), _unquote(mm.group(2))
+            old, new = _declared_column(ts, _unquote(mm.group(1))), _unquote(mm.group(2))
+            if new.lower() != old.lower() and new.lower() in {n.lower() for n, _ in ts.fields}:
+                raise QueryRejected(f"error in table {table} after rename: duplicate column name: {new}")
+            where = _column_refs(info, ts, old)
+            if where:
+                raise QueryRejected(f"RENAME COLUMN {old} is not supported: {where} refers to it")
             # read with the PRE-rename declared schema (fills missing columns
             # with nulls across mixed-generation files), then rewrite
             df = self._read_partition(segment_id, table).withColumnRenamed(old, new)
-            ts.fields = [(new if n == old else n, t) for n, t in ts.fields]
-            if old.lower() in ts.col_decls:
-                ts.col_decls[new.lower()] = ts.col_decls.pop(old.lower())
-            if os.path.isdir(self._partition_path(table, segment_id)):
-                info.setdefault("extra_tables", {})[table] = _tableschema_to_json(ts)
-                self._save_meta()
+            _rename_column(ts, old, new)
+            self._save_table(info, ts)
+            if os.path.isdir(path):
                 self._overwrite_partition(segment_id, table, df)
-                return
+            return
         elif ru.startswith("DROP"):
-            col = _unquote(re.sub(r"^DROP\s+(COLUMN\s+)?", "", rest, flags=re.IGNORECASE).strip())
-            ts.fields = [(n, t) for n, t in ts.fields if n != col]
-            ts.col_decls.pop(col.lower(), None)
+            col = re.sub(r"^DROP\s+(COLUMN\s+)?", "", rest, flags=re.IGNORECASE).strip()
+            col = _declared_column(ts, _unquote(col))
+            lo = col.lower()
+
+            def keyed(cols) -> bool:
+                return lo in map(str.lower, cols)
+
+            if len(ts.fields) == 1:
+                raise QueryRejected(f'cannot drop column "{col}": no other columns exist')
+            if keyed(ts.primary_key):
+                raise QueryRejected(f'cannot drop PRIMARY KEY column: "{col}"')
+            if any(len(u) == 1 and keyed(u) for u, _ in ts.uniques):
+                raise QueryRejected(f'cannot drop UNIQUE column: "{col}"')
+            where = next((f"index {i}" for i, (u, _) in ts.unique_indexes.items() if keyed(u)), None)
+            if any(keyed(u) for u, _ in ts.uniques) or any(
+                len(fk["from"]) > 1 and keyed(fk["from"]) for fk in ts.fks
+            ):
+                where = f"table {table}"
+            where = where or _column_refs(info, ts, col)
+            if where:
+                raise QueryRejected(f"error in {where} after drop column: no such column: {col}")
+            _drop_column(ts, col)
+            self._save_table(info, ts)
+            if os.path.isdir(path):
+                # rewritten without the column, as SQLite does: a column
+                # added back under its name starts empty
+                self._overwrite_partition(segment_id, table, self._read_partition(segment_id, table))
+            return
         else:
             raise QueryRejected(f"unsupported ALTER form: {stmt[:80]!r}")
-        info.setdefault("extra_tables", {})[table] = _tableschema_to_json(ts)
-        self._save_meta()
+        self._save_table(info, ts)
 
     def _write_path_drop(self, segment_id: str, stmt: str) -> None:
-        tm = re.match(
-            r"^\s*DROP\s+TRIGGER\s+(?:IF\s+EXISTS\s+)?(?P<name>[\w\"\[\]`]+)\s*$",
-            stmt,
-            re.IGNORECASE,
-        )
-        if tm:
-            info = self._segment_info(segment_id)
-            info.get("triggers", {}).pop(_unquote(tm.group("name")), None)
-            self._save_meta()
-            return
-        vm = re.match(
-            r"^\s*DROP\s+VIEW\s+(?:IF\s+EXISTS\s+)?(?P<name>[\w\"\[\]`]+)\s*$",
-            stmt,
-            re.IGNORECASE,
-        )
-        if vm:
-            info = self._segment_info(segment_id)
-            info.get("views", {}).pop(_unquote(vm.group("name")), None)
-            self._save_meta()
-            return
         m = re.match(
-            r"^\s*DROP\s+TABLE\s+(?:IF\s+EXISTS\s+)?(?P<name>[\w\"\[\]`]+)\s*$",
+            r"^\s*DROP\s+(?P<what>TABLE|INDEX|VIEW|TRIGGER)\s+(?:IF\s+EXISTS\s+)?"
+            r"(?P<name>[\w\"\[\]`]+)\s*$",
             stmt,
             re.IGNORECASE,
         )
-        im = re.match(
-            r"^\s*DROP\s+INDEX\s+(?:IF\s+EXISTS\s+)?(?P<name>[\w\"\[\]`]+)\s*$",
-            stmt,
-            re.IGNORECASE,
-        )
-        if im:
-            iname = _unquote(im.group("name")).lower()
-            info = self._segment_info(segment_id)
-            if iname in info.get("unique_indexes", {}):
-                # segment-level unique index: dropping removes the
-                # constraint (SQLite)
-                info["unique_indexes"].pop(iname)
-                self._save_meta()
-                return
-            schema = self.schema(info["schema"])
-            if iname in schema.unique_index_names:
-                # a schema-wide constraint cannot be dropped per segment —
-                # loud, not a silent keep-enforcing divergence
-                raise QueryRejected(
-                    f"cannot DROP schema-level UNIQUE INDEX {iname!r} on "
-                    "the write path (it is part of the registered schema)"
-                )
-            return  # plain index drop: no-op like its create
         if not m:
             return  # other DROP forms: no-op
-        table = _unquote(m.group("name"))
+        what, name = m.group("what").upper(), _unquote(m.group("name"))
         info = self._segment_info(segment_id)
-        info.get("extra_tables", {}).pop(table, None)
-        if table in info.get("tables", []):
-            info["tables"].remove(table)
+        if what == "INDEX":
+            # a unique index leaves its table's record; a plain index is a
+            # no-op like its create
+            ts = self._index_table(info, name)
+            if ts is not None:
+                del ts.unique_indexes[name.lower()]
+                self._save_table(info, ts)
+            return
+        if what != "TABLE":
+            info.get(f"{what.lower()}s", {}).pop(name, None)
+            self._save_meta()
+            return
+        table = name
+        info["tables"].pop(table, None)
         # SQLite: DROP TABLE also drops the table's triggers
         trigs = info.get("triggers", {})
         for name in [
@@ -5513,9 +5457,8 @@ class SegmentStore:
             return _local_frame(self.spark, [], ts.struct())
         return self._read_files(path, ts.struct())
 
-    _TABLE_INFO_SCHEMA = (
-        "cid INT, name STRING, type STRING, `notnull` INT, "
-        "dflt_value STRING, pk INT"
+    _TABLE_INFO_SCHEMA = _struct(
+        "cid integer, name string, type string, notnull integer, dflt_value string, pk integer"
     )
 
     def _pragma_table_info(
@@ -5563,9 +5506,9 @@ class SegmentStore:
             )
         return _local_frame(self.spark, rows, self._TABLE_INFO_SCHEMA)
 
-    _FK_LIST_SCHEMA = (
-        "id INT, seq INT, `table` STRING, `from` STRING, `to` STRING, "
-        "on_update STRING, on_delete STRING, `match` STRING"
+    _FK_LIST_SCHEMA = _struct(
+        "id integer, seq integer, table string, from string, to string, "
+        "on_update string, on_delete string, match string"
     )
 
     def _pragma_foreign_key_list(
@@ -5643,8 +5586,7 @@ class SegmentStore:
         runs against the snapshot's data files, table set, views, and schema
         AS OF that point — time travel without touching
         the live segment.  Snapshot files are immutable, so a time-travel
-        reader never races a concurrent writer.  (Named schemas resolve
-        against the current registry; per-segment DDL state is versioned.)"""
+        reader never races a concurrent writer."""
         pm = re.match(
             r"^\s*PRAGMA\s+(?P<which>table_info|foreign_key_list)\s*"
             r"\(\s*(?P<name>[^)]+?)\s*\)\s*;?\s*$",
@@ -5726,7 +5668,7 @@ class SegmentStore:
         data directory's stat fingerprint, declared schema and collations;
         a view's is its bound body, which names its tables' current views."""
         info, data_dir = self._info_as_of(segment_id, as_of)
-        tables = sorted(set(info.get("tables", [])) | set(info.get("extra_tables", {})))
+        tables = sorted(info["tables"])
         by_name = {t.lower(): t for t in tables}
         views = {v.lower(): vsql for v, vsql in info.get("views", {}).items()}
 
@@ -5777,7 +5719,7 @@ class SegmentStore:
             rows.append(("table", t, t, 0, f"CREATE TABLE {t} ({cols})"))
         for v, vsql in info.get("views", {}).items():
             rows.append(("view", v, v, 0, f"CREATE VIEW {v} AS {vsql}"))
-        schema = "type string, name string, tbl_name string, rootpage bigint, sql string"
+        schema = _struct("type string, name string, tbl_name string, rootpage long, sql string")
         key = ("master", tuple(rows))
         return self._cached_view(key, None, lambda: _local_frame(self.spark, rows, schema))
 
@@ -5917,9 +5859,9 @@ class SegmentStore:
             _validate_segment_id(seg)
         changed = False
         for seg in segs:
-            info = self._meta["segments"].setdefault(seg, {"schema": "default", "tables": []})
-            if table not in info.setdefault("extra_tables", {}):
-                info["extra_tables"][table] = _tableschema_to_json(ts)
+            info = self._meta["segments"].setdefault(seg, {"schema": "default", "tables": {}})
+            if table not in info["tables"]:
+                info["tables"][table] = _table_record(ts)
                 changed = True
         if changed:
             self._save_meta()
@@ -5944,10 +5886,8 @@ class SegmentStore:
         for seg in segs:
             _validate_segment_id(seg)
         for seg in segs:
-            self._meta["segments"].setdefault(seg, {"schema": "default", "tables": []})
-            self._meta["segments"][seg].setdefault("extra_tables", {})[table] = (
-                _tableschema_to_json(ts)
-            )
+            info = self._meta["segments"].setdefault(seg, {"schema": "default", "tables": {}})
+            info["tables"][table] = _table_record(ts)
         self._save_meta()
         self._write_partitioned(
             data.select(*[n for n, _ in fields], "segment_id").repartition(
@@ -6196,46 +6136,97 @@ def _find_sig_args(words, open_pos):
 # ---------------------------------------------------------------------------
 
 
-def _tableschema_to_json(ts: TableSchema) -> dict:
-    return {
-        "name": ts.name,
-        "fields": [[n, t.simpleString()] for n, t in ts.fields],
-        "autoincrement_col": ts.autoincrement_col,
-        "primary_key": ts.primary_key,
-        "checks": [list(c) for c in ts.checks],
-        "not_null": ts.not_null,
-        "defaults": ts.defaults,
-        "without_rowid": ts.without_rowid,
-        "col_decls": ts.col_decls,
-        "fks": ts.fks,
-        "uniques": [[list(c), list(cl)] for c, cl in ts.uniques],
-        "pk_collations": ts.pk_collations,
-        "collations": ts.collations,
-        "generated": {c: list(v) for c, v in ts.generated.items()},
-        "strict": ts.strict,
-    }
+def _table_record(ts: TableSchema) -> dict:
+    """A table's record in its segment's metadata, ready for JSON: types as
+    ``DataType.jsonValue()``, attributes at their defaults left out (the
+    name is the record's key)."""
+    rec = {"fields": [[n, t.jsonValue()] for n, t in ts.fields]}
+    for f in dataclasses.fields(TableSchema)[2:]:
+        v = getattr(ts, f.name)
+        if v != (f.default_factory() if f.default is dataclasses.MISSING else f.default):
+            rec[f.name] = v
+    return json.loads(json.dumps(rec))
 
 
-def _tableschema_from_json(d: dict) -> TableSchema:
-    from pyspark.sql.types import _parse_datatype_string
-
-    return TableSchema(
-        name=d["name"],
-        fields=[(n, _parse_datatype_string(t)) for n, t in d["fields"]],
-        autoincrement_col=d.get("autoincrement_col"),
-        primary_key=d.get("primary_key", []),
-        checks=[tuple(c) for c in d.get("checks", [])],
-        not_null=d.get("not_null", []),
-        defaults=d.get("defaults", {}),
-        without_rowid=d.get("without_rowid", False),
-        col_decls=d.get("col_decls", {}),
-        fks=d.get("fks", []),
-        uniques=[(list(c), list(cl)) for c, cl in d.get("uniques", [])],
-        pk_collations=d.get("pk_collations", []),
-        collations=d.get("collations", {}),
-        generated={c: tuple(v) for c, v in d.get("generated", {}).items()},
-        strict=d.get("strict", False),
+def _record_table(name: str, rec: dict) -> TableSchema:
+    """Decode a table record in pure Python (no JVM call); the result is a
+    fresh object the caller may change."""
+    attrs = copy.deepcopy({k: v for k, v in rec.items() if k != "fields"})
+    ts = TableSchema(
+        name,
+        [(n, T._parse_datatype_json_value(t)) for n, t in rec["fields"]],
+        **attrs,
     )
+    ts.checks = [tuple(c) for c in ts.checks]
+    ts.uniques = [tuple(u) for u in ts.uniques]
+    ts.generated = {c: tuple(v) for c, v in ts.generated.items()}
+    ts.unique_indexes = {i: tuple(u) for i, u in ts.unique_indexes.items()}
+    return ts
+
+
+def _declared_column(ts: TableSchema, col: str) -> str:
+    """``col`` as the table declares it; SQLite's error if it has none."""
+    for n, _t in ts.fields:
+        if n.lower() == col.lower():
+            return n
+    raise QueryRejected(f'no such column: "{col}"')
+
+
+def _column_refs(info: dict, ts: TableSchema, col: str) -> str | None:
+    """What names column ``col`` of ``ts`` besides its declaration: a
+    CHECK or generated expression ("table t"), a trigger or view body
+    that names the table too, or None."""
+    def names(sql: str) -> set[str]:
+        idents = ("word", "dquote", "bquote", "bracket")
+        return {_unquote(t.text).lower() for t in dialect.tokenize(sql) if t.kind in idents}
+
+    lo = col.lower()
+    if any(lo in names(e) for _l, e in ts.checks) or any(
+        lo in names(e) for e, _s in ts.generated.values()
+    ):
+        return f"table {ts.name}"
+    for kind in ("trigger", "view"):
+        for name, body in info.get(f"{kind}s", {}).items():
+            if {lo, ts.name.lower()} <= names(body):
+                return f"{kind} {name}"
+    return None
+
+
+def _rename_column(ts: TableSchema, old: str, new: str) -> None:
+    """Rename a column in every column-keyed part of a table schema."""
+    lo = old.lower()
+
+    def cols(names):
+        return [new if c.lower() == lo else c for c in names]
+
+    def rekey(d: dict, key: str) -> dict:
+        return {key if k.lower() == lo else k: v for k, v in d.items()}
+
+    ts.fields = [(new if n.lower() == lo else n, t) for n, t in ts.fields]
+    ts.primary_key = cols(ts.primary_key)
+    ts.not_null = cols(ts.not_null)
+    ts.uniques = [(cols(c), cl) for c, cl in ts.uniques]
+    ts.unique_indexes = {i: (cols(c), cl) for i, (c, cl) in ts.unique_indexes.items()}
+    ts.defaults = rekey(ts.defaults, new)
+    ts.generated = rekey(ts.generated, new)
+    ts.collations = rekey(ts.collations, new.lower())
+    ts.col_decls = rekey(ts.col_decls, new.lower())
+    if ts.autoincrement_col is not None:
+        ts.autoincrement_col = cols([ts.autoincrement_col])[0]
+    for fk in ts.fks:
+        fk["from"] = cols(fk["from"])
+
+
+def _drop_column(ts: TableSchema, col: str) -> None:
+    """Remove a column no key, CHECK or generated expression refers to;
+    its single-column foreign key goes with it, as in SQLite."""
+    lo = col.lower()
+    ts.fields = [(n, t) for n, t in ts.fields if n.lower() != lo]
+    ts.not_null = [c for c in ts.not_null if c.lower() != lo]
+    ts.fks = [fk for fk in ts.fks if lo not in map(str.lower, fk["from"])]
+    for d in (ts.defaults, ts.generated, ts.collations, ts.col_decls):
+        for k in [k for k in d if k.lower() == lo]:
+            del d[k]
 
 
 _NUMERIC_PREFIX_RE = re.compile(
@@ -6364,6 +6355,8 @@ def _coerce(v, typ: T.DataType):
         return int(v)
     if isinstance(typ, T.DoubleType):
         return float(v)
+    if isinstance(typ, T.DecimalType):
+        return decimal.Decimal(str(v))
     if isinstance(typ, T.StringType):
         return str(v)
     if isinstance(typ, T.BooleanType):
