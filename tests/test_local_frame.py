@@ -2,8 +2,9 @@
 
 The helper replaced row-list ``spark.createDataFrame`` everywhere in
 ``store.py``; these tests pin that its rows and errors equal the row-list
-path's for every declared column type, and that a plain INSERT stays on
-the local-relation write path (no Python worker, two Spark jobs, one file).
+path's for every declared column type, that a file a plain INSERT writes
+with pyarrow reads back like a Spark-written one, and that a plain INSERT
+runs no Spark job and adds one file.
 """
 
 from __future__ import annotations
@@ -12,14 +13,21 @@ import datetime as dt
 import os
 import re
 import time
+from decimal import Decimal
 
+import pyarrow.parquet as pq
 import pyspark.sql.types as T
 import pytest
 from pyspark.sql import Row
 
 from trough_spark import store as store_mod
 from trough_spark.dialect import QueryRejected
-from trough_spark.store import SegmentStore, _local_frame, sqlite_type_to_spark
+from trough_spark.store import (
+    SegmentStore,
+    _arrow_table,
+    _local_frame,
+    sqlite_type_to_spark,
+)
 
 
 def _outcome(fn):
@@ -82,6 +90,39 @@ def test_local_frame_matches_row_list_path(spark, non_utc_tz, decl, rows):
     assert new == old
 
 
+_FILE_CASES = [(sqlite_type_to_spark(d), rows) for d, rows in _CASES] + [
+    (T.DecimalType(10, 2), [(Decimal("1.25"),), (Decimal("-99999999.99"),), (None,)]),
+    (T.DecimalType(10, 2), [(Decimal("1.23456"),)]),  # more scale than declared
+    (T.DecimalType(38, 6), [(Decimal("12345678901234567890123456789012.123456"),)]),
+    (T.DateType(), [(dt.date(1, 1, 1),), (dt.date(1582, 10, 10),), (None,)]),
+    (T.TimestampType(), [(dt.datetime(1900, 1, 1, 0, 0, 1),), (None,)]),
+]
+
+
+@pytest.mark.parametrize(
+    "typ,rows", _FILE_CASES, ids=[f"{t.simpleString()}-{i}" for i, (t, _) in enumerate(_FILE_CASES)]
+)
+def test_pyarrow_append_reads_like_spark_append(spark, non_utc_tz, tmp_path, typ, rows):
+    """A plain INSERT's file, written with pyarrow, reads back through
+    Spark to the rows a Spark append of the same rows reads back to."""
+    struct = T.StructType(
+        [T.StructField("ord", T.LongType(), False), T.StructField("v", typ, True)]
+    )
+    rows = [(i,) + r for i, r in enumerate(rows)]
+
+    def read_back(path, append):
+        append(path)
+        return spark.read.schema(struct).parquet(path).orderBy("ord").collect()
+
+    spark_rows = _outcome(lambda: read_back(
+        str(tmp_path / "spark"), lambda p: _local_frame(spark, rows, struct).write.parquet(p)
+    ))
+    arrow_rows = _outcome(lambda: read_back(
+        str(tmp_path / "arrow"), lambda p: SegmentStore._append_file(_arrow_table(rows, struct), p)
+    ))
+    assert arrow_rows == spark_rows
+
+
 def test_local_frame_rejects_null_in_non_nullable_like_row_list_path(spark):
     struct = T.StructType([T.StructField("k", T.LongType(), False)])
     old = _outcome(lambda: spark.createDataFrame([(None,)], struct).collect())
@@ -115,40 +156,36 @@ def _values(ids):
     return ", ".join(f"({i}, 'n{i}', {i % 7})" for i in ids)
 
 
-def test_plain_insert_is_a_local_relation_in_two_jobs_and_one_file(
-    spark, tmp_path, monkeypatch
-):
-    store = SegmentStore(spark, str(tmp_path / "store"))
+def test_plain_insert_runs_no_spark_job_and_adds_one_file(spark, tmp_path):
+    """Each plain INSERT script appends exactly one parquet file and runs
+    no Spark job: not its key check, not its append, and not a new
+    process's first read of the autoincrement high-water mark."""
+    root = str(tmp_path / "store")
+    store = SegmentStore(spark, root)
     store.set_schema("s", PK_DDL + ";")
     store.provision("seg", "s")
-    store.write("seg", f"INSERT INTO items (id, name, qty) VALUES {_values(range(1, 6))}")
-
-    plans = []
-    write_files = store._write_files
-
-    def spy(df, path, mode):
-        plans.append(df._jdf.queryExecution().optimizedPlan().toString())
-        return write_files(df, path, mode)
-
-    monkeypatch.setattr(store, "_write_files", spy)
     part = store._partition_path("items", "seg")
-    files_before = {f for f in os.listdir(part) if f.endswith(".parquet")}
     sc = spark.sparkContext
-    sc.setJobGroup("local-frame-insert", "5-row INSERT")
+    added = []
+    sc.setJobGroup("arrow-insert", "plain INSERTs")
     try:
-        store.write(
-            "seg", f"INSERT INTO items (id, name, qty) VALUES {_values(range(6, 11))}"
-        )
+        for st, sql in [
+            (store, f"INSERT INTO items (id, name, qty) VALUES {_values(range(1, 6))}"),
+            (store, f"INSERT INTO items (id, name, qty) VALUES {_values(range(6, 11))}"),
+            (SegmentStore(spark, root), "INSERT INTO items (name, qty) VALUES ('auto', 1)"),
+        ]:
+            before = set(os.listdir(part)) if os.path.isdir(part) else set()
+            st.write("seg", sql)
+            added.append(set(os.listdir(part)) - before)
     finally:
         sc.setJobGroup("", "")
-    jobs = sc.statusTracker().getJobIdsForGroup("local-frame-insert")
-    files_after = {f for f in os.listdir(part) if f.endswith(".parquet")}
-
-    assert len(plans) == 1 and "LocalRelation" in plans[0]
-    assert len(jobs) <= 2, jobs
-    assert len(files_after - files_before) == 1
+    assert sc.statusTracker().getJobIdsForGroup("arrow-insert") == []
+    assert [len(a) for a in added] == [1, 1, 1]
+    # nothing but the appended files: no temporary, checksum or marker file
+    assert sorted(os.listdir(part)) == sorted(set().union(*added))
+    assert all(re.fullmatch(r"part-[0-9a-f-]{36}\.snappy\.parquet", f) for f in os.listdir(part))
     assert [r["id"] for r in store.read("seg", "SELECT id FROM items ORDER BY id")] == (
-        list(range(1, 11))
+        list(range(1, 12))
     )
 
 
@@ -168,3 +205,25 @@ def test_plain_insert_probes_still_raise(spark, tmp_path, values, msg):
     with pytest.raises(QueryRejected, match=re.escape(msg)):
         store.write("seg", f"INSERT INTO items (id, name, qty) VALUES {values}")
     assert len(store.read("seg", "SELECT id FROM items")) == 5
+
+
+def test_key_check_reads_spark_int96_timestamps(spark, non_utc_tz, tmp_path):
+    """Spark writes TIMESTAMP columns as INT96; a plain INSERT's key check
+    reads them as the instants its own rows convert to."""
+    store = SegmentStore(spark, str(tmp_path / "store"))
+    store.set_schema("s", "CREATE TABLE t (at TIMESTAMP PRIMARY KEY, v INTEGER);")
+    store.provision("seg", "s")
+    path = store._partition_path("t", "seg")
+    rows = [(dt.datetime(2020, 11, 1, 1, 30), 1), (dt.datetime(1850, 6, 1, 12), 2)]
+    store._write_files(_local_frame(spark, rows, store._table_schema("seg", "t").struct()), path, "append")
+    types = {
+        pq.ParquetFile(os.path.join(path, f)).schema.column(0).physical_type
+        for f in os.listdir(path)
+        if f.endswith(".parquet")
+    }
+    assert types == {"INT96"}
+    for at in ("2020-11-01 01:30:00", "1850-06-01 12:00:00"):
+        with pytest.raises(QueryRejected, match=re.escape("UNIQUE constraint failed: t.at")):
+            store.write("seg", f"INSERT INTO t VALUES ('{at}', 3)")
+    store.write("seg", "INSERT INTO t VALUES ('2020-11-01 01:30:01', 4)")
+    assert [r["v"] for r in store.read("seg", "SELECT v FROM t ORDER BY v")] == [1, 2, 4]

@@ -6,6 +6,7 @@ only touches the store root)."""
 
 from __future__ import annotations
 
+import json
 import os
 import subprocess
 import sys
@@ -156,3 +157,61 @@ def test_maintenance_races_writer_cross_process(spark, tmp_path):
     store.restore("seg_race", version)
     rows = store.read("seg_race", "SELECT v FROM kv ORDER BY id")
     assert rows == [{"v": "before"}, {"v": "after"}]
+
+
+# Child program: plain INSERTs of one key each, through the real
+# ``SegmentStore.write``, on a store with no Spark session at all (a plain
+# VALUES insert runs no Spark); prints the keys it was allowed to insert.
+INSERT_CHILD = r"""
+import json, os, sys, time
+sys.path.insert(0, sys.argv[1])
+from trough_spark.dialect import QueryRejected
+from trough_spark.store import SegmentStore
+
+root, keys = sys.argv[2], json.loads(sys.argv[3])
+store = SegmentStore.__new__(SegmentStore)
+store.root, store.lock_timeout = root, 60.0
+store._registry_path = os.path.join(root, "_meta.json")
+store._meta = store._load_meta()
+store._hwm, store._last_auto, store._active_txn, store._ret = {}, {}, None, None
+while not os.path.exists(os.path.join(root, "go")):
+    time.sleep(0.01)
+accepted = []
+for k in keys:
+    try:
+        store.write("seg", f"INSERT INTO t VALUES ({k}, {os.getpid()})")
+        accepted.append(k)
+    except QueryRejected as e:
+        assert str(e) == "UNIQUE constraint failed: t.id", e
+print(json.dumps(accepted))
+"""
+
+
+def test_two_processes_never_both_accept_a_key(spark, tmp_path):
+    """Two interpreters insert the same keys into one segment, in opposite
+    orders: each key is accepted exactly once, and a fresh reader sees
+    every key once, written by the process that was told it landed."""
+    from trough_spark.store import SegmentStore
+
+    root = str(tmp_path / "store")
+    store = SegmentStore(spark, root)
+    store.set_schema("s", "CREATE TABLE t (id INTEGER PRIMARY KEY, pid INTEGER);")
+    store.provision("seg", "s")
+    keys = list(range(40))
+    children = [
+        subprocess.Popen(
+            [sys.executable, "-c", INSERT_CHILD, REPO, root, json.dumps(order)],
+            stdout=subprocess.PIPE,
+            text=True,
+        )
+        for order in (keys, keys[::-1])
+    ]
+    open(os.path.join(root, "go"), "w").close()
+    outs = [c.communicate(timeout=120)[0] for c in children]
+    assert [c.returncode for c in children] == [0, 0]
+    accepted = [json.loads(o) for o in outs]
+    assert not set(accepted[0]) & set(accepted[1])
+    assert sorted(accepted[0] + accepted[1]) == keys
+    rows = SegmentStore(spark, root).read("seg", "SELECT id, pid FROM t ORDER BY id")
+    owner = {k: c.pid for c, got in zip(children, accepted) for k in got}
+    assert [(r["id"], r["pid"]) for r in rows] == [(k, owner[k]) for k in keys]

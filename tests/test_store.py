@@ -4,6 +4,7 @@ re-asserted against the Spark-native store (SURVEY §5, FIXTURES.md F1-F3, F6)."
 from __future__ import annotations
 
 import gc
+import json
 import weakref
 from collections import OrderedDict
 
@@ -438,6 +439,32 @@ def test_write_script_rollback_on_failure(store):
     assert len(store.read("seg_tx", "SELECT * FROM kv")) == 3
 
 
+def test_failed_ddl_script_restores_only_its_segment_entry(spark, store):
+    """A script's rollback restores the registry entry of the segment it
+    wrote, on disk too, and leaves every other segment's entry as it was
+    (the same object: nothing else was copied or replaced)."""
+    store.set_schema("tx", "create table kv (k INTEGER PRIMARY KEY, v TEXT);")
+    store.provision("seg_a", "tx")
+    store.provision("seg_b", "tx")
+    store.write("seg_b", "CREATE TABLE only_b (x INTEGER)")
+    entry_a = json.loads(json.dumps(store._meta["segments"]["seg_a"]))
+    entry_b = store._meta["segments"]["seg_b"]
+    snapshot_b = json.loads(json.dumps(entry_b))
+    with pytest.raises(QueryRejected, match="UNIQUE constraint failed: kv.k"):
+        store.write(
+            "seg_a",
+            "CREATE TABLE t2 (x INTEGER); ALTER TABLE kv ADD COLUMN w TEXT;"
+            "CREATE UNIQUE INDEX iv ON kv (v); INSERT INTO kv VALUES (1, 'a', 'b');"
+            "INSERT INTO kv VALUES (1, 'c', 'd');",
+        )
+    assert store._meta["segments"]["seg_a"] == entry_a
+    assert store._meta["segments"]["seg_b"] is entry_b and entry_b == snapshot_b
+    reopened = SegmentStore(spark, store.root)
+    assert reopened._meta["segments"] == {"seg_a": entry_a, "seg_b": snapshot_b}
+    assert reopened.read("seg_a", "SELECT * FROM kv") == []
+    reopened.write("seg_a", "INSERT INTO kv VALUES (1, 'a')")
+
+
 def test_cross_process_write_lock(store, spark):
     """A6/write-lock parity (reference write.py:55-57): a second writer on
     the same root is blocked while the lock is held, stale locks from dead
@@ -531,18 +558,19 @@ def test_midscript_io_failure_rolls_back(store, monkeypatch):
     before_b = store.read("seg_io", "SELECT * FROM b ORDER BY k")
 
     calls = {"n": 0}
-    orig = SegmentStore._write_files
+    orig = SegmentStore._append_file
 
-    def flaky(self, df, path, mode):
+    def flaky(batch, path):
         calls["n"] += 1
         if calls["n"] == 2:  # first table's append lands, second one dies
             raise OSError("No space left on device (injected)")
-        return orig(self, df, path, mode)
+        return orig(batch, path)
 
-    monkeypatch.setattr(SegmentStore, "_write_files", flaky)
+    monkeypatch.setattr(SegmentStore, "_append_file", staticmethod(flaky))
     with pytest.raises(OSError, match="injected"):
         store.write("seg_io", "INSERT INTO a VALUES (2); INSERT INTO b VALUES (20);")
-    monkeypatch.setattr(SegmentStore, "_write_files", orig)
+    monkeypatch.setattr(SegmentStore, "_append_file", staticmethod(orig))
+    assert calls["n"] == 2
 
     assert store.read("seg_io", "SELECT * FROM a ORDER BY k") == before_a
     assert store.read("seg_io", "SELECT * FROM b ORDER BY k") == before_b

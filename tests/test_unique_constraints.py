@@ -287,6 +287,55 @@ CASES = [
          "CREATE UNIQUE INDEX ix ON t (b)", "INSERT INTO t VALUES (1,1)",
          "INSERT INTO t VALUES (2,1)"],
     ),
+    # a plain INSERT checks its keys against every file of the partition:
+    # INSERT..SELECT rows are Spark-written, VALUES rows pyarrow-written
+    (
+        "unique index on an added column over older files",
+        "CREATE TABLE t (id INTEGER PRIMARY KEY, a TEXT)",
+        ["INSERT INTO t SELECT 1, 'p'", "INSERT INTO t VALUES (2,'q')",
+         "ALTER TABLE t ADD COLUMN b TEXT", "CREATE UNIQUE INDEX ib ON t (b)",
+         "INSERT INTO t VALUES (3,'r','x')", "INSERT INTO t VALUES (4,'s','x')",
+         "INSERT INTO t VALUES (5,'t',NULL)", "INSERT INTO t SELECT 6, 'u', 'y'",
+         "INSERT INTO t VALUES (7,'v','y')"],
+    ),
+    (
+        "nocase and rtrim keys with non-ascii text",
+        "CREATE TABLE t (id INTEGER PRIMARY KEY, a TEXT UNIQUE COLLATE NOCASE, "
+        "b TEXT UNIQUE COLLATE RTRIM)",
+        ["INSERT INTO t SELECT 1, 'Äbc', 'ü '", "INSERT INTO t VALUES (2,'äbc','x')",
+         "INSERT INTO t VALUES (3,'ÄBC','y')", "INSERT INTO t VALUES (4,'z','ü')",
+         "INSERT INTO t VALUES (5,'w','Ü')", "INSERT INTO t VALUES (6,'v','ü\t')",
+         "INSERT INTO t VALUES (7,'ÄbC ','ü  ')"],
+    ),
+    (
+        "double keys 0.0 and -0.0 conflict",
+        "CREATE TABLE t (id INTEGER PRIMARY KEY, d REAL UNIQUE)",
+        ["INSERT INTO t SELECT 1, 0.0", "INSERT INTO t VALUES (2,-0.0)",
+         "INSERT INTO t VALUES (3,-0.5)", "INSERT INTO t SELECT 4, -1.5",
+         "INSERT INTO t VALUES (5,-1.5)", "INSERT INTO t VALUES (6,-1.5e0)"],
+    ),
+    # SQLite table names are case-insensitive on every write statement
+    (
+        "table names match case-insensitively",
+        "CREATE TABLE t (a INTEGER PRIMARY KEY, b TEXT)",
+        ["INSERT INTO T VALUES (1,'x')", "CREATE UNIQUE INDEX iu ON T (b)",
+         "INSERT INTO T VALUES (2,'x')", "INSERT INTO \"T\" VALUES (3,'y')",
+         "UPDATE T SET b = 'z' WHERE a = 3", "DELETE FROM T WHERE a = 1",
+         "INSERT INTO t VALUES (4,'x')", "INSERT INTO T VALUES (4,'w')"],
+    ),
+    (
+        "rename to carries the table's triggers",
+        "CREATE TABLE t (n INT); CREATE TABLE x (id INTEGER PRIMARY KEY)",
+        ["CREATE TRIGGER tr AFTER INSERT ON x BEGIN INSERT INTO t VALUES (new.id); END",
+         "ALTER TABLE x RENAME TO u", "INSERT INTO u VALUES (1)",
+         "ALTER TABLE U RENAME TO w", "INSERT INTO W VALUES (2)"],
+    ),
+    (
+        "drop trigger matches its name case-insensitively",
+        "CREATE TABLE t (n INT); CREATE TABLE x (id INT)",
+        ["CREATE TRIGGER tr AFTER INSERT ON x BEGIN INSERT INTO t VALUES (new.id); END",
+         "INSERT INTO x VALUES (1)", "DROP TRIGGER TR", "INSERT INTO x VALUES (2)"],
+    ),
 ]
 
 

@@ -13,9 +13,9 @@ layout, so:
   worst-case-bounded-latency argument as the reference, README.rst:16-31);
 - a regex fan-out is ONE Spark query over the matching partitions, with real
   cross-segment merge (upgrade over the reference's scatter-only shell);
-- a write script is one atomic commit per statement batch (Spark's file
-  commit protocol replaces the reference's ``._COPYING_`` + rename dance,
-  sync.py:1130-1146);
+- a write script is one atomic commit per statement batch (a hidden file
+  renamed into place, like the reference's ``._COPYING_`` + rename dance,
+  sync.py:1130-1146, or Spark's file commit protocol);
 - promotion is a no-op that reports the durable path — data is already on
   the cluster FS at commit (the whole stale-sync/promotion machinery of
   sync.py collapses, SURVEY.md §4.3).
@@ -43,12 +43,14 @@ import secrets
 import shutil
 import socket
 import time
+import uuid
 import weakref
 from collections import OrderedDict
 from dataclasses import dataclass, field
 
 from py4j.protocol import Py4JError
 import pyarrow as pa
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame, Row, SparkSession
@@ -1620,15 +1622,16 @@ class _WriteTxn:
     trough/write.py:39).  Before the first mutation of each partition the
     file listing is snapshotted (appends are rolled back by deleting files
     not in the snapshot); partition overwrites keep their `._old` backup
-    until commit; the metadata dict and auto-increment marks are restored
-    wholesale on rollback."""
+    until commit; the written segment's registry entry (a script changes
+    no other) and the auto-increment marks are restored on rollback."""
 
-    def __init__(self, store: "SegmentStore"):
+    def __init__(self, store: "SegmentStore", segment_id: str):
         self.store = store
         self.snapshots: dict[str, set[str] | None] = {}
         self.overwrites: list[tuple[str, str]] = []  # (live_path, backup_path)
         self.moves: list[tuple[str, str]] = []  # (src, dst) dir renames
-        self.meta_before = json.loads(json.dumps(store._meta))
+        self.segment_id = segment_id
+        self.entry_before = json.loads(json.dumps(store._meta["segments"][segment_id]))
         self.hwm_before = dict(store._hwm)
         self.last_auto_before = dict(store._last_auto)
 
@@ -1683,8 +1686,10 @@ class _WriteTxn:
                 for base, _, _ in os.walk(path, topdown=False):
                     if base != path and not os.listdir(base):
                         os.rmdir(base)
-        self.store._meta = self.meta_before
-        self.store._save_meta()
+        segments = self.store._meta["segments"]
+        if segments[self.segment_id] != self.entry_before:
+            segments[self.segment_id] = self.entry_before
+            self.store._save_meta()
         self.store._hwm = self.hwm_before
         self.store._last_auto = self.last_auto_before
 
@@ -1894,10 +1899,16 @@ class SegmentStore:
         return self._table_schema_from_info(self._segment_info(segment_id), table, segment_id)
 
     def _table_schema_from_info(self, info: dict, table: str, label: str) -> TableSchema:
-        rec = info["tables"].get(table)
-        if rec is None:
+        name = _declared_name(info["tables"], table)
+        if name is None:
             raise TableNotFound(f"no table {table!r} in segment {label!r}")
-        return _record_table(table, rec)
+        return _record_table(name, info["tables"][name])
+
+    def _stmt_table(self, segment_id: str, m: re.Match) -> str:
+        """The table a statement's ``name`` group names, as its segment
+        spells it."""
+        name = _unquote(m.group("name"))
+        return _declared_name(self._segment_info(segment_id)["tables"], name) or name
 
     def _save_table(self, info: dict, ts: TableSchema) -> None:
         info["tables"][ts.name] = _table_record(ts)
@@ -1951,7 +1962,7 @@ class SegmentStore:
         ret_out: list[dict] = []
         lock = self._file_lock(f"segment-{segment_id}")
         lock.__enter__()
-        self._active_txn = _WriteTxn(self)
+        self._active_txn = _WriteTxn(self, segment_id)
         try:
             for stmt, ret in stmts:
                 # same connection-state substitution the read path does, so
@@ -2405,7 +2416,7 @@ class SegmentStore:
         (returns True); upserts and INSERT..SELECT flush and run immediately."""
         m = self._match_insert(stmt)
         mode = self._insert_mode(m)
-        table = _unquote(m.group("name"))
+        table = self._stmt_table(segment_id, m)
         ts = self._table_schema(segment_id, table)
         gen_lower = {c.lower() for c in ts.generated}
         # the implicit column list EXCLUDES generated columns (probed:
@@ -2519,55 +2530,24 @@ class SegmentStore:
                     self._reject_generated_targets(ts, list(sets), "UPDATE")
                 else:
                     sets = None
-                if ts.has_extended_uniqueness():
+                if ts.has_extended_uniqueness() or self._ret_capturing(table):
                     # UNIQUE constraints / collations participate — probed
-                    # per-constraint semantics need the sequential path
+                    # per-constraint semantics — or RETURNING needs per-row
+                    # outcomes (inserted / updated / skipped) in statement
+                    # order, which the batch joins below cannot say: the
+                    # sequential resolver gives exactly SQLite's semantics
                     if sets is not None:
+                        # without extended uniqueness the guard is the pk,
+                        # as in the batch _upsert_update
                         declared = {n.lower() for n, _ in ts.fields}
-                        guard = (
-                            set(c.lower() for c in cons[target_idx][0])
-                            if target_idx is not None
-                            else {
-                                c.lower()
-                                for ucols, _uc in cons
-                                for c in ucols
-                            }
-                        )
+                        targets = cons if target_idx is None else [cons[target_idx]]
+                        guard = {c.lower() for ucols, _uc in targets for c in ucols}
                         for c in sets:
                             if c not in declared:
                                 raise QueryRejected(f"no such column: {c}")
                             if c in guard:
                                 raise QueryRejected(
-                                    "updating the conflict-target key is "
-                                    "unsupported"
-                                )
-                    self._conflict_rows_sequential(
-                        segment_id,
-                        table,
-                        ts,
-                        rows,
-                        action="NOTHING" if sets is None else "UPDATE",
-                        target_idx=target_idx,
-                        sets=sets,
-                        where=conflict.group("where"),
-                    )
-                    return False
-                if self._ret_capturing(table):
-                    # RETURNING needs per-row outcomes (inserted / updated /
-                    # skipped) in statement order — the sequential resolver
-                    # produces exactly SQLite's semantics and captures as it
-                    # goes; the batch joins below cannot say which rows landed
-                    if sets is not None:
-                        # same guard the batch _upsert_update applies, so
-                        # adding RETURNING never widens what's accepted
-                        pk_lower = {k.lower() for k in ts.primary_key}
-                        for c in sets:
-                            if c not in {n.lower() for n, _ in ts.fields}:
-                                raise QueryRejected(f"no such column: {c}")
-                            if c in pk_lower:
-                                raise QueryRejected(
-                                    "updating the conflict-target key is "
-                                    "unsupported"
+                                    "updating the conflict-target key is unsupported"
                                 )
                     self._conflict_rows_sequential(
                         segment_id,
@@ -3138,24 +3118,17 @@ class SegmentStore:
         """Write ``df`` as parquet into the partition directory ``path``."""
         df.write.mode(mode).parquet(path)
 
-    def _read_files(self, path: str, schema: T.StructType | None = None) -> DataFrame:
-        """Read the partition directory ``path``; a declared ``schema``
-        null-fills columns its files lack (ALTER TABLE ADD COLUMN)."""
-        r = self.spark.read
-        if schema is not None:
-            r = r.schema(schema)
-        return r.parquet(path)
+    def _read_files(self, path: str, schema: T.StructType) -> DataFrame:
+        """Read the partition directory ``path`` as the declared ``schema``,
+        which null-fills columns its files lack (ALTER TABLE ADD COLUMN)."""
+        return self.spark.read.schema(schema).parquet(path)
 
     def _init_hwm(self, key: tuple[str, str], table: str, ts: TableSchema) -> None:
         """Lazily seed the autoincrement high-water mark from storage."""
         if key not in self._hwm:
             path = self._partition_path(table, key[0])
-            if os.path.isdir(path):
-                df = self._read_files(path)
-                mx = df.agg(F.max(ts.autoincrement_col)).collect()[0][0]
-                self._hwm[key] = int(mx or 0)
-            else:
-                self._hwm[key] = 0
+            [ids] = _file_columns(path, T.StructType([ts.struct()[ts.autoincrement_col]]))
+            self._hwm[key] = max((i for i in ids if i is not None), default=0)
 
     def _next_id(self, segment_id: str, table: str, ts: TableSchema) -> int:
         """AUTOINCREMENT emulation (SURVEY §7.4 #2): per-segment high-water
@@ -3174,20 +3147,43 @@ class SegmentStore:
             self._active_txn.before_append(self._partition_path(table, segment_id))
 
     def _flush_inserts(self, segment_id: str, pending: dict[str, list[Row]]) -> None:
+        """Append each table's staged VALUES rows as ONE file, with no
+        Spark job unless the table has CHECKs.  The checks run in SQLite's
+        order: keys, then CHECK / NOT NULL."""
         for table, rows in pending.items():
             if not rows:
                 continue
             ts = self._table_schema(segment_id, table)
-            self._assert_pk_unique_rows(segment_id, table, ts, rows)
-            # one file per flush: a local frame spreads even 5 rows over one
-            # partition per core, and every file costs later point reads a
-            # scan task (the reference's segment is ONE SQLite file)
-            df = _local_frame(self.spark, rows, ts.struct()).coalesce(1)
-            self._assert_constraints(ts, df)
             path = self._partition_path(table, segment_id)
+            batch = _arrow_table(rows, ts.struct())
+            self._assert_keys_new(ts, table, path, batch)
+            if ts.checks:
+                self._assert_constraints(ts, _local_frame(self.spark, batch, ts.struct()))
+            else:
+                for col in ts.not_null:
+                    if col != ts.autoincrement_col and batch[_declared_column(ts, col)].null_count:
+                        raise QueryRejected(f"NOT NULL constraint failed: {ts.name}.{col}")
             self._txn_before_write(table, segment_id)
-            self._write_files(df, path, "append")
+            self._append_file(batch, path)
         pending.clear()
+
+    @staticmethod
+    def _append_file(batch: pa.Table, path: str) -> None:
+        """Write ``batch`` into the partition directory ``path`` as one new
+        parquet file under a hidden name, then rename it, so no reader
+        lists a partial file (dictionary pages enlarge files this small)."""
+        os.makedirs(path, exist_ok=True)
+        name = f"part-{uuid.uuid4()}.snappy.parquet"
+        tmp = os.path.join(path, f".{name}.tmp")
+        try:
+            pq.write_table(
+                batch, tmp, compression="snappy", store_schema=False, use_dictionary=False
+            )
+            os.replace(tmp, os.path.join(path, name))
+        except BaseException:
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(tmp)
+            raise
 
     def _row_violates(self, ts: TableSchema, row) -> bool:
         """Whether ONE candidate row violates a declared CHECK / NOT NULL
@@ -3299,60 +3295,35 @@ class SegmentStore:
             if dup:
                 raise self._unique_error(table, ucols)
 
-    def _assert_pk_unique_rows(
-        self, segment_id: str, table: str, ts: TableSchema, rows: list[Row]
+    def _assert_keys_new(
+        self, ts: TableSchema, table: str, path: str, batch: pa.Table
     ) -> None:
         """SQLite raises on a duplicate PRIMARY KEY or UNIQUE key in a
-        plain INSERT; so do we (B15 parity — silently appending a dup was
-        a fuzz-found gap; silently ignoring UNIQUE constraints entirely
-        was a round-8 probe find).  Batch-internal dups are checked
-        driver-side for free; the vs-existing check is ONE
-        pushdown-filtered scan of the single segment partition per
-        declared constraint (zero for constraint-free tables).  Keys are
-        collation-folded (NOCASE/RTRIM — probed ASCII-only / trailing
-        0x20 semantics)."""
+        plain INSERT; so do we, per constraint in SQLite's order: within
+        the batch, then against the partition's files, read under the
+        caller's segment lock (so exact across processes)."""
         cons = ts.unique_constraints()
         if not cons:
             return
-        idx = {n.lower(): i for i, (n, _) in enumerate(ts.fields)}
-        path = self._partition_path(table, segment_id)
-        existing = (
-            self._read_files(path, ts.struct()) if os.path.isdir(path) else None
-        )
+        need = {c.lower() for cols, _ in cons for c in cols}
+        key = T.StructType([f for f in ts.struct() if f.name.lower() in need])
+        new = {f.name.lower(): batch[f.name].to_pylist() for f in key}
+        old = dict(zip(new, _file_columns(path, key)))
         for cols, colls in cons:
-            folded = self._fold_cols(ts, cols, colls)
-            keys = [
-                tuple(
-                    _fold_value(r[idx[c.lower()]], eff)
-                    for c, (_sql, eff) in zip(cols, folded)
-                )
-                for r in rows
-            ]
-            # SQLite: NULL key components never conflict (NULL != NULL)
-            keys = [k for k in keys if all(v is not None for v in k)]
-            if len(keys) != len(set(keys)):
+            keys = self._key_tuples(ts, cols, colls, [new[c.lower()] for c in cols])
+            if len(keys) != len(set(keys)) or not set(keys).isdisjoint(
+                self._key_tuples(ts, cols, colls, [old[c.lower()] for c in cols])
+            ):
                 raise self._unique_error(table, cols)
-            if not keys or existing is None:
-                continue
-            proj = existing.selectExpr(
-                *[f"{sql} AS `{c}`" for c, (sql, _e) in zip(cols, folded)]
-            )
-            if len(cols) == 1:
-                hit = proj.filter(F.col(cols[0]).isin([k[0] for k in keys]))
-            else:
-                types = {n.lower(): t for n, t in ts.fields}
-                batch = _local_frame(
-                    self.spark,
-                    keys,
-                    T.StructType(
-                        [T.StructField(c, types[c.lower()], True) for c in cols]
-                    ),
-                )
-                hit = proj.join(batch, cols, "left_semi")
-            # a plain collect is one job; its result is bounded by the
-            # batch, since existing keys are unique
-            if hit.collect():
-                raise self._unique_error(table, cols)
+
+    def _key_tuples(self, ts: TableSchema, cols, colls, columns: list[list]) -> list[tuple]:
+        """The keys of constraint ``cols`` in the value lists ``columns``,
+        collation-folded (NOCASE/RTRIM — probed ASCII-only / trailing 0x20
+        semantics); keys with a NULL component, which never conflict, are
+        left out."""
+        folds = [eff for _sql, eff in self._fold_cols(ts, cols, colls)]
+        keys = (tuple(map(_fold_value, k, folds)) for k in zip(*columns))
+        return [k for k in keys if all(v is not None for v in k)]
 
     def _assert_pk_unique_df(
         self, segment_id: str, table: str, ts: TableSchema, new: DataFrame
@@ -3375,7 +3346,7 @@ class SegmentStore:
             m = _DELETE_STMT_RE.match(stmt)
             if not m:
                 raise QueryRejected(f"unsupported DELETE form: {stmt[:80]!r}")
-            table = _unquote(m.group("name"))
+            table = self._stmt_table(segment_id, m)
             cond = m.group("where")
             df = self._read_partition(segment_id, table)
             has_subquery = cond and re.search(
@@ -3425,7 +3396,7 @@ class SegmentStore:
             m = _UPDATE_STMT_RE.match(stmt)
             if not m:
                 raise QueryRejected(f"unsupported UPDATE form: {stmt[:80]!r}")
-            table = _unquote(m.group("name"))
+            table = self._stmt_table(segment_id, m)
             umode = _update_mode(m)
             ts0 = self._table_schema(segment_id, table)
             if umode is not None:
@@ -4184,7 +4155,7 @@ class SegmentStore:
         are rejected rather than silently diverging from SQLite's
         conflict-resolution × trigger interplay."""
         m = self._match_insert(stmt)
-        table = _unquote(m.group("name"))
+        table = self._stmt_table(segment_id, m)
         trigs = self._triggers_for(segment_id, table, "INSERT")
         if (
             trigs
@@ -4599,10 +4570,7 @@ class SegmentStore:
 
     def _view_name_of(self, segment_id: str, name: str) -> str | None:
         """The stored view key matching ``name`` case-insensitively."""
-        for v in self._segment_info(segment_id).get("views", {}):
-            if v.lower() == name.lower():
-                return v
-        return None
+        return _declared_name(self._segment_info(segment_id).get("views", {}), name)
 
     def _view_dml(self, segment_id: str, stmt: str, kind: str, pending: dict) -> bool:
         """INSTEAD OF (view) trigger dispatch — probed SQLite semantics:
@@ -4884,13 +4852,13 @@ class SegmentStore:
             m = _DELETE_STMT_RE.match(stmt)
             if not m:
                 raise QueryRejected(f"unsupported DELETE form: {stmt[:80]!r}")
-            table, sets, from_text = _unquote(m.group("name")), None, None
+            table, sets, from_text = self._stmt_table(segment_id, m), None, None
             trigs = self._triggers_for(segment_id, table, "DELETE")
         else:
             m = _UPDATE_STMT_RE.match(stmt)
             if not m:
                 raise QueryRejected(f"unsupported UPDATE form: {stmt[:80]!r}")
-            table = _unquote(m.group("name"))
+            table = self._stmt_table(segment_id, m)
             sets_text, from_text, upd_where = _update_parts(m)
             sets = dict(_split_assignments(sets_text))
             if self._view_name_of(segment_id, table) is None:
@@ -5208,25 +5176,11 @@ class SegmentStore:
             cols, colls = _resolve_index_uniques(ts, entries, stmt)
             # SQLite: creating a unique index over existing duplicate data
             # fails with the constraint error (probed)
-            folded = self._fold_cols(ts, cols, colls)
-            if os.path.isdir(self._partition_path(table, segment_id)):
-                dup = (
-                    self._read_partition(segment_id, table)
-                    .selectExpr(
-                        *[
-                            f"{sql} AS `{c}`"
-                            for c, (sql, _e) in zip(cols, folded)
-                        ]
-                    )
-                    .where(" AND ".join(f"`{k}` IS NOT NULL" for k in cols))
-                    .groupBy(*cols)
-                    .count()
-                    .filter(F.col("count") > 1)
-                    .limit(1)
-                    .count()
-                )
-                if dup:
-                    raise self._unique_error(table, cols)
+            key = T.StructType([ts.struct()[_declared_column(ts, c)] for c in cols])
+            path = self._partition_path(ts.name, segment_id)
+            keys = self._key_tuples(ts, cols, colls, _file_columns(path, key))
+            if len(keys) != len(set(keys)):
+                raise self._unique_error(ts.name, cols)
             ts.unique_indexes[iname.lower()] = (cols, colls)
             self._save_table(info, ts)
             return
@@ -5267,7 +5221,7 @@ class SegmentStore:
             raise QueryRejected(f"unsupported CREATE on write path: {stmt[:80]!r}")
         ts = parse_create_table(stmt)
         info = self._segment_info(segment_id)
-        if ts.name.lower() in map(str.lower, info["tables"]):
+        if _declared_name(info["tables"], ts.name) is not None:
             if _if_not_exists(stmt):
                 return
             raise QueryRejected(f"table {ts.name} already exists")
@@ -5293,7 +5247,7 @@ class SegmentStore:
         )
         if not m:
             raise QueryRejected(f"unsupported ALTER form: {stmt[:80]!r}")
-        table = _unquote(m.group("name"))
+        table = self._stmt_table(segment_id, m)
         ts = self._table_schema(segment_id, table)
         rest = m.group("rest").strip()
         ru = rest.upper()
@@ -5342,11 +5296,18 @@ class SegmentStore:
             return
         elif ru.startswith("RENAME TO"):
             new_name = _unquote(rest[len("RENAME TO") :].strip())
-            if new_name.lower() in map(str.lower, info["tables"]):
+            if _declared_name(info["tables"], new_name) is not None:
                 raise QueryRejected(f"there is already another table or index with this name: {new_name}")
             # the record, its unique indexes included, moves to the new name
             del info["tables"][table]
             ts.name = new_name
+            # its triggers follow it, renamed in their SQL as SQLite does
+            trigs = info.get("triggers", {})
+            for tname, sql in trigs.items():
+                tm = _TRIGGER_RE.match(sql)
+                if _unquote(tm.group("table")).lower() == table.lower():
+                    head, tail = sql[: tm.start("table")], sql[tm.end("table") :]
+                    trigs[tname] = f'{head}"{new_name}"{tail}'
             if os.path.isdir(path):
                 new_path = self._partition_path(new_name, segment_id)
                 os.makedirs(os.path.dirname(new_path), exist_ok=True)
@@ -5424,10 +5385,11 @@ class SegmentStore:
                 self._save_table(info, ts)
             return
         if what != "TABLE":
-            info.get(f"{what.lower()}s", {}).pop(name, None)
+            named = info.get(f"{what.lower()}s", {})
+            named.pop(_declared_name(named, name), None)
             self._save_meta()
             return
-        table = name
+        table = _declared_name(info["tables"], name) or name
         info["tables"].pop(table, None)
         # SQLite: DROP TABLE also drops the table's triggers
         trigs = info.get("triggers", {})
@@ -6172,6 +6134,12 @@ def _declared_column(ts: TableSchema, col: str) -> str:
     raise QueryRejected(f'no such column: "{col}"')
 
 
+def _declared_name(names, name: str) -> str | None:
+    """The one of ``names`` that is ``name`` ignoring case (SQLite's table,
+    view and trigger names are case-insensitive), or None."""
+    return next((n for n in names if n.lower() == name.lower()), None)
+
+
 def _column_refs(info: dict, ts: TableSchema, col: str) -> str | None:
     """What names column ``col`` of ``ts`` besides its declaration: a
     CHECK or generated expression ("table t"), a trigger or view body
@@ -6322,19 +6290,11 @@ def _sqlite_decl(typ: T.DataType) -> str:
     return "TEXT"
 
 
-def _local_frame(spark: SparkSession, rows, struct) -> DataFrame:
-    """The one way this module builds a DataFrame from driver-side rows.
-
-    Row-list ``createDataFrame`` parallelizes a pickled Python RDD that
-    every action re-runs in pyspark Python workers.  An Arrow table becomes
-    a ``LocalRelation`` instead: no Python worker runs, and the optimizer
-    evaluates a filter/limit/collect over it without a Spark job.  Rows go
+def _arrow_table(rows, struct: T.StructType) -> pa.Table:
+    """Driver-side rows as an Arrow table of ``struct``'s types.  Rows go
     through pyspark's own verifier and ``toInternal`` first, so type
     errors and value conversions (dates, timestamps in the process time
-    zone) are exactly the row-list path's.  ``struct`` may be a DDL string.
-    """
-    if isinstance(struct, str):
-        struct = T.StructType.fromDDL(struct)
+    zone) are exactly the row-list ``createDataFrame`` path's."""
     verify, to_tuple = _make_type_verifier(struct), _create_converter(struct)
     internal = []
     for r in rows:
@@ -6342,10 +6302,49 @@ def _local_frame(spark: SparkSession, rows, struct) -> DataFrame:
         internal.append(struct.toInternal(to_tuple(r)))
     schema = to_arrow_schema(struct)
     cols = zip(*internal) if internal else [()] * len(schema)
-    table = pa.Table.from_arrays(
+    return pa.Table.from_arrays(
         [pa.array(list(c), type=f.type) for c, f in zip(cols, schema)], schema=schema
     )
+
+
+def _local_frame(spark: SparkSession, rows, struct) -> DataFrame:
+    """The one way this module builds a DataFrame from driver-side rows
+    (or from an ``_arrow_table`` of them).
+
+    Row-list ``createDataFrame`` parallelizes a pickled Python RDD that
+    every action re-runs in pyspark Python workers.  An Arrow table becomes
+    a ``LocalRelation`` instead: no Python worker runs, and the optimizer
+    evaluates a filter/limit/collect over it without a Spark job.
+    ``struct`` may be a DDL string.
+    """
+    if isinstance(struct, str):
+        struct = T.StructType.fromDDL(struct)
+    table = rows if isinstance(rows, pa.Table) else _arrow_table(rows, struct)
     return spark.createDataFrame(table, struct)
+
+
+def _file_columns(path: str, struct: T.StructType) -> list[list]:
+    """The columns of ``struct`` in every visible file of the partition
+    directory ``path``, read with pyarrow (no Spark job), as one Python
+    list per column.  As in Spark's reader, names match case-insensitively,
+    a column a file lacks reads as NULL, and INT96 timestamps are instants;
+    values are cast to the declared Arrow types."""
+    fields = list(to_arrow_schema(struct))
+    out: list[list] = [[] for _ in fields]
+    files = sorted(
+        e.path for e in (os.scandir(path) if os.path.isdir(path) else ())
+        if e.is_file() and not e.name.startswith((".", "_"))
+    )
+    for fp in files:
+        with pq.ParquetFile(fp, coerce_int96_timestamp_unit="us") as pf:
+            have = {n.lower(): n for n in pf.schema_arrow.names}
+            src = [have.get(f.name.lower()) for f in fields]
+            got = pf.read(columns=list(dict.fromkeys(n for n in src if n)))
+            rows = pf.metadata.num_rows
+        for acc, f, n in zip(out, fields, src):
+            col = got.column(n).cast(f.type) if n else pa.nulls(rows, f.type)
+            acc.extend(col.to_pylist())
+    return out
 
 
 def _coerce(v, typ: T.DataType):
