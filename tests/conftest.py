@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import time
 
 import pytest
 from pyspark.sql import DataFrameReader, DataFrameWriter
@@ -40,6 +41,20 @@ def stock_pyspark():
     yield _patched_readwriter
     patched = _patched_readwriter()
     assert not patched, f"PySpark patched for the rest of the session: {patched}"
+
+
+@pytest.fixture()
+def non_utc_tz():
+    """Naive datetimes convert in the process time zone, here one with DST."""
+    old = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    yield
+    if old is None:
+        del os.environ["TZ"]
+    else:
+        os.environ["TZ"] = old
+    time.tzset()
 
 
 @pytest.fixture(scope="session")

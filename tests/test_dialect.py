@@ -75,6 +75,31 @@ def test_bind_names_prefix_shadowing_and_quoting():
             bind(sql)
 
 
+@pytest.mark.parametrize(
+    "sql, renamed",
+    [
+        ("INSERT INTO t VALUES (new.id)", 'INSERT INTO "t2" VALUES (new.id)'),
+        # column lists, same-named columns, literals and comments stay
+        (
+            "INSERT INTO T (t, n) VALUES ('t', 1) -- t",
+            """INSERT INTO "t2" (t, n) VALUES ('t', 1) -- t""",
+        ),
+        # qualifiers, UPDATE OR <action>, a comma in a FROM list
+        (
+            'UPDATE OR IGNORE "t" SET n = t.n + 1 WHERE x.t IN (SELECT t.n FROM x, [t])',
+            'UPDATE OR IGNORE "t2" SET n = "t2".n + 1 WHERE x.t IN (SELECT "t2".n FROM x, "t2")',
+        ),
+        # a function named like the table, and a comma outside FROM
+        (
+            "DELETE FROM t WHERE n = t(1); INSERT INTO x SELECT a, t FROM y JOIN t ON y.a = 1",
+            'DELETE FROM "t2" WHERE n = t(1); INSERT INTO x SELECT a, t FROM y JOIN "t2" ON y.a = 1',
+        ),
+    ],
+)
+def test_rename_table_respells_table_references_only(sql, renamed):
+    assert dialect.rename_table(sql, "t", "t2") == renamed
+
+
 def test_like_becomes_ilike():
     assert "ILIKE" in dialect.sqlite_to_spark("SELECT * FROM t WHERE a LIKE 'x%'")
 

@@ -12,10 +12,10 @@ from __future__ import annotations
 import datetime as dt
 import os
 import re
-import time
 from decimal import Decimal
 
 import pyarrow.parquet as pq
+import pyspark.sql.functions as F
 import pyspark.sql.types as T
 import pytest
 from pyspark.sql import Row
@@ -35,20 +35,6 @@ def _outcome(fn):
         return ("rows", fn())
     except Exception as e:  # the error itself is what is compared
         return ("error", type(e).__name__, str(e))
-
-
-@pytest.fixture()
-def non_utc_tz():
-    """Naive datetimes convert in the process time zone on both paths."""
-    old = os.environ.get("TZ")
-    os.environ["TZ"] = "America/New_York"
-    time.tzset()
-    yield
-    if old is None:
-        del os.environ["TZ"]
-    else:
-        os.environ["TZ"] = old
-    time.tzset()
 
 
 _I64 = 2**63 - 1
@@ -90,19 +76,23 @@ def test_local_frame_matches_row_list_path(spark, non_utc_tz, decl, rows):
     assert new == old
 
 
-_FILE_CASES = [(sqlite_type_to_spark(d), rows) for d, rows in _CASES] + [
-    (T.DecimalType(10, 2), [(Decimal("1.25"),), (Decimal("-99999999.99"),), (None,)]),
-    (T.DecimalType(10, 2), [(Decimal("1.23456"),)]),  # more scale than declared
-    (T.DecimalType(38, 6), [(Decimal("12345678901234567890123456789012.123456"),)]),
-    (T.DateType(), [(dt.date(1, 1, 1),), (dt.date(1582, 10, 10),), (None,)]),
-    (T.TimestampType(), [(dt.datetime(1900, 1, 1, 0, 0, 1),), (None,)]),
+# (type, rows, the values stored when they are not the rows' own)
+_FILE_CASES = [(sqlite_type_to_spark(d), rows, None) for d, rows in _CASES] + [
+    (T.DecimalType(10, 2), [(Decimal("1.25"),), (Decimal("-99999999.99"),), (None,)], None),
+    # more scale than declared: rounded HALF_UP, as a Spark cast stores it
+    (T.DecimalType(10, 2), [(Decimal("1.23456"),), (Decimal("-0.005"),)], ["1.23", "-0.01"]),
+    (T.DecimalType(38, 6), [(Decimal("12345678901234567890123456789012.123456"),)], None),
+    (T.DateType(), [(dt.date(1, 1, 1),), (dt.date(1582, 10, 10),), (None,)], None),
+    (T.TimestampType(), [(dt.datetime(1900, 1, 1, 0, 0, 1),), (None,)], None),
 ]
 
 
 @pytest.mark.parametrize(
-    "typ,rows", _FILE_CASES, ids=[f"{t.simpleString()}-{i}" for i, (t, _) in enumerate(_FILE_CASES)]
+    "typ,rows,stored",
+    _FILE_CASES,
+    ids=[f"{t.simpleString()}-{i}" for i, (t, _r, _s) in enumerate(_FILE_CASES)],
 )
-def test_pyarrow_append_reads_like_spark_append(spark, non_utc_tz, tmp_path, typ, rows):
+def test_pyarrow_append_reads_like_spark_append(spark, non_utc_tz, tmp_path, typ, rows, stored):
     """A plain INSERT's file, written with pyarrow, reads back through
     Spark to the rows a Spark append of the same rows reads back to."""
     struct = T.StructType(
@@ -121,6 +111,9 @@ def test_pyarrow_append_reads_like_spark_append(spark, non_utc_tz, tmp_path, typ
         str(tmp_path / "arrow"), lambda p: SegmentStore._append_file(_arrow_table(rows, struct), p)
     ))
     assert arrow_rows == spark_rows
+    if stored is not None:
+        assert arrow_rows[0] == "rows"
+        assert [r["v"] for r in arrow_rows[1]] == [Decimal(v) for v in stored]
 
 
 def test_local_frame_rejects_null_in_non_nullable_like_row_list_path(spark):
@@ -227,3 +220,21 @@ def test_key_check_reads_spark_int96_timestamps(spark, non_utc_tz, tmp_path):
             store.write("seg", f"INSERT INTO t VALUES ('{at}', 3)")
     store.write("seg", "INSERT INTO t VALUES ('2020-11-01 01:30:01', 4)")
     assert [r["v"] for r in store.read("seg", "SELECT v FROM t ORDER BY v")] == [1, 2, 4]
+
+
+def test_decimal_excess_scale_insert_reads_like_update(spark, tmp_path):
+    """An INSERT stores a DECIMAL value with more scale than declared as
+    the UPDATE path's Spark cast does (HALF_UP); a value past the declared
+    precision is refused."""
+    struct = T.StructType([T.StructField("id", T.LongType()), T.StructField("d", T.DecimalType(10, 2))])
+    store = SegmentStore(spark, str(tmp_path / "store"))
+    store.bulk_load(
+        "m", _local_frame(spark, [(0, Decimal("1.00"))], struct).withColumn("seg", F.lit("seg")), "seg"
+    )
+    store.write("seg", "INSERT INTO m VALUES (1, 3.256), (2, 0), (3, -0.005), (4, 0)")
+    store.write("seg", "UPDATE m SET d = 3.256 WHERE id = 2; UPDATE m SET d = -0.005 WHERE id = 4")
+    rows = store.read("seg", "SELECT id, d FROM m ORDER BY id")
+    assert [r["d"] for r in rows] == [Decimal(v) for v in ("1.00", "3.26", "3.26", "-0.01", "-0.01")]
+    with pytest.raises(QueryRejected, match=re.escape("out of range for DECIMAL(10,2)")):
+        store.write("seg", "INSERT INTO m VALUES (5, 123456789.5)")
+    assert len(store.read("seg", "SELECT id FROM m")) == 5

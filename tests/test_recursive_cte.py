@@ -1,14 +1,18 @@
 """WITH RECURSIVE parsing: the statement splits into its name, column list,
 base and step SELECTs (at the body's last top-level UNION [ALL]) and the
 outer SELECT.  The live fixpoint is checked against SQLite in
-test_sqlite_differential.py; these cases pin the parse without a session."""
+test_sqlite_differential.py; these cases pin the parse without a session,
+except for CTEs that follow the recursive one, whose rows are checked
+against live SQLite here."""
 
 from __future__ import annotations
+
+import sqlite3
 
 import pytest
 
 from trough_spark.dialect import QueryRejected
-from trough_spark.store import _parse_recursive_cte
+from trough_spark.store import SegmentStore, _parse_recursive_cte
 
 
 def _squash(sql: str) -> str:
@@ -115,8 +119,41 @@ def test_parse_recursive_cte_ignores_other_statements(sql):
             "WITH RECURSIVE c(x) AS (SELECT 1 UNION ALL SELECT (x + 1 FROM c SELECT x FROM c",
             "unbalanced parentheses",
         ),
+        (
+            "WITH RECURSIVE c(x) AS (SELECT y FROM d UNION ALL SELECT x + 1 FROM c "
+            "WHERE x < 3), d AS (SELECT 7 AS y) SELECT x FROM c",
+            "names a later CTE",
+        ),
     ],
 )
 def test_parse_recursive_cte_rejects(sql, message):
     with pytest.raises(QueryRejected, match=message):
         _parse_recursive_cte(sql)
+
+
+_LATER_CTE = (
+    "WITH RECURSIVE c(x) AS (SELECT 1 UNION ALL SELECT x + 1 FROM c WHERE x < 3), "
+)
+
+
+def test_parse_ctes_after_the_recursive_one():
+    rec = _parse_recursive_cte(_LATER_CTE + "d AS (SELECT 7 AS y) SELECT x, y FROM c, d")
+    assert (rec.name, _squash(rec.step_sql)) == ("c", "SELECTx+1FROMcWHEREx<3")
+    assert rec.outer_sql == "WITH d AS (SELECT 7 AS y) SELECT x, y FROM c, d"
+
+
+@pytest.mark.parametrize(
+    "later",
+    [
+        "d AS (SELECT 7 AS y) SELECT x, y FROM c, d ORDER BY x",
+        "d(y) AS (SELECT max(x) FROM c), e AS (SELECT 1) SELECT x, y FROM c, d ORDER BY x",
+    ],
+)
+def test_ctes_after_the_recursive_one_match_sqlite(spark, tmp_path, later):
+    sql = _LATER_CTE + later
+    want = sqlite3.connect(":memory:").execute(sql).fetchall()
+    store = SegmentStore(spark, str(tmp_path / "store"))
+    store.set_schema("s", "CREATE TABLE t (a INTEGER);")
+    store.provision("seg", "s")
+    assert len(want) == 3
+    assert [tuple(r.values()) for r in store.read("seg", sql)] == want

@@ -331,6 +331,22 @@ CASES = [
          "ALTER TABLE U RENAME TO w", "INSERT INTO W VALUES (2)"],
     ),
     (
+        "rename to rewrites trigger bodies that name the table",
+        "CREATE TABLE t (n INT); CREATE TABLE x (id INTEGER PRIMARY KEY)",
+        ["CREATE TRIGGER tr AFTER INSERT ON x BEGIN INSERT INTO t VALUES (new.id); END",
+         "ALTER TABLE t RENAME TO t2", "INSERT INTO x VALUES (1)",
+         "ALTER TABLE T2 RENAME TO t", "INSERT INTO x VALUES (2)"],
+    ),
+    (
+        "rename to leaves literals and same-named columns in trigger bodies",
+        "CREATE TABLE t (t TEXT, n INT); CREATE TABLE x (id INTEGER PRIMARY KEY)",
+        ["CREATE TRIGGER tr AFTER INSERT ON x BEGIN "
+         "INSERT INTO t (t, n) VALUES ('t', new.id); "
+         "UPDATE t SET n = n * 10 WHERE n = new.id AND t = 't'; END",
+         "ALTER TABLE t RENAME TO t2", "INSERT INTO x VALUES (1)",
+         "ALTER TABLE t2 RENAME TO t", "INSERT INTO x VALUES (2)"],
+    ),
+    (
         "drop trigger matches its name case-insensitively",
         "CREATE TABLE t (n INT); CREATE TABLE x (id INT)",
         ["CREATE TRIGGER tr AFTER INSERT ON x BEGIN INSERT INTO t VALUES (new.id); END",

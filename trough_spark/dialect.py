@@ -333,6 +333,48 @@ def bind_names(sql: str, resolve, reserved: str) -> str:
     return _prepend_ctes(sql, defs)
 
 
+_TABLE_AFTER = {"FROM", "JOIN", "INTO", "UPDATE"}
+_CLAUSE_WORDS = {
+    "SELECT", "WHERE", "GROUP", "HAVING", "ORDER", "LIMIT", "WINDOW", "UNION",
+    "EXCEPT", "INTERSECT", "VALUES", "SET", "RETURNING", ";",
+}
+
+
+def rename_table(sql: str, old: str, new: str) -> str:
+    """``sql`` with its references to table ``old`` respelled ``"new"``,
+    as SQLite's ALTER TABLE RENAME TO rewrites trigger bodies: a name after
+    FROM, JOIN, INTO or UPDATE [OR <action>], after a comma in a FROM
+    list, or qualifying a column.  Literals, comments, column names and
+    function names are left alone."""
+    tokens = tokenize(sql)
+    sig = _significant(tokens)
+    words = [tokens[i].text.upper() for i in sig]
+    clause = [""]  # the current clause keyword, per parenthesis depth
+    for k, i in enumerate(sig):
+        w = words[k]
+        if w == "(":
+            clause.append("")
+        elif w == ")" and len(clause) > 1:
+            clause.pop()
+        elif w in _CLAUSE_WORDS or w == "FROM":
+            clause[-1] = w
+        t = tokens[i]
+        if t.kind not in _IDENT_KINDS or _strip_ident(t.text).lower() != old.lower():
+            continue
+        prev = words[max(k - 3, 0):k]
+        nxt = words[k + 1] if k + 1 < len(sig) else ""
+        if prev[-1:] == ["."]:
+            continue
+        if (
+            nxt == "."
+            or prev[-1:] and prev[-1] in _TABLE_AFTER
+            or prev[:2] == ["UPDATE", "OR"]
+            or prev[-1:] == [","] and clause[-1] == "FROM"
+        ):
+            t.text = '"' + new.replace('"', '""') + '"'
+    return render(tokens)
+
+
 # ---------------------------------------------------------------------------
 # GLOB → regex
 # ---------------------------------------------------------------------------

@@ -22,6 +22,14 @@ from pyspark.sql import SparkSession
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+def _default_driver_mem() -> str:
+    """Half the host's memory, at most 48g.  A local-mode heap larger than
+    the host lets G1 grow the JVM until the kernel's OOM killer ends it: a
+    48g-heap test session was killed at 15.4 GB resident on a 15 GB host."""
+    host_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**30
+    return f"{max(1, min(48, host_gb // 2))}g"
+
+
 def get_spark(
     app_name: str = "trough-spark",
     master: str | None = None,
@@ -56,7 +64,10 @@ def get_spark(
         .config("spark.sql.parquet.aggregatePushdown", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem(),
+        )
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
     )

@@ -178,6 +178,13 @@ class TableSchema:
     def struct(self) -> T.StructType:
         return T.StructType([T.StructField(n, t, True) for n, t in self.fields])
 
+    @property
+    def rowid_alias(self) -> str | None:
+        """The INTEGER PRIMARY KEY column that IS the rowid, if any."""
+        pk = self.primary_key
+        auto = self.autoincrement_col
+        return auto if auto and len(pk) == 1 and pk[0].lower() == auto.lower() else None
+
     def unique_constraints(self) -> list[tuple[list[str], list[str]]]:
         """Every uniqueness constraint as (cols, collations) — the pk
         first (SQLite's conflict-check order), then UNIQUEs in declaration
@@ -2093,12 +2100,6 @@ class SegmentStore:
         clause = _sub_last_insert_rowid(
             clause, self._last_auto.get(segment_id, 0)
         )
-        rowid_alias = (
-            ts is not None
-            and ts.autoincrement_col is not None
-            and len(ts.primary_key or []) == 1
-            and ts.primary_key[0].lower() == ts.autoincrement_col.lower()
-        )
 
         def fix_tokens(src: str) -> str:
             toks = dialect.tokenize(src)
@@ -2143,7 +2144,7 @@ class SegmentStore:
                     and t.text.lower() not in lower_cols
                     and not (nxt is not None and nxt.text == "(")
                 ):
-                    if rowid_alias:
+                    if ts is not None and ts.rowid_alias:
                         out.append(dialect.Token("word", ts.primary_key[0]))
                         i += 1
                         continue
@@ -2874,13 +2875,9 @@ class SegmentStore:
             raise QueryRejected(
                 f"unknown conflict action {action!r}"
             )  # pragma: no cover
-        tuples = [
-            tuple(d[n] for n in fields) for d in live.values()
-        ]
-        out = _local_frame(self.spark, tuples, ts.struct())
-        self._assert_constraints(ts, out)
         self._ret_add(table, ret)
-        self._overwrite_partition(segment_id, table, out)
+        rows = _arrow_table(list(live.values()), ts.struct())  # dicts, by name
+        self._overwrite_partition(segment_id, table, rows)
 
     @staticmethod
     def _dedupe_last(df: DataFrame, keys: list[str]) -> DataFrame:
@@ -2967,7 +2964,6 @@ class SegmentStore:
             existing.select(*ts.primary_key).distinct(), ts.primary_key, "left_anti"
         ).select([F.col(n).cast(t) for n, t in ts.fields])
         out = self._apply_generated_df(ts, updated.unionByName(inserts))
-        self._assert_constraints(ts, out)
         self._overwrite_partition(segment_id, table, out)
 
     def merge(
@@ -3120,8 +3116,11 @@ class SegmentStore:
 
     def _read_files(self, path: str, schema: T.StructType) -> DataFrame:
         """Read the partition directory ``path`` as the declared ``schema``,
-        which null-fills columns its files lack (ALTER TABLE ADD COLUMN)."""
-        return self.spark.read.schema(schema).parquet(path)
+        which null-fills columns its files lack (ALTER TABLE ADD COLUMN),
+        as ONE task, as the reference runs a segment on one SQLite thread:
+        ORDER BY, GROUP BY and DISTINCT over it then plan no exchange, and
+        filters and column pruning still reach the scan."""
+        return self.spark.read.schema(schema).parquet(path).coalesce(1)
 
     def _init_hwm(self, key: tuple[str, str], table: str, ts: TableSchema) -> None:
         """Lazily seed the autoincrement high-water mark from storage."""
@@ -3157,12 +3156,7 @@ class SegmentStore:
             path = self._partition_path(table, segment_id)
             batch = _arrow_table(rows, ts.struct())
             self._assert_keys_new(ts, table, path, batch)
-            if ts.checks:
-                self._assert_constraints(ts, _local_frame(self.spark, batch, ts.struct()))
-            else:
-                for col in ts.not_null:
-                    if col != ts.autoincrement_col and batch[_declared_column(ts, col)].null_count:
-                        raise QueryRejected(f"NOT NULL constraint failed: {ts.name}.{col}")
+            self._assert_batch(ts, batch)
             self._txn_before_write(table, segment_id)
             self._append_file(batch, path)
         pending.clear()
@@ -3184,6 +3178,24 @@ class SegmentStore:
             with contextlib.suppress(FileNotFoundError):
                 os.remove(tmp)
             raise
+
+    def _assert_batch(self, ts: TableSchema, batch: pa.Table) -> None:
+        """Raise SQLite's error if a row about to be stored has a NULL
+        rowid, or then violates a CHECK / NOT NULL, with no Spark job:
+        NULLs are Arrow null counts, and CHECKs run over a local frame,
+        which the optimizer evaluates in the driver."""
+        rowid = ts.rowid_alias
+        if rowid and batch[_declared_column(ts, rowid)].null_count:
+            # an INT/BIGINT pk is not the rowid and admits NULL (probed)
+            raise QueryRejected(
+                f"datatype mismatch: NULL into INTEGER PRIMARY KEY {rowid!r} of {ts.name!r}"
+            )
+        if ts.checks:
+            self._assert_constraints(ts, _local_frame(self.spark, batch, ts.struct()))
+            return
+        for col in ts.not_null:
+            if col != ts.autoincrement_col and batch[_declared_column(ts, col)].null_count:
+                raise QueryRejected(f"NOT NULL constraint failed: {ts.name}.{col}")
 
     def _row_violates(self, ts: TableSchema, row) -> bool:
         """Whether ONE candidate row violates a declared CHECK / NOT NULL
@@ -3498,28 +3510,10 @@ class SegmentStore:
             out = self._apply_generated_df(ts, out)
             # SQLite raises when an UPDATE lands two rows on one pk or
             # UNIQUE key (probed round 8) — checked only when the SET
-            # touches the constraint's columns
+            # touches the constraint's columns.  A NULL rowid, then
+            # CHECK/NOT NULL, are checked on the whole post-image the
+            # rewrite collects (stored rows already satisfy them)
             self._assert_state_unique(ts, table, out, touched=set(sets))
-            if ts.primary_key and set(sets) & {k.lower() for k in ts.primary_key}:
-                pk = ts.primary_key
-                if (
-                    ts.autoincrement_col
-                    and len(pk) == 1
-                    and pk[0].lower() == ts.autoincrement_col.lower()
-                    and out.where(f"{pk[0]} IS NULL").limit(1).count()
-                ):
-                    # rowid alias: SQLite raises "datatype mismatch" when an
-                    # UPDATE sets the INTEGER PRIMARY KEY to NULL (probed
-                    # round 8 — the pk IS the rowid, which cannot be NULL;
-                    # an INT/BIGINT pk is NOT an alias and admits NULL)
-                    raise QueryRejected(
-                        f"datatype mismatch: NULL into INTEGER PRIMARY KEY "
-                        f"{pk[0]!r} of {table!r}"
-                    )
-            # CHECK/NOT NULL enforced on the post-update rows (stored rows
-            # already satisfy them, so checking the whole partition is
-            # equivalent to checking the modified rows)
-            self._assert_constraints(ts, out)
             if self._ret_capturing(table) and from_text is None:
                 # UPDATE ... RETURNING yields the post-update images of the
                 # rows the WHERE matched (the FROM path captures inside
@@ -3720,9 +3714,7 @@ class SegmentStore:
             tuple(r[n] for n, _ in ts.fields)
             for r in list(state.values()) + null_existing + nullkey_rows
         ]
-        out = _local_frame(self.spark, tuples, ts.struct())
-        self._assert_constraints(ts, out)
-        self._overwrite_partition(segment_id, table, out)
+        self._overwrite_partition(segment_id, table, _arrow_table(tuples, ts.struct()))
 
     def _update_with_conflict_mode(
         self, segment_id: str, table: str, ts: TableSchema, m: re.Match, umode: str
@@ -3827,12 +3819,7 @@ class SegmentStore:
         # the position-visit order is pk order for ANY pk shape (probed:
         # TEXT-pk (a,b,c) `SET k = succ(k)` OR REPLACE collapses to one
         # row exactly like the integer case)
-        rowid_alias = (
-            ts.autoincrement_col is not None
-            and len(pkcols) == 1
-            and pkcols[0].lower() == ts.autoincrement_col.lower()
-        )
-        if rowid_alias or ts.without_rowid:
+        if ts.rowid_alias or ts.without_rowid:
             # pk == btree key: positions are pk values; the probed chase applies
             sentinel = itertools.count()
 
@@ -3860,19 +3847,11 @@ class SegmentStore:
                 if umode == "IGNORE" and self._row_violates(ts, new):
                     continue
                 nk = tuple(new[c] for c in pkcols)
-                if rowid_alias and nk[0] is None:
-                    # rowid alias: a rowid can never be NULL — SQLite raises
-                    # "datatype mismatch" even under OR IGNORE/REPLACE
-                    # (probed round 8; it is a datatype error, not a
-                    # skippable constraint violation).  WITHOUT ROWID pks
-                    # instead hit the NOT NULL constraint: IGNORE skipped
-                    # the row above, REPLACE raises at the final
-                    # _assert_constraints — both probed.
-                    raise QueryRejected(
-                        f"datatype mismatch: NULL into INTEGER PRIMARY KEY "
-                        f"{pkcols[0]!r} of {table!r}"
-                    )
-                nkey = keyof(nk)  # fresh sentinel when the new pk has NULLs
+                # a new pk with NULLs takes a fresh sentinel; a NULL rowid
+                # then fails the rewrite's check with "datatype mismatch"
+                # even under OR IGNORE/REPLACE (probed round 8), while a
+                # WITHOUT ROWID pk hits NOT NULL (IGNORE skipped it above)
+                nkey = keyof(nk)
                 if (
                     nkey != vkey
                     and all(v is not None for v in nk)
@@ -3918,12 +3897,9 @@ class SegmentStore:
                         )
                     seen_new.add(nk)
             survivors = [news.get(i, r) for i, r in enumerate(rows)]
-        tuples = [
-            tuple(r[n] for n, _ in ts.fields) for r in survivors
-        ]
-        out = _local_frame(self.spark, tuples, ts.struct())
-        self._assert_constraints(ts, out)  # OR REPLACE: CHECK still raises
-        self._overwrite_partition(segment_id, table, out)
+        tuples = [tuple(r[n] for n, _ in ts.fields) for r in survivors]
+        # OR REPLACE: CHECK still raises, in the rewrite's check
+        self._overwrite_partition(segment_id, table, _arrow_table(tuples, ts.struct()))
 
     # -- trigger execution (B14; reference semantics write.py:40 — scripts
     # -- run inside SQLite where recorded triggers fire on DML) -------------
@@ -4771,15 +4747,10 @@ class SegmentStore:
         for k in ts.primary_key:
             c = F.col(k).eqNullSafe(F.lit(old_row[k]))
             cond = c if cond is None else (cond & c)
-        kept = df.filter(~cond)
+        out = df.filter(~cond)
         if new_row is not None:
-            repl = _local_frame(
-                self.spark, [tuple(new_row[n] for n, _ in ts.fields)], ts.struct()
-            )
-            out = kept.unionByName(repl)
-            self._assert_constraints(ts, out)
-        else:
-            out = kept
+            row = tuple(new_row[n] for n, _ in ts.fields)
+            out = out.unionByName(_local_frame(self.spark, [row], ts.struct()))
         self._overwrite_partition(segment_id, table, out)
 
     def _upsert_row_update(
@@ -4932,11 +4903,7 @@ class SegmentStore:
                     "trigger bodies requires a PRIMARY KEY (per-row "
                     "interleave needs a stable row identity)"
                 )
-            if not ts.without_rowid and not (
-                ts.autoincrement_col
-                and len(ts.primary_key) == 1
-                and ts.primary_key[0].lower() == ts.autoincrement_col.lower()
-            ):
+            if not ts.without_rowid and not ts.rowid_alias:
                 # SQLite fires per-row in ROWID (insertion) order; only a
                 # rowid-alias pk makes that order derivable from the data
                 # (a WITHOUT ROWID table's btree order IS pk order, so it
@@ -5084,7 +5051,6 @@ class SegmentStore:
                 for j, n in enumerate(cols)
             ]
         )
-        self._assert_constraints(ts, out)
         self._overwrite_partition(segment_id, table, out)
 
     def _affected_rows(
@@ -5121,18 +5087,26 @@ class SegmentStore:
         ).collect()
         return [(r["_o"], r["_n"]) for r in rows]
 
-    def _overwrite_partition(self, segment_id: str, table: str, df: DataFrame) -> None:
+    def _overwrite_partition(self, segment_id: str, table: str, rows: DataFrame | pa.Table) -> None:
+        """Replace the segment's partition with ``rows``, the table's whole
+        post-image: a frame is collected once as Arrow (its one Spark job),
+        checked in process and written as ONE file by the INSERT writer (a
+        segment is small, like the reference's one SQLite file; the file
+        pins the row order the sequential write paths collect back)."""
         ts = self._table_schema(segment_id, table)
-        # one file per rewritten segment partition: a segment is bounded by
-        # the trough small-segment model (the reference holds it in ONE
-        # SQLite file), and defragmenting here keeps point reads at one
-        # scan task; it also pins a deterministic on-disk row order for
-        # the driver-side sequential write paths that collect() it back
-        aligned = df.select([F.col(n).cast(t) for n, t in ts.fields]).coalesce(1)
+        if isinstance(rows, DataFrame):
+            rows = rows.select([F.col(n).cast(t).alias(n) for n, t in ts.fields]).toArrow()
+        batch = rows.cast(to_arrow_schema(ts.struct()))
+        self._assert_batch(ts, batch)
+        self._swap_partition(segment_id, table, lambda tmp: self._append_file(batch, tmp))
+
+    def _swap_partition(self, segment_id: str, table: str, write) -> None:
+        """Replace the segment's partition directory with the files
+        ``write(staging_dir)`` makes, journalled for script rollback."""
         path = self._partition_path(table, segment_id)
         tmp = f"{self.root}/_staging/{table}/segment_id={segment_id}"
         shutil.rmtree(tmp, ignore_errors=True)
-        aligned.write.mode("overwrite").parquet(tmp)
+        write(tmp)
         # atomic-ish swap (single filesystem rename pair; a crash-atomic
         # commit is ROADMAP direction 3)
         bak = path + "._old"
@@ -5301,13 +5275,16 @@ class SegmentStore:
             # the record, its unique indexes included, moves to the new name
             del info["tables"][table]
             ts.name = new_name
-            # its triggers follow it, renamed in their SQL as SQLite does
+            # its triggers follow it, and trigger bodies that name it are
+            # rewritten to the new name, as SQLite does
             trigs = info.get("triggers", {})
             for tname, sql in trigs.items():
                 tm = _TRIGGER_RE.match(sql)
-                if _unquote(tm.group("table")).lower() == table.lower():
-                    head, tail = sql[: tm.start("table")], sql[tm.end("table") :]
-                    trigs[tname] = f'{head}"{new_name}"{tail}'
+                on = tm.group("table")
+                if _unquote(on).lower() == table.lower():
+                    on = f'"{new_name}"'
+                tail = dialect.rename_table(sql[tm.end("table") :], table, new_name)
+                trigs[tname] = f'{sql[: tm.start("table")]}{on}{tail}'
             if os.path.isdir(path):
                 new_path = self._partition_path(new_name, segment_id)
                 os.makedirs(os.path.dirname(new_path), exist_ok=True)
@@ -5910,11 +5887,11 @@ class SegmentStore:
                 before = len(self._parquet_files(path))
                 df = self._read_partition(segment_id, t)
                 rows = df.count()
+                if target_files > 1:
+                    df = df.repartition(target_files)
                 if sort_by:
-                    df = df.repartition(target_files).sortWithinPartitions(*sort_by)
-                else:
-                    df = df.coalesce(max(target_files, 1))
-                self._overwrite_partition(segment_id, t, df)
+                    df = df.sortWithinPartitions(*sort_by)
+                self._swap_partition(segment_id, t, lambda d: self._write_files(df, d, "overwrite"))
                 report[t] = {
                     "files_before": before,
                     "files_after": len(self._parquet_files(path)),
@@ -6037,6 +6014,9 @@ def _parse_recursive_cte(sql: str) -> RecursiveCTE | None:
     ).strip()
     if not outer_sql:
         raise QueryRejected("WITH RECURSIVE without an outer SELECT")
+    if outer_sql.startswith(","):
+        # CTEs after the recursive one become the outer statement's WITH
+        outer_sql = "WITH " + outer_sql[1:].lstrip()
     # split body at the LAST top-level UNION [ALL]
     depth = 0
     split_at = None
@@ -6055,6 +6035,10 @@ def _parse_recursive_cte(sql: str) -> RecursiveCTE | None:
     # re-render with single spaces — safe, literals are single tokens
     base_sql = " ".join(t.text for t in body[:split_at]).strip()
     step_sql = " ".join(t.text for t in body[split_at + (2 if union_all else 1) :]).strip()
+    toks = dialect.tokenize(outer_sql)
+    later = dialect._top_level_cte_names(toks, dialect._significant(toks))
+    if later.intersection(dialect.bindable_names(f"{base_sql} {step_sql}")):
+        raise QueryRejected("unsupported WITH RECURSIVE form: its body names a later CTE")
     return RecursiveCTE(
         name=name,
         cols=cols,
@@ -6294,17 +6278,33 @@ def _arrow_table(rows, struct: T.StructType) -> pa.Table:
     """Driver-side rows as an Arrow table of ``struct``'s types.  Rows go
     through pyspark's own verifier and ``toInternal`` first, so type
     errors and value conversions (dates, timestamps in the process time
-    zone) are exactly the row-list ``createDataFrame`` path's."""
+    zone) are exactly the row-list ``createDataFrame`` path's.  Decimals
+    take the declared scale as a Spark cast does (``_fit_decimal``)."""
     verify, to_tuple = _make_type_verifier(struct), _create_converter(struct)
     internal = []
     for r in rows:
         verify(r)
         internal.append(struct.toInternal(to_tuple(r)))
     schema = to_arrow_schema(struct)
-    cols = zip(*internal) if internal else [()] * len(schema)
+    cols = [list(c) for c in zip(*internal)] if internal else [[] for _ in schema]
+    for c, f in zip(cols, struct.fields):
+        if isinstance(f.dataType, T.DecimalType):
+            c[:] = [_fit_decimal(v, f.dataType) for v in c]
     return pa.Table.from_arrays(
-        [pa.array(list(c), type=f.type) for c, f in zip(cols, schema)], schema=schema
+        [pa.array(c, type=f.type) for c, f in zip(cols, schema)], schema=schema
     )
+
+
+_HALF_UP = decimal.Context(prec=80, rounding=decimal.ROUND_HALF_UP)
+
+
+def _fit_decimal(v: decimal.Decimal | None, typ: T.DecimalType) -> decimal.Decimal | None:
+    """``v`` rounded HALF_UP to ``typ``'s scale, as a Spark cast stores it;
+    a value with more integer digits than ``typ`` holds is refused."""
+    q = v if v is None else v.quantize(decimal.Decimal(1).scaleb(-typ.scale), context=_HALF_UP)
+    if q and q.adjusted() >= typ.precision - typ.scale:
+        raise QueryRejected(f"value {v} is out of range for DECIMAL({typ.precision},{typ.scale})")
+    return q
 
 
 def _local_frame(spark: SparkSession, rows, struct) -> DataFrame:
