@@ -94,6 +94,14 @@ def test_bind_names_prefix_shadowing_and_quoting():
             "DELETE FROM t WHERE n = t(1); INSERT INTO x SELECT a, t FROM y JOIN t ON y.a = 1",
             'DELETE FROM "t2" WHERE n = t(1); INSERT INTO x SELECT a, t FROM y JOIN "t2" ON y.a = 1',
         ),
+        # a qualifier naming another table's alias, with AS or without,
+        # stays; the next statement's qualifiers are the table's again
+        (
+            "INSERT INTO log SELECT t.n FROM x AS t; DELETE FROM log WHERE k IN "
+            "(SELECT t.n FROM x t); UPDATE log SET k = (SELECT t.n FROM t)",
+            'INSERT INTO log SELECT t.n FROM x AS t; DELETE FROM log WHERE k IN '
+            '(SELECT t.n FROM x t); UPDATE log SET k = (SELECT "t2".n FROM "t2")',
+        ),
     ],
 )
 def test_rename_table_respells_table_references_only(sql, renamed):

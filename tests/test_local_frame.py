@@ -25,6 +25,7 @@ from trough_spark.dialect import QueryRejected
 from trough_spark.store import (
     SegmentStore,
     _arrow_table,
+    _fit_decimal,
     _local_frame,
     sqlite_type_to_spark,
 )
@@ -235,6 +236,11 @@ def test_decimal_excess_scale_insert_reads_like_update(spark, tmp_path):
     store.write("seg", "UPDATE m SET d = 3.256 WHERE id = 2; UPDATE m SET d = -0.005 WHERE id = 4")
     rows = store.read("seg", "SELECT id, d FROM m ORDER BY id")
     assert [r["d"] for r in rows] == [Decimal(v) for v in ("1.00", "3.26", "3.26", "-0.01", "-0.01")]
-    with pytest.raises(QueryRejected, match=re.escape("out of range for DECIMAL(10,2)")):
-        store.write("seg", "INSERT INTO m VALUES (5, 123456789.5)")
+    # past the precision before rounding, after it, and far past it
+    for v in ("123456789.5", "99999999.995", "1e79", "1e90"):
+        with pytest.raises(QueryRejected, match=re.escape("out of range for DECIMAL(10,2)")):
+            store.write("seg", f"INSERT INTO m VALUES (5, {v})")
     assert len(store.read("seg", "SELECT id FROM m")) == 5
+    for v in ("Infinity", "-Infinity", "NaN"):
+        with pytest.raises(QueryRejected, match="out of range"):
+            _fit_decimal(Decimal(v), T.DecimalType(10, 2))

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pyarrow.parquet as pq
 import pytest
 
 from trough_spark.dialect import QueryRejected
@@ -32,9 +33,12 @@ def test_compact_reduces_files_keeps_rows(store):
 
 
 def test_compact_sorted(store):
-    store.compact("seg", table="t", target_files=1, sort_by=["v"])
+    store.write("seg", "UPDATE t SET v = 'a' WHERE id = 3;")
+    store.compact("seg", table="t", sort_by=["v"])
     rows = store.read("seg", "SELECT id FROM t ORDER BY id;")
     assert len(rows) == 5
+    [f] = store._parquet_files(store._partition_path("t", "seg"))
+    assert pq.read_table(f).column("id").to_pylist() == [3, 0, 1, 2, 4]
 
 
 def test_snapshot_restore_roundtrip(store):

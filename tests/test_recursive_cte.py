@@ -140,6 +140,9 @@ def test_parse_ctes_after_the_recursive_one():
     rec = _parse_recursive_cte(_LATER_CTE + "d AS (SELECT 7 AS y) SELECT x, y FROM c, d")
     assert (rec.name, _squash(rec.step_sql)) == ("c", "SELECTx+1FROMcWHEREx<3")
     assert rec.outer_sql == "WITH d AS (SELECT 7 AS y) SELECT x, y FROM c, d"
+    # only a name in table position is a reference to a later CTE
+    rec = _parse_recursive_cte(_LATER_CTE + "x AS (SELECT 7 AS y) SELECT y FROM x")
+    assert rec.outer_sql == "WITH x AS (SELECT 7 AS y) SELECT y FROM x"
 
 
 @pytest.mark.parametrize(
@@ -147,6 +150,8 @@ def test_parse_ctes_after_the_recursive_one():
     [
         "d AS (SELECT 7 AS y) SELECT x, y FROM c, d ORDER BY x",
         "d(y) AS (SELECT max(x) FROM c), e AS (SELECT 1) SELECT x, y FROM c, d ORDER BY x",
+        # a later CTE named like the column the recursive body reads
+        "x AS (SELECT 7 AS y) SELECT c.x, y FROM c, x ORDER BY c.x",
     ],
 )
 def test_ctes_after_the_recursive_one_match_sqlite(spark, tmp_path, later):

@@ -167,3 +167,41 @@ def test_rewrite_constraint_errors_roll_the_script_back(spark, tmp_path, script,
         {"id": 2, "name": "b", "qty": 2},
     ]
     assert store.read("seg", "SELECT count(*) AS n FROM log") == [{"n": 0}]
+
+
+def test_rewrites_check_only_the_values_they_write(spark, tmp_path):
+    """A row ``append_dataframe`` stored unchecked (a NULL rowid, a NULL in
+    a NOT NULL column, a failing CHECK) fails no DELETE, ALTER TABLE or
+    compaction, and a NULL rowid fails no UPDATE whose SET leaves the
+    rowid alone: SQLite checks only the values a statement writes."""
+    store = SegmentStore(spark, str(tmp_path / "store"))
+    store.set_schema("s", ITEMS)
+    store.provision("seg", "s")
+    store.write("seg", "INSERT INTO items VALUES (1, 'a', 1), (2, 'b', 2), (3, 'c', 3)")
+
+    def append(*row):
+        struct = T.StructType(
+            [T.StructField(n, t) for n, t in store._table_schema("seg", "items").fields]
+            + [T.StructField("segment_id", T.StringType())]
+        )
+        store.append_dataframe("items", _local_frame(spark, [row + ("seg",)], struct))
+
+    append(None, None, -1)
+    store.write("seg", "DELETE FROM items WHERE id = 1")
+    store.write("seg", "ALTER TABLE items RENAME COLUMN name TO nm")
+    store.compact("seg")
+    assert store.read("seg", "SELECT id, nm, qty FROM items ORDER BY id") == [
+        {"id": None, "nm": None, "qty": -1},
+        {"id": 2, "nm": "b", "qty": 2},
+        {"id": 3, "nm": "c", "qty": 3},
+    ]
+    store.write("seg", "DELETE FROM items WHERE nm IS NULL")
+    append(None, "d", 4)
+    store.write("seg", "UPDATE items SET qty = 5 WHERE id = 2")
+    with pytest.raises(QueryRejected, match="datatype mismatch"):
+        store.write("seg", "UPDATE items SET id = id + 10 WHERE id = 3")
+    assert store.read("seg", "SELECT id, qty FROM items ORDER BY id") == [
+        {"id": None, "qty": 4},
+        {"id": 2, "qty": 5},
+        {"id": 3, "qty": 3},
+    ]

@@ -347,6 +347,15 @@ CASES = [
          "ALTER TABLE t2 RENAME TO t", "INSERT INTO x VALUES (2)"],
     ),
     (
+        "rename to leaves an alias named like the table in trigger bodies",
+        "CREATE TABLE t (n INT); CREATE TABLE x (id INTEGER PRIMARY KEY); CREATE TABLE log (k INT)",
+        ["CREATE TRIGGER tr AFTER INSERT ON x BEGIN "
+         "INSERT INTO log SELECT t.id * 10 FROM x AS t WHERE t.id = new.id; "
+         "INSERT INTO t SELECT t.k FROM log t WHERE t.k = new.id * 10; END",
+         "ALTER TABLE t RENAME TO t2", "INSERT INTO x VALUES (1)",
+         "ALTER TABLE t2 RENAME TO t", "INSERT INTO x VALUES (2)"],
+    ),
+    (
         "drop trigger matches its name case-insensitively",
         "CREATE TABLE t (n INT); CREATE TABLE x (id INT)",
         ["CREATE TRIGGER tr AFTER INSERT ON x BEGIN INSERT INTO t VALUES (new.id); END",

@@ -338,18 +338,23 @@ _CLAUSE_WORDS = {
     "SELECT", "WHERE", "GROUP", "HAVING", "ORDER", "LIMIT", "WINDOW", "UNION",
     "EXCEPT", "INTERSECT", "VALUES", "SET", "RETURNING", ";",
 }
+#: words that may follow a table reference and are not its alias
+_NOT_ALIAS = _CLAUSE_WORDS | {
+    "AS", "ON", "USING", "JOIN", "INNER", "LEFT", "RIGHT", "FULL", "OUTER",
+    "CROSS", "NATURAL", "INDEXED", "NOT", "DEFAULT", "OFFSET", "END",
+}
 
 
-def rename_table(sql: str, old: str, new: str) -> str:
-    """``sql`` with its references to table ``old`` respelled ``"new"``,
-    as SQLite's ALTER TABLE RENAME TO rewrites trigger bodies: a name after
-    FROM, JOIN, INTO or UPDATE [OR <action>], after a comma in a FROM
-    list, or qualifying a column.  Literals, comments, column names and
-    function names are left alone."""
-    tokens = tokenize(sql)
-    sig = _significant(tokens)
+def _table_refs(tokens: list[Token], sig: list[int]) -> tuple[list[int], set[str]]:
+    """The sig-indexes of the names in table position in one statement
+    (after FROM, JOIN, INTO or UPDATE [OR <action>], or after a comma in a
+    FROM list; a schema-qualified name is not one), and the lowercased
+    aliases those references define (``AS a``, or a bare word after the
+    name)."""
     words = [tokens[i].text.upper() for i in sig]
     clause = [""]  # the current clause keyword, per parenthesis depth
+    refs: list[int] = []
+    aliases: set[str] = set()
     for k, i in enumerate(sig):
         w = words[k]
         if w == "(":
@@ -358,20 +363,57 @@ def rename_table(sql: str, old: str, new: str) -> str:
             clause.pop()
         elif w in _CLAUSE_WORDS or w == "FROM":
             clause[-1] = w
-        t = tokens[i]
-        if t.kind not in _IDENT_KINDS or _strip_ident(t.text).lower() != old.lower():
-            continue
-        prev = words[max(k - 3, 0):k]
-        nxt = words[k + 1] if k + 1 < len(sig) else ""
-        if prev[-1:] == ["."]:
-            continue
+        after = words[k - 1] if k else ""
         if (
-            nxt == "."
-            or prev[-1:] and prev[-1] in _TABLE_AFTER
-            or prev[:2] == ["UPDATE", "OR"]
-            or prev[-1:] == [","] and clause[-1] == "FROM"
+            tokens[i].kind not in _IDENT_KINDS
+            or after == "."
+            or words[k + 1:k + 2] == ["."]
+            or not (
+                after in _TABLE_AFTER and (after, w) != ("UPDATE", "OR")
+                or k >= 3 and words[k - 3:k - 1] == ["UPDATE", "OR"]
+                or after == "," and clause[-1] == "FROM"
+            )
         ):
-            t.text = '"' + new.replace('"', '""') + '"'
+            continue
+        refs.append(k)
+        a = k + 2 if words[k + 1:k + 2] == ["AS"] else k + 1
+        if a < len(sig) and tokens[sig[a]].kind in _IDENT_KINDS and words[a] not in _NOT_ALIAS:
+            aliases.add(_strip_ident(tokens[sig[a]].text).lower())
+    return refs, aliases
+
+
+def table_names(sql: str) -> set[str]:
+    """Lowercased names ``sql`` reads or writes in table position (see
+    ``_table_refs``): column and function names are not among them."""
+    tokens = tokenize(sql)
+    sig = _significant(tokens)
+    return {_strip_ident(tokens[sig[k]].text).lower() for k in _table_refs(tokens, sig)[0]}
+
+
+def rename_table(sql: str, old: str, new: str) -> str:
+    """``sql`` with its references to table ``old`` respelled ``"new"``,
+    as SQLite's ALTER TABLE RENAME TO rewrites trigger bodies: a name in
+    table position (``_table_refs``), or qualifying a column unless the
+    statement defines an alias of that name.  Literals, comments, column
+    names and function names are left alone."""
+    tokens = tokenize(sql)
+    sig = _significant(tokens)
+    quoted = '"' + new.replace('"', '""') + '"'
+    bounds = [-1] + [k for k, i in enumerate(sig) if tokens[i].text == ";"] + [len(sig)]
+    for lo, hi in zip(bounds, bounds[1:]):
+        stmt = sig[lo + 1:hi]
+        refs, aliases = _table_refs(tokens, stmt)
+        for k, i in enumerate(stmt):
+            t = tokens[i]
+            if t.kind not in _IDENT_KINDS or _strip_ident(t.text).lower() != old.lower():
+                continue
+            qualifier = (
+                k + 1 < len(stmt)
+                and tokens[stmt[k + 1]].text == "."
+                and not (k and tokens[stmt[k - 1]].text == ".")
+            )
+            if k in refs or qualifier and old.lower() not in aliases:
+                t.text = quoted
     return render(tokens)
 
 

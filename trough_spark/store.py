@@ -2731,7 +2731,8 @@ class SegmentStore:
             new = self._dedupe_last(new, pk)
             keys = new.select(*pk).distinct()
             kept = existing.join(keys, pk, "left_anti")
-            self._overwrite_partition(segment_id, table, kept.unionByName(new))
+            # ``new`` was checked above
+            self._overwrite_partition(segment_id, table, kept.unionByName(new), check=False)
         elif mode == "IGNORE":
             fresh = new.join(existing.select(*pk).distinct(), pk, "left_anti")
             # also dedup within the incoming batch itself (first wins)
@@ -3065,7 +3066,7 @@ class SegmentStore:
                 # lands (round 8 — one aggregate job per constraint,
                 # extended tables only)
                 self._assert_state_unique(ts, table, out)
-            self._overwrite_partition(segment_id, table, out)
+            self._overwrite_partition(segment_id, table, out, check=False)
         return {"matched": matched, "inserted": inserted}
 
     def _parse_values(self, rest: str, segment_id: str | None = None, pending=None):
@@ -3156,7 +3157,7 @@ class SegmentStore:
             path = self._partition_path(table, segment_id)
             batch = _arrow_table(rows, ts.struct())
             self._assert_keys_new(ts, table, path, batch)
-            self._assert_batch(ts, batch)
+            self._assert_batch(ts, batch, rowid=True)
             self._txn_before_write(table, segment_id)
             self._append_file(batch, path)
         pending.clear()
@@ -3179,16 +3180,16 @@ class SegmentStore:
                 os.remove(tmp)
             raise
 
-    def _assert_batch(self, ts: TableSchema, batch: pa.Table) -> None:
+    def _assert_batch(self, ts: TableSchema, batch: pa.Table, rowid: bool) -> None:
         """Raise SQLite's error if a row about to be stored has a NULL
-        rowid, or then violates a CHECK / NOT NULL, with no Spark job:
-        NULLs are Arrow null counts, and CHECKs run over a local frame,
-        which the optimizer evaluates in the driver."""
-        rowid = ts.rowid_alias
-        if rowid and batch[_declared_column(ts, rowid)].null_count:
+        rowid (tested when ``rowid``), or then violates a CHECK / NOT NULL,
+        with no Spark job: NULLs are Arrow null counts, and CHECKs run over
+        a local frame, which the optimizer evaluates in the driver."""
+        alias = ts.rowid_alias
+        if rowid and alias and batch[_declared_column(ts, alias)].null_count:
             # an INT/BIGINT pk is not the rowid and admits NULL (probed)
             raise QueryRejected(
-                f"datatype mismatch: NULL into INTEGER PRIMARY KEY {rowid!r} of {ts.name!r}"
+                f"datatype mismatch: NULL into INTEGER PRIMARY KEY {alias!r} of {ts.name!r}"
             )
         if ts.checks:
             self._assert_constraints(ts, _local_frame(self.spark, batch, ts.struct()))
@@ -3404,6 +3405,7 @@ class SegmentStore:
                     if cond
                     else df.limit(0)
                 )
+            check = rowid = False  # a DELETE writes no value
         else:
             m = _UPDATE_STMT_RE.match(stmt)
             if not m:
@@ -3451,6 +3453,7 @@ class SegmentStore:
                     raise QueryRejected(f"no such column: {col}")
                 sets[col.lower()] = dialect.sqlite_to_spark(expr)
             raw_sets = {c.lower(): e for c, e in assignments}
+            check, rowid = True, (ts.rowid_alias or "").lower() in sets
             has_subquery = re.search(
                 r"(?i)\bSELECT\b",
                 _strip_strings_only(sets_text + " " + (where_text or "")),
@@ -3510,9 +3513,7 @@ class SegmentStore:
             out = self._apply_generated_df(ts, out)
             # SQLite raises when an UPDATE lands two rows on one pk or
             # UNIQUE key (probed round 8) — checked only when the SET
-            # touches the constraint's columns.  A NULL rowid, then
-            # CHECK/NOT NULL, are checked on the whole post-image the
-            # rewrite collects (stored rows already satisfy them)
+            # touches the constraint's columns; the rewrite checks the rest
             self._assert_state_unique(ts, table, out, touched=set(sets))
             if self._ret_capturing(table) and from_text is None:
                 # UPDATE ... RETURNING yields the post-update images of the
@@ -3545,7 +3546,7 @@ class SegmentStore:
                             dict(assignments), "UPDATE",
                         )],
                     )
-        self._overwrite_partition(segment_id, table, out)
+        self._overwrite_partition(segment_id, table, out, check=check, rowid=rowid)
 
     def _update_from_picked(
         self,
@@ -3899,7 +3900,8 @@ class SegmentStore:
             survivors = [news.get(i, r) for i, r in enumerate(rows)]
         tuples = [tuple(r[n] for n, _ in ts.fields) for r in survivors]
         # OR REPLACE: CHECK still raises, in the rewrite's check
-        self._overwrite_partition(segment_id, table, _arrow_table(tuples, ts.struct()))
+        rowid = (ts.rowid_alias or "").lower() in sets
+        self._overwrite_partition(segment_id, table, _arrow_table(tuples, ts.struct()), rowid=rowid)
 
     # -- trigger execution (B14; reference semantics write.py:40 — scripts
     # -- run inside SQLite where recorded triggers fire on DML) -------------
@@ -4751,7 +4753,7 @@ class SegmentStore:
         if new_row is not None:
             row = tuple(new_row[n] for n, _ in ts.fields)
             out = out.unionByName(_local_frame(self.spark, [row], ts.struct()))
-        self._overwrite_partition(segment_id, table, out)
+        self._overwrite_partition(segment_id, table, out, check=new_row is not None)
 
     def _upsert_row_update(
         self,
@@ -5087,38 +5089,37 @@ class SegmentStore:
         ).collect()
         return [(r["_o"], r["_n"]) for r in rows]
 
-    def _overwrite_partition(self, segment_id: str, table: str, rows: DataFrame | pa.Table) -> None:
+    def _overwrite_partition(
+        self, segment_id: str, table: str, rows: DataFrame | pa.Table, *, check=True, rowid=False
+    ) -> None:
         """Replace the segment's partition with ``rows``, the table's whole
-        post-image: a frame is collected once as Arrow (its one Spark job),
-        checked in process and written as ONE file by the INSERT writer (a
-        segment is small, like the reference's one SQLite file; the file
-        pins the row order the sequential write paths collect back)."""
+        post-image, journalled for script rollback: a frame is collected
+        once as Arrow (its one Spark job) and written as ONE file by the
+        INSERT writer (a segment is small, like the reference's one SQLite
+        file; the file pins the row order the sequential paths read back).
+        A statement that writes values ``check``s CHECK / NOT NULL over the
+        image, and a NULL rowid first if it sets the ``rowid``; DELETE,
+        ALTER TABLE and compaction check nothing, so a row a bulk surface
+        stored unchecked (``append_dataframe``, ``merge``) fails none."""
         ts = self._table_schema(segment_id, table)
         if isinstance(rows, DataFrame):
             rows = rows.select([F.col(n).cast(t).alias(n) for n, t in ts.fields]).toArrow()
         batch = rows.cast(to_arrow_schema(ts.struct()))
-        self._assert_batch(ts, batch)
-        self._swap_partition(segment_id, table, lambda tmp: self._append_file(batch, tmp))
-
-    def _swap_partition(self, segment_id: str, table: str, write) -> None:
-        """Replace the segment's partition directory with the files
-        ``write(staging_dir)`` makes, journalled for script rollback."""
+        if check:
+            self._assert_batch(ts, batch, rowid=rowid)
         path = self._partition_path(table, segment_id)
         tmp = f"{self.root}/_staging/{table}/segment_id={segment_id}"
         shutil.rmtree(tmp, ignore_errors=True)
-        write(tmp)
+        self._append_file(batch, tmp)
         # atomic-ish swap (single filesystem rename pair; a crash-atomic
         # commit is ROADMAP direction 3)
         bak = path + "._old"
         if self._active_txn is not None:
             self._active_txn.before_append(path)  # pre-swap snapshot
             if any(p == path for p, _ in self._active_txn.overwrites):
-                # the txn already holds this partition's PRE-SCRIPT backup;
-                # a second overwrite in the same script must NOT replace it
-                # with the intermediate state (the write fuzzer caught
-                # rollback wiping the partition: reusing `._old` destroyed
-                # the only pre-script copy) — swap the data in place and
-                # keep the first backup authoritative
+                # the txn holds this partition's PRE-SCRIPT backup: a second
+                # overwrite in the script swaps the data in place and keeps
+                # that backup (reusing `._old` would destroy it)
                 shutil.rmtree(path, ignore_errors=True)
                 os.makedirs(os.path.dirname(path), exist_ok=True)
                 shutil.move(tmp, path)
@@ -5266,7 +5267,7 @@ class SegmentStore:
                     df = self._apply_generated_df(ts, df)
                 else:
                     df = df.withColumn(col, F.lit(self._default_for(ts, col)).cast(typ))
-                self._overwrite_partition(segment_id, table, df)
+                self._overwrite_partition(segment_id, table, df, check=False)
             return
         elif ru.startswith("RENAME TO"):
             new_name = _unquote(rest[len("RENAME TO") :].strip())
@@ -5307,7 +5308,7 @@ class SegmentStore:
             _rename_column(ts, old, new)
             self._save_table(info, ts)
             if os.path.isdir(path):
-                self._overwrite_partition(segment_id, table, df)
+                self._overwrite_partition(segment_id, table, df, check=False)
             return
         elif ru.startswith("DROP"):
             col = re.sub(r"^DROP\s+(COLUMN\s+)?", "", rest, flags=re.IGNORECASE).strip()
@@ -5336,7 +5337,8 @@ class SegmentStore:
             if os.path.isdir(path):
                 # rewritten without the column, as SQLite does: a column
                 # added back under its name starts empty
-                self._overwrite_partition(segment_id, table, self._read_partition(segment_id, table))
+                df = self._read_partition(segment_id, table)
+                self._overwrite_partition(segment_id, table, df, check=False)
             return
         else:
             raise QueryRejected(f"unsupported ALTER form: {stmt[:80]!r}")
@@ -5867,15 +5869,11 @@ class SegmentStore:
         return sorted(out)
 
     def compact(
-        self,
-        segment_id: str,
-        table: str | None = None,
-        target_files: int = 1,
-        sort_by: list[str] | None = None,
+        self, segment_id: str, table: str | None = None, sort_by: list[str] | None = None
     ) -> dict:
         """Small-files maintenance: rewrite a segment's partition(s) into
-        ``target_files`` files, optionally sorted by ``sort_by`` (clustering
-        for scan locality + better min/max pruning).  Every INSERT batch
+        one file, optionally sorted by ``sort_by`` (clustering for scan
+        locality + better min/max pruning).  Every INSERT batch
         appends a file, so long-lived segments accrete many small files —
         the classic lakehouse degradation; compaction is the classic cure.
         Bounded work (one partition), atomic via the same staged swap as
@@ -5887,11 +5885,9 @@ class SegmentStore:
                 before = len(self._parquet_files(path))
                 df = self._read_partition(segment_id, t)
                 rows = df.count()
-                if target_files > 1:
-                    df = df.repartition(target_files)
                 if sort_by:
-                    df = df.sortWithinPartitions(*sort_by)
-                self._swap_partition(segment_id, t, lambda d: self._write_files(df, d, "overwrite"))
+                    df = df.sort(*sort_by)  # one task: no exchange
+                self._overwrite_partition(segment_id, t, df, check=False)
                 report[t] = {
                     "files_before": before,
                     "files_after": len(self._parquet_files(path)),
@@ -6037,7 +6033,7 @@ def _parse_recursive_cte(sql: str) -> RecursiveCTE | None:
     step_sql = " ".join(t.text for t in body[split_at + (2 if union_all else 1) :]).strip()
     toks = dialect.tokenize(outer_sql)
     later = dialect._top_level_cte_names(toks, dialect._significant(toks))
-    if later.intersection(dialect.bindable_names(f"{base_sql} {step_sql}")):
+    if later & (dialect.table_names(base_sql) | dialect.table_names(step_sql)):
         raise QueryRejected("unsupported WITH RECURSIVE form: its body names a later CTE")
     return RecursiveCTE(
         name=name,
@@ -6300,11 +6296,14 @@ _HALF_UP = decimal.Context(prec=80, rounding=decimal.ROUND_HALF_UP)
 
 def _fit_decimal(v: decimal.Decimal | None, typ: T.DecimalType) -> decimal.Decimal | None:
     """``v`` rounded HALF_UP to ``typ``'s scale, as a Spark cast stores it;
-    a value with more integer digits than ``typ`` holds is refused."""
-    q = v if v is None else v.quantize(decimal.Decimal(1).scaleb(-typ.scale), context=_HALF_UP)
-    if q and q.adjusted() >= typ.precision - typ.scale:
-        raise QueryRejected(f"value {v} is out of range for DECIMAL({typ.precision},{typ.scale})")
-    return q
+    a value with more integer digits than ``typ`` holds, before or after
+    rounding, or one that is not finite, is refused."""
+    digits = typ.precision - typ.scale
+    if v is None or v.is_finite() and not (v and v.adjusted() >= digits):
+        q = v if v is None else v.quantize(decimal.Decimal(1).scaleb(-typ.scale), context=_HALF_UP)
+        if not (q and q.adjusted() >= digits):
+            return q
+    raise QueryRejected(f"value {v} is out of range for DECIMAL({typ.precision},{typ.scale})")
 
 
 def _local_frame(spark: SparkSession, rows, struct) -> DataFrame:
