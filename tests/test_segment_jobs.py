@@ -90,6 +90,45 @@ def test_update_and_delete_are_one_job_and_leave_one_part_file(spark, items):
     assert rows == [{"id": 5, "qty": 12}, {"id": 7, "qty": 0}]
 
 
+@pytest.mark.parametrize(
+    "setup,script",
+    [
+        ("", "UPDATE items SET id = id + 1000"),
+        ("", "UPDATE tags SET tag = tag || '!' WHERE id < 5"),
+        ("", "UPDATE items SET qty = 1 WHERE id = 5 RETURNING id, qty"),
+        ("", "DELETE FROM items WHERE id = 5 RETURNING id"),
+        (
+            "CREATE TRIGGER tr AFTER UPDATE ON items BEGIN INSERT INTO log VALUES (new.id); END",
+            "UPDATE items SET qty = 2 WHERE id < 5",
+        ),
+        (
+            "CREATE TRIGGER tr AFTER DELETE ON items BEGIN INSERT INTO log VALUES (old.id); END",
+            "DELETE FROM items WHERE id < 5",
+        ),
+    ],
+    ids=["pk-update", "unique-update", "update-returning", "delete-returning",
+         "triggered-update", "triggered-delete"],
+)
+def test_update_and_delete_evaluate_once(spark, tmp_path, setup, script):
+    """An UPDATE or DELETE evaluates its change set in one Spark job, from
+    which the key check, RETURNING and the trigger pairs all derive."""
+    store = SegmentStore(spark, str(tmp_path / "store"))
+    store.set_schema(
+        "s",
+        ITEMS + "CREATE TABLE tags (id INTEGER PRIMARY KEY, tag TEXT UNIQUE);"
+        "CREATE TABLE log (k INTEGER);",
+    )
+    store.provision("seg", "s")
+    store.write(
+        "seg",
+        "INSERT INTO items VALUES " + ", ".join(f"({i}, 'n{i}', 1)" for i in range(1, 41)) + ";\n"
+        "INSERT INTO tags VALUES " + ", ".join(f"({i}, 't{i}')" for i in range(1, 41)),
+    )
+    if setup:
+        store.write("seg", setup)
+    assert _jobs(spark, lambda: store.write("seg", script))[0] == 1
+
+
 _PARITY_TYPES = [
     ("d102", T.DecimalType(10, 2), Decimal("-99999999.99")),
     ("d386", T.DecimalType(38, 6), Decimal("12345678901234567890123456789012.123456")),

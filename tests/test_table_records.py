@@ -149,3 +149,34 @@ def test_decode_makes_no_jvm_call(spark, tmp_path, monkeypatch):
         {"id": 1, "amount": Decimal("12.34"), "day": dt.date(2024, 1, 2), "note": None},
         {"id": 2, "amount": Decimal("3.25"), "day": dt.date(2024, 2, 3), "note": None},
     ]
+
+
+def test_two_stores_on_one_root_keep_each_others_registrations(spark, tmp_path):
+    """A store writes back only the registry entries it changed, so a
+    store opened earlier does not erase what another registered since."""
+    root = str(tmp_path / "st")
+    setup = SegmentStore(spark, root)
+    setup.set_schema("k", "CREATE TABLE t (id INTEGER PRIMARY KEY);")
+    setup.provision("seg", "k")
+    a, b = SegmentStore(spark, root), SegmentStore(spark, root)
+    a.write("seg", "CREATE TABLE z (q INT)")
+    b.provision("segb", "k")
+    reopened = SegmentStore(spark, root)
+    assert reopened.list_segments() == ["seg", "segb"]
+    assert reopened._segment_tables("seg") == ["t", "z"]
+    # b's view of the entry it did not touch is refreshed, not kept stale
+    assert b._segment_tables("seg") == ["t", "z"]
+
+
+def test_a_store_does_not_bring_back_a_segment_another_deleted(spark, tmp_path):
+    root = str(tmp_path / "st")
+    setup = SegmentStore(spark, root)
+    setup.set_schema("k", "CREATE TABLE t (id INTEGER PRIMARY KEY);")
+    for seg in ("keep", "gone"):
+        setup.provision(seg, "k")
+    a, b = SegmentStore(spark, root), SegmentStore(spark, root)
+    b.delete_segment("gone")
+    a.write("keep", "CREATE TABLE z (q INT)")
+    reopened = SegmentStore(spark, root)
+    assert reopened.list_segments() == ["keep"]
+    assert reopened._segment_tables("keep") == ["t", "z"]

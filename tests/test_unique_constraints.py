@@ -20,16 +20,18 @@ from trough_spark.store import QueryRejected, SegmentStore
 
 def _run_differential(spark, tmp_path, title, ddl, stmts):
     """Run the same script against live SQLite and the store; compare
-    error positions and final table contents."""
+    error positions, the rows RETURNING reports and final table
+    contents."""
     con = sqlite3.connect(":memory:")
     for d in ddl.strip().rstrip(";").split(";"):
         con.execute(d)
-    sq_err = []
+    sq_err, sq_ret = [], []
     for s in stmts:
         try:
-            con.execute(s)
+            sq_ret.append(sorted(con.execute(s).fetchall()))
             sq_err.append(None)
         except sqlite3.Error as e:
+            sq_ret.append(None)
             sq_err.append(str(e))
     cols = [c[0] for c in con.execute("SELECT * FROM t").description]
     sq_rows = sorted(
@@ -40,12 +42,13 @@ def _run_differential(spark, tmp_path, title, ddl, stmts):
     store = SegmentStore(spark, str(tmp_path / f"st_{abs(hash(title)) % 10**8}"))
     store.set_schema("s", ddl if ddl.rstrip().endswith(";") else ddl + ";")
     store.provision("seg", "s")
-    en_err = []
+    en_err, en_ret = [], []
     for s in stmts:
         try:
-            store.write("seg", s)
+            en_ret.append(sorted(tuple(d.values()) for d in store.write("seg", s)))
             en_err.append(None)
         except QueryRejected as e:
+            en_ret.append(None)
             en_err.append(str(e))
     en_rows = sorted(
         tuple(d[k] for k in sorted(d))
@@ -55,6 +58,7 @@ def _run_differential(spark, tmp_path, title, ddl, stmts):
         assert (a is None) == (b is None), (
             f"{title} stmt {i}: sqlite={a!r} engine={b!r}"
         )
+    assert sq_ret == en_ret, f"{title}: RETURNING {sq_ret} vs {en_ret}"
     assert sq_rows == en_rows, f"{title}: rows {sq_rows} vs {en_rows}"
 
 
@@ -360,6 +364,74 @@ CASES = [
         "CREATE TABLE t (n INT); CREATE TABLE x (id INT)",
         ["CREATE TRIGGER tr AFTER INSERT ON x BEGIN INSERT INTO t VALUES (new.id); END",
          "INSERT INTO x VALUES (1)", "DROP TRIGGER TR", "INSERT INTO x VALUES (2)"],
+    ),
+    # An UPDATE or DELETE binds its table name, column collations and
+    # subqueries as a SELECT does, and evaluates its SET values before any
+    # BEFORE trigger body runs
+    (
+        "update with table-qualified columns",
+        "CREATE TABLE t (n INT, m INT)",
+        ["INSERT INTO t VALUES (1, 0), (2, 0)", "UPDATE t SET m = t.n * 10 WHERE t.n = 1"],
+    ),
+    (
+        "delete with a table-qualified column",
+        "CREATE TABLE t (n INT, m INT)",
+        ["INSERT INTO t VALUES (1, 0), (2, 0)", "DELETE FROM t WHERE t.n = 2"],
+    ),
+    (
+        "triggered update with table-qualified columns",
+        "CREATE TABLE t (id INTEGER PRIMARY KEY, v INT); CREATE TABLE log (k INT)",
+        ["INSERT INTO t VALUES (1, 1), (2, 2)",
+         "CREATE TRIGGER a AFTER UPDATE ON t BEGIN INSERT INTO log VALUES (new.id); END",
+         "UPDATE t SET v = t.id * 3 WHERE t.id = 2"],
+    ),
+    (
+        "update returning with a table-qualified column",
+        "CREATE TABLE t (id INTEGER PRIMARY KEY, v INT)",
+        ["INSERT INTO t VALUES (1, 1), (2, 2)", "UPDATE t SET v = 9 WHERE t.id = 2 RETURNING id"],
+    ),
+    (
+        "trigger body with table-qualified columns",
+        "CREATE TABLE t (id INTEGER PRIMARY KEY, v INT); CREATE TABLE log (k INT)",
+        ["INSERT INTO t VALUES (1, 1), (2, 2)",
+         "CREATE TRIGGER a AFTER INSERT ON log BEGIN "
+         "UPDATE t SET v = t.v + 10 WHERE t.id = new.k; END",
+         "INSERT INTO log VALUES (2)"],
+    ),
+    (
+        "nocase column in an update where",
+        "CREATE TABLE t (id INTEGER PRIMARY KEY, name TEXT COLLATE NOCASE, v INT)",
+        ["INSERT INTO t VALUES (1, 'alpha', 0), (2, 'beta', 0)",
+         "UPDATE t SET v = 1 WHERE name = 'ALPHA'"],
+    ),
+    (
+        "nocase column in a delete where",
+        "CREATE TABLE t (id INTEGER PRIMARY KEY, name TEXT COLLATE NOCASE, v INT)",
+        ["INSERT INTO t VALUES (1, 'alpha', 0), (2, 'beta', 0)",
+         "DELETE FROM t WHERE name = 'ALPHA'"],
+    ),
+    (
+        "triggered delete with a subquery where",
+        "CREATE TABLE t (id INTEGER PRIMARY KEY, v INT); CREATE TABLE k (x INT); "
+        "CREATE TABLE log (k INT)",
+        ["INSERT INTO t VALUES (1, 1), (2, 2), (3, 3)", "INSERT INTO k VALUES (2), (3)",
+         "CREATE TRIGGER a AFTER DELETE ON t BEGIN INSERT INTO log VALUES (old.id); END",
+         "DELETE FROM t WHERE id IN (SELECT x FROM k)"],
+    ),
+    (
+        "triggered update with a subquery where",
+        "CREATE TABLE t (id INTEGER PRIMARY KEY, v INT); CREATE TABLE k (x INT); "
+        "CREATE TABLE log (k INT)",
+        ["INSERT INTO t VALUES (1, 1), (2, 2), (3, 3)", "INSERT INTO k VALUES (2), (3)",
+         "CREATE TRIGGER a AFTER UPDATE ON t BEGIN INSERT INTO log VALUES (new.id); END",
+         "UPDATE t SET v = v * 100 WHERE id IN (SELECT x FROM k)"],
+    ),
+    (
+        "set value computed before the before trigger body",
+        "CREATE TABLE t (id INTEGER PRIMARY KEY, v INT); CREATE TABLE log (k INT)",
+        ["INSERT INTO t VALUES (1, 1), (2, 2)",
+         "CREATE TRIGGER b BEFORE UPDATE ON t BEGIN INSERT INTO log VALUES (NEW.id); END",
+         "UPDATE t SET v = (SELECT count(*) FROM log) + 10 WHERE id = 1"],
     ),
 ]
 

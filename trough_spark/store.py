@@ -50,10 +50,12 @@ from dataclasses import dataclass, field
 
 from py4j.protocol import Py4JError
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql.conversion import ArrowTableToRowsConversion
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import _create_converter, _make_type_verifier
 
@@ -1595,6 +1597,42 @@ class _RetCapture:
         self.depth = 0
 
 
+class _ChangeSet:
+    """One UPDATE or DELETE evaluated once, as ``SegmentStore._change_set``
+    collects it: the table's rows in file order, a ``__trough_hit__`` mask
+    and, for an UPDATE, every row's post-image in the declared columns with
+    the prior value of each column it may change in ``__trough_old<j>__``
+    (``j`` the column's position).  The write, the trigger pairs and the
+    RETURNING rows all derive from it."""
+
+    def __init__(self, kind: str, ts: TableSchema, image: pa.Table, sets: set[str]):
+        names = [n for n, _t in ts.fields]
+        self.kind, self.ts, self.sets = kind, ts, sets
+        self.hit = image["__trough_hit__"]
+        self.hits = image.filter(self.hit)
+        # the table's whole post-image, the rows the write puts down
+        self.post = (image if kind == "UPDATE" else image.filter(pc.invert(self.hit))).select(names)
+
+    def rows(self, table: pa.Table) -> list[Row]:
+        """Rows as ``DataFrame.collect`` gives them."""
+        return ArrowTableToRowsConversion.convert(table, self.ts.struct(), binary_as_bytes=False)
+
+    def returned(self) -> list[Row]:
+        """The rows RETURNING reports: the removed rows of a DELETE, the
+        new images of the rows an UPDATE hit."""
+        return self.rows(self.hits.select(self.post.column_names))
+
+    def pairs(self) -> list[tuple]:
+        """(OLD, NEW) per hit row, NEW None for a DELETE."""
+        old = self.hits.select(self.post.column_names)
+        for j, name in enumerate(old.column_names):
+            if f"__trough_old{j}__" in self.hits.column_names:
+                old = old.set_column(j, name, self.hits[f"__trough_old{j}__"])
+        if self.kind == "DELETE":
+            return [(o, None) for o in self.rows(old)]
+        return list(zip(self.rows(old), self.returned()))
+
+
 class SegmentNotFound(KeyError):
     """The named segment is not provisioned (a client error: HTTP 404)."""
 
@@ -1719,6 +1757,7 @@ class SegmentStore:
         os.makedirs(f"{self.root}/tables", exist_ok=True)
         self._registry_path = f"{self.root}/_meta.json"
         self._meta = self._load_meta()
+        self._seen = self._meta_seen()
         # point-read view cache: each segment table, segment view and
         # sqlite_master content is a temp view under its own internal name,
         # bound into each statement by a WITH prefix, so segments never
@@ -1759,6 +1798,13 @@ class SegmentStore:
             with open(self._registry_path) as f:
                 return json.load(f)
         return {"schemas": {"default": ""}, "segments": {}}
+
+    def _meta_seen(self) -> dict:
+        """Each registry entry as this store last read or wrote it."""
+        return {
+            part: {k: json.dumps(v, sort_keys=True) for k, v in self._meta[part].items()}
+            for part in ("schemas", "segments")
+        }
 
     lock_timeout: float = 10.0  # seconds an acquirer waits before failing
 
@@ -1817,7 +1863,29 @@ class SegmentStore:
                 os.remove(path)
 
     def _save_meta(self) -> None:
+        """Publish the registry entries this store changed since it last
+        read or wrote the file, over what is on disk now, so another store
+        on the same root keeps what it registered meanwhile; the store's
+        other entries are refreshed from disk in place (a held ``info``
+        dict stays valid)."""
         with self._file_lock("_meta"):
+            disk = self._load_meta()
+            for part, seen in self._seen.items():
+                mine, theirs = self._meta[part], disk[part]
+                for k in set(seen) - set(mine):
+                    theirs.pop(k, None)  # deleted here
+                for k, v in mine.items():
+                    if json.dumps(v, sort_keys=True) != seen.get(k):
+                        theirs[k] = v  # created or changed here
+                for k in set(mine) - set(theirs):
+                    del mine[k]
+                for k, v in theirs.items():
+                    if isinstance(mine.get(k), dict) and mine[k] is not v:
+                        mine[k].clear()
+                        mine[k].update(v)
+                    else:
+                        mine[k] = v
+            self._seen = self._meta_seen()
             tmp = self._registry_path + ".tmp"
             with open(tmp, "w") as f:
                 json.dump(self._meta, f, sort_keys=True, separators=(",", ":"))
@@ -3281,18 +3349,13 @@ class SegmentStore:
             out.append((_fold_sql(f"`{c}`", eff), eff))
         return out
 
-    def _assert_state_unique(
-        self, ts: TableSchema, table: str, state: DataFrame, touched=None
-    ) -> None:
+    def _assert_state_unique(self, ts: TableSchema, table: str, state: DataFrame) -> None:
         """Raise if a final table state contains duplicate keys under any
         declared uniqueness constraint (collation-folded; NULL key
-        components never conflict) — the post-hoc guard for paths that
-        compute a whole-partition state.  With ``touched`` (lower-case
-        column names), only constraints over one of those columns are
-        checked: one aggregate job per checked constraint."""
+        components never conflict) — the post-hoc guard for the bulk
+        paths (``merge``, INSERT..SELECT) that compute a whole-partition
+        state: one aggregate job per constraint."""
         for ucols, ucolls in ts.unique_constraints():
-            if touched is not None and not touched & {k.lower() for k in ucols}:
-                continue
             folded = self._fold_cols(ts, ucols, ucolls)
             dup = (
                 state.selectExpr(
@@ -3351,202 +3414,113 @@ class SegmentStore:
             new = new.unionByName(self._read_files(path, ts.struct()))
         self._assert_state_unique(ts, table, new)
 
-    def _rewrite_partition(self, segment_id: str, stmt: str, kind: str) -> None:
+    def _rewrite_partition(
+        self, segment_id: str, ts: TableSchema, kind: str, where: str | None,
+        sets: list[tuple[str, str]] = (), from_text: str | None = None,
+    ) -> _ChangeSet:
         """UPDATE/DELETE = read-modify-overwrite of ONE segment partition —
         bounded work by construction, the whole point of trough-style
-        segments (SURVEY §2.B16)."""
-        if kind == "DELETE":
-            m = _DELETE_STMT_RE.match(stmt)
-            if not m:
-                raise QueryRejected(f"unsupported DELETE form: {stmt[:80]!r}")
-            table = self._stmt_table(segment_id, m)
-            cond = m.group("where")
-            df = self._read_partition(segment_id, table)
-            has_subquery = cond and re.search(
-                r"(?i)\bSELECT\b", _strip_strings_only(cond)
-            )
-            if self._ret_capturing(table):
-                # DELETE ... RETURNING yields the removed rows (pre-images)
-                if has_subquery:
-                    self._ret_add(
-                        table,
-                        self.read_df(
-                            segment_id,
-                            f'SELECT * FROM "{table}" WHERE ({cond})',
-                        ).collect(),
-                    )
-                else:
-                    self._ret_add(
-                        table,
-                        [old for old, _n in self._affected_rows(
-                            segment_id, table, cond, None, "DELETE"
-                        )],
-                    )
-            # DELETE removes rows whose predicate is TRUE; rows where it is
-            # NULL survive (three-valued logic — a bare NOT(pred) filter
-            # would drop them, found by the write-path fuzzer)
-            if has_subquery:
-                # a WHERE subquery reads OTHER tables of the segment: route
-                # the survivor scan through the read path (every segment
-                # name bound; the subquery sees pre-delete state like
-                # SQLite); type-clean 3VL via CASE
-                types = {n.lower(): t for n, t in
-                         self._table_schema(segment_id, table).fields}
-                out = self.read_df(
-                    segment_id,
-                    f'SELECT * FROM "{table}" '
-                    f"WHERE CASE WHEN ({cond}) THEN 0 ELSE 1 END = 1",
-                ).select([F.col(n).cast(types[n.lower()]) for n in df.columns])
-            else:
-                out = (
-                    df.filter(
-                        f"NOT coalesce(({dialect.sqlite_to_spark(cond)}), false)"
-                    )
-                    if cond
-                    else df.limit(0)
-                )
-            check = rowid = False  # a DELETE writes no value
+        segments (SURVEY §2.B16): its change set, evaluated once, applied."""
+        cs = self._change_set(segment_id, ts, kind, where, sets, from_text)
+        self._apply_change_set(segment_id, cs)
+        return cs
+
+    def _change_set(
+        self, segment_id: str, ts: TableSchema, kind: str, where: str | None,
+        sets: list[tuple[str, str]] = (), from_text: str | None = None,
+    ) -> _ChangeSet:
+        """Evaluate one UPDATE (``sets``, and its FROM relations) or DELETE
+        once, as ONE read-path query over the target table collected as
+        Arrow: the table name, column collations and subqueries bind as
+        they do for a SELECT.  SQLite evaluates the WHERE and every SET
+        expression against the PRE-update row (sqlite3 UPDATE docs), as
+        one projection does; a NULL WHERE hits nothing (three-valued
+        logic).  Generated columns recompute from the post-update base
+        values (identical for untouched rows — deterministic by DDL rule).
+        A STRICT table checks the natural SET values of the hit rows."""
+        table = ts.name
+        declared = {n.lower() for n, _t in ts.fields}
+        for col, _e in sets:
+            if col.lower() not in declared:
+                raise QueryRejected(f"no such column: {col}")
+        slot = {c.lower(): i for i, (c, _e) in enumerate(sets)}  # last wins
+        if from_text is None:
+            cols = [f"coalesce(({where}), false) AS __trough_hit__" if where else "true AS __trough_hit__"]
+            cols += [f"({e}) AS __trough_set{i}__" for i, (_c, e) in enumerate(sets)]
+            raw = self.read_df(segment_id, f'SELECT *, {", ".join(cols)} FROM "{table}"')
         else:
-            m = _UPDATE_STMT_RE.match(stmt)
-            if not m:
-                raise QueryRejected(f"unsupported UPDATE form: {stmt[:80]!r}")
-            table = self._stmt_table(segment_id, m)
-            umode = _update_mode(m)
-            ts0 = self._table_schema(segment_id, table)
-            if umode is not None:
-                if ts0.has_extended_uniqueness():
-                    # the position-visit model below resolves pk conflicts
-                    # only; folding UNIQUE constraints into the evolving
-                    # chase is undone work — reject LOUDLY rather than
-                    # silently diverge (round-8 UNIQUE support scope note)
-                    raise QueryRejected(
-                        "UPDATE OR IGNORE/REPLACE on a table with UNIQUE "
-                        "constraints or non-BINARY key collations is not "
-                        f"supported: {stmt[:80]!r}"
-                    )
-                # UPDATE OR IGNORE/REPLACE: SQLite applies rows
-                # SEQUENTIALLY in rowid order, resolving each row's pk
-                # conflict against the evolving table (probed: OR IGNORE
-                # on (1,2,3) with id=id+1 WHERE id<3 changes NOTHING —
-                # each bump collides with the still-present next row; OR
-                # REPLACE deletes the collided-with row), and OR IGNORE
-                # also skips rows whose update violates CHECK/NOT NULL
-                self._update_with_conflict_mode(
-                    segment_id, table, ts0, m, umode
-                )
-                return
-            df = self._read_partition(segment_id, table)
-            sets_text, from_text, where_text = _update_parts(m)
-            cond = dialect.sqlite_to_spark(where_text) if where_text else "true"
-            assignments = _split_assignments(sets_text)
-            # SQLite evaluates the WHERE and every SET expression against the
-            # PRE-update row (sqlite3 UPDATE docs); a single select() gives
-            # exactly that — all exprs reference the input df's columns, so
-            # no assignment can observe another's result or flip the mask.
-            sets = {}
-            ts = self._table_schema(segment_id, table)
-            self._reject_generated_targets(
-                ts, [c for c, _e in assignments], "UPDATE"
+            base = self.read_df(segment_id, f'SELECT * FROM "{table}"')
+            picked = self._update_from_picked(segment_id, table, ts, sets, from_text, where)
+            raw = base.join(
+                picked,
+                [base[k] == picked[f"__pk_{j}"] for j, k in enumerate(ts.primary_key)],
+                "left",
+            ).select(
+                *[base[n] for n in base.columns],
+                picked["__s"].isNotNull().alias("__trough_hit__"),
+                *[picked["__s"][f"__set_{i}"].alias(f"__trough_set{i}__") for i in range(len(sets))],
             )
-            for col, expr in assignments:
-                if col.lower() not in {c.lower() for c in df.columns}:
-                    raise QueryRejected(f"no such column: {col}")
-                sets[col.lower()] = dialect.sqlite_to_spark(expr)
-            raw_sets = {c.lower(): e for c, e in assignments}
-            check, rowid = True, (ts.rowid_alias or "").lower() in sets
-            has_subquery = re.search(
-                r"(?i)\bSELECT\b",
-                _strip_strings_only(sets_text + " " + (where_text or "")),
-            )
-            if from_text is not None:
-                out = self._update_from_join(
-                    segment_id, table, ts, df, assignments,
-                    from_text, where_text,
-                )
-            elif has_subquery:
-                # SET/WHERE subqueries read OTHER tables of the segment —
-                # evaluate the whole post-image through the read path (every
-                # segment name bound), SQLite-dialect in, one scan
-                # out; subqueries see pre-update state like SQLite (pending
-                # rows were flushed by the caller)
-                w = where_text
-                # CASE WHEN handles the 3VL mask (NULL predicate -> ELSE,
-                # i.e. the row keeps its value); with no WHERE every row
-                # takes the SET expression directly
-                projs = ", ".join(
-                    (
-                        f'CASE WHEN ({w}) THEN ({raw_sets[n.lower()]}) '
-                        f'ELSE "{n}" END AS "{n}"'
-                        if w
-                        else f'({raw_sets[n.lower()]}) AS "{n}"'
-                    )
-                    if n.lower() in raw_sets
-                    else f'"{n}"'
-                    for n in df.columns
-                )
-                types = {n.lower(): t for n, t in ts.fields}
-                nat = self.read_df(segment_id, f'SELECT {projs} FROM "{table}"')
-                self._strict_check_df(ts, table, nat, cols=list(raw_sets))
-                out = nat.select(
-                    [F.col(n).cast(types[n.lower()]) for n in df.columns]
-                )
-            else:
-                mask = F.expr(cond)
-                if ts.strict and sets:
-                    # natural (pre-coercion) SET values of the matched rows
-                    self._strict_check_df(
-                        ts, table,
-                        df.filter(mask).select(
-                            *[F.expr(e).alias(c) for c, e in sets.items()]
-                        ),
-                    )
-                out = df.select(
-                    [
-                        F.when(mask, F.expr(sets[n.lower()])).otherwise(F.col(n)).alias(n)
-                        if n.lower() in sets
-                        else F.col(n)
-                        for n in df.columns
-                    ]
-                )
-            # generated columns recompute from the post-update base values
-            # (identical for untouched rows — deterministic by DDL rule)
+        hit = F.col("__trough_hit__")
+        changed = set(slot) | ({c.lower() for c in ts.generated} if sets else set())
+        natural = [  # a collated string is stored as a plain one
+            F.col(f"__trough_set{i}__").cast(T.StringType()).alias(f"__trough_set{i}__")
+            if isinstance(raw.schema[f"__trough_set{i}__"].dataType, T.StringType)
+            else F.col(f"__trough_set{i}__")
+            for i in slot.values()
+        ] if ts.strict else []
+        out = raw.select(
+            *[
+                (
+                    F.when(hit, F.col(f"__trough_set{slot[n.lower()]}__").cast(t))
+                    .otherwise(F.col(n).cast(t))
+                    if n.lower() in slot
+                    else F.col(n).cast(t)
+                ).alias(n)
+                for n, t in ts.fields
+            ],
+            hit,
+            *[
+                F.col(n).cast(t).alias(f"__trough_old{j}__")
+                for j, (n, t) in enumerate(ts.fields)
+                if n.lower() in changed
+            ],
+            *natural,
+        )
+        if sets:
             out = self._apply_generated_df(ts, out)
-            # SQLite raises when an UPDATE lands two rows on one pk or
-            # UNIQUE key (probed round 8) — checked only when the SET
-            # touches the constraint's columns; the rewrite checks the rest
-            self._assert_state_unique(ts, table, out, touched=set(sets))
-            if self._ret_capturing(table) and from_text is None:
-                # UPDATE ... RETURNING yields the post-update images of the
-                # rows the WHERE matched (the FROM path captures inside
-                # _update_from_join, where the join decides the matches)
-                if has_subquery:
-                    # post-images through the read path, filtered to the
-                    # matched rows (subqueries can't bind against the bare
-                    # partition scan _affected_rows uses)
-                    w2 = where_text
-                    flt = f"({w2})" if w2 else "1"
-                    projs2 = ", ".join(
-                        f'({raw_sets[n.lower()]}) AS "{n}"'
-                        if n.lower() in raw_sets
-                        else f'"{n}"'
-                        for n in df.columns
-                    )
-                    self._ret_add(
-                        table,
-                        self.read_df(
-                            segment_id,
-                            f'SELECT {projs2} FROM "{table}" WHERE {flt}',
-                        ).collect(),
-                    )
-                else:
-                    self._ret_add(
-                        table,
-                        [new for _o, new in self._affected_rows(
-                            segment_id, table, where_text,
-                            dict(assignments), "UPDATE",
-                        )],
-                    )
-        self._overwrite_partition(segment_id, table, out, check=check, rowid=rowid)
+        cs = _ChangeSet(kind, ts, out.toArrow(), set(slot))
+        if natural and cs.hits.num_rows:
+            # SQLite checks a STRICT column's type per row written, so an
+            # UPDATE that hits nothing stores nothing and raises nothing
+            names = [f"__trough_set{i}__" for i in slot.values()]
+            nat = cs.hits.select(names).rename_columns(
+                [_declared_column(ts, c) for c in slot]
+            )
+            struct = T.StructType(
+                [T.StructField(c, out.schema[n].dataType) for c, n in zip(nat.column_names, names)]
+            )
+            self._strict_check_df(ts, table, _local_frame(self.spark, nat, struct))
+        return cs
+
+    def _apply_change_set(self, segment_id: str, cs: _ChangeSet) -> None:
+        """Write a change set's post-image.  An UPDATE that lands two rows
+        on one PRIMARY KEY or UNIQUE key raises (probed round 8) — checked
+        in process over the post-image for the constraints whose columns
+        the SET names, before the rewrite's rowid and CHECK / NOT NULL
+        checks."""
+        ts = cs.ts
+        for cols, colls in ts.unique_constraints():
+            if cs.sets.isdisjoint(c.lower() for c in cols):
+                continue
+            keys = self._key_tuples(
+                ts, cols, colls, [cs.post[_declared_column(ts, c)].to_pylist() for c in cols]
+            )
+            if len(keys) != len(set(keys)):
+                raise self._unique_error(ts.name, cols)
+        self._overwrite_partition(
+            segment_id, ts.name, cs.post, check=cs.kind == "UPDATE",
+            rowid=(ts.rowid_alias or "").lower() in cs.sets,
+        )
 
     def _update_from_picked(
         self,
@@ -3561,9 +3535,8 @@ class SegmentStore:
         target row, every SET expression evaluated against (target row ×
         FROM product) through the read path, deduplicated to one
         deterministic greatest SET-value tuple per PRIMARY KEY —
-        (__pk_0.., __s struct).  Shared by the trigger-free join rewrite
-        and the round-10 triggered-pairs path so both apply the identical
-        change."""
+        (__pk_0.., __s struct), which `_change_set` joins back onto the
+        target table by PRIMARY KEY."""
         if not ts.primary_key:
             raise QueryRejected(
                 f"UPDATE ... FROM on table {table!r} with no PRIMARY KEY "
@@ -3599,65 +3572,6 @@ class SegmentStore:
                 F.struct(*[F.col(f"__set_{i}") for i in range(len(assignments))])
             ).alias("__s")
         )
-
-    def _update_from_join(
-        self,
-        segment_id: str,
-        table: str,
-        ts: TableSchema,
-        df: DataFrame,
-        assignments: list[tuple[str, str]],
-        from_text: str,
-        where: str | None,
-    ) -> DataFrame:
-        """``UPDATE t SET ... FROM <relations> WHERE ...`` (SQLite 3.33,
-        lang_update.html §2) as one declarative join: the read path
-        evaluates, per matching target row, every SET expression against
-        (target row × FROM product) — subqueries, aliases and comma-joins
-        in FROM come for free — and the result joins back onto the
-        partition by PRIMARY KEY.  Unmatched rows are untouched (probed).
-
-        When several FROM rows match one target row SQLite documents the
-        outcome as unpredictable; this engine picks the greatest SET-value
-        tuple (deterministic, and any choice is conforming).  A pk-less
-        target has no stable row identity for the join-back — rejected
-        loudly (SQLite uses the rowid, which this engine does not track)."""
-        picked = self._update_from_picked(
-            segment_id, table, ts, assignments, from_text, where
-        )
-        pk = ts.primary_key
-        joined = df.join(
-            picked,
-            [df[k] == picked[f"__pk_{j}"] for j, k in enumerate(pk)],
-            "left",
-        )
-        types = {n.lower(): t for n, t in ts.fields}
-        lowered = {c.lower(): i for i, (c, _e) in enumerate(assignments)}
-        hit = picked["__s"].isNotNull()
-        out = joined.select(
-            [
-                F.when(
-                    hit,
-                    picked["__s"][f"__set_{lowered[n.lower()]}"].cast(
-                        types[n.lower()]
-                    ),
-                )
-                .otherwise(df[n])
-                .alias(n)
-                if n.lower() in lowered
-                else df[n]
-                for n in df.columns
-            ]
-        )
-        if self._ret_capturing(table):
-            post = self._apply_generated_df(ts, out)
-            keys = picked.select(
-                *[F.col(f"__pk_{j}").alias(k) for j, k in enumerate(pk)]
-            )
-            self._ret_add(
-                table, post.join(F.broadcast(keys), pk, "left_semi").collect()
-            )
-        return out
 
     def _upsert_update_sequential(
         self,
@@ -3718,7 +3632,8 @@ class SegmentStore:
         self._overwrite_partition(segment_id, table, _arrow_table(tuples, ts.struct()))
 
     def _update_with_conflict_mode(
-        self, segment_id: str, table: str, ts: TableSchema, m: re.Match, umode: str
+        self, segment_id: str, ts: TableSchema, sets: list[tuple[str, str]],
+        where: str | None, umode: str, stmt: str,
     ) -> None:
         """UPDATE OR IGNORE / OR REPLACE — SQLite's probed two-pass model:
         pass 1 collects the matching rows' pk POSITIONS in pk order; pass 2
@@ -3746,34 +3661,35 @@ class SegmentStore:
         the previous pk-ordered chase could diverge from SQLite there).
         NULL pk components never conflict and NULL-pk rows keep their own
         identity via unique sentinel keys (they must not collapse)."""
+        table = ts.name
+        if ts.has_extended_uniqueness():
+            # the position-visit model below resolves pk conflicts only;
+            # folding UNIQUE constraints into the evolving chase is undone
+            # work — reject LOUDLY rather than silently diverge (round-8
+            # UNIQUE support scope note)
+            raise QueryRejected(
+                "UPDATE OR IGNORE/REPLACE on a table with UNIQUE "
+                "constraints or non-BINARY key collations is not "
+                f"supported: {stmt[:80]!r}"
+            )
         pkcols = list(ts.primary_key or [])
         declared = {n.lower() for n, _ in ts.fields}
-        sets_text_cm, _from_cm, where_cm = _update_parts(m)
-        sets = {c.lower(): e for c, e in _split_assignments(sets_text_cm)}
-        self._reject_generated_targets(ts, list(sets), "UPDATE")
-        for c in sets:
-            if c not in declared:
-                raise QueryRejected(f"no such column: {c}")
-        stripped = re.sub(
-            r"(?is)^(\s*)UPDATE\s+OR\s+\w+\s+", r"\1UPDATE ", m.string, count=1
-        )
         if not pkcols and (
             umode == "REPLACE" or not self._violation_conds(ts)
         ):
             # no pk => pk conflicts impossible; OR REPLACE == plain, and
             # OR IGNORE only differs when a constraint could reject a row
-            return self._rewrite_partition(segment_id, stripped, "UPDATE")
-        where = where_cm
-        mask = (
-            f"coalesce(({dialect.sqlite_to_spark(where)}), false)"
-            if where
-            else "true"
-        )
-        rows = (
-            self._read_partition(segment_id, table)
-            .selectExpr("*", f"({mask}) AS __trough_mask__")
-            .collect()
-        )
+            cs = self._rewrite_partition(segment_id, ts, "UPDATE", where, sets)
+            if self._ret_capturing(table):
+                self._ret_add(table, cs.returned())
+            return
+        sets = {c.lower(): e for c, e in sets}
+        for c in sets:
+            if c not in declared:
+                raise QueryRejected(f"no such column: {c}")
+        # the rows and the WHERE mask, as one SET-less change set reads them
+        cs = self._change_set(segment_id, ts, "UPDATE", where)
+        rows, mask = cs.rows(cs.post), cs.hit.to_pylist()
 
         def bind(expr: str, row) -> str:
             return _sub_new_old(
@@ -3831,11 +3747,11 @@ class SegmentStore:
 
             state: dict[tuple, Row] = {}
             victims: list[tuple[tuple, tuple]] = []
-            for r in rows:
+            for r, hit in zip(rows, mask):
                 k = tuple(r[c] for c in pkcols)
                 key = keyof(k)
                 state[key] = r
-                if r["__trough_mask__"]:
+                if hit:
                     victims.append((k, key))
             victims.sort(
                 key=lambda t: tuple((v is None, v) for v in t[0])
@@ -3870,7 +3786,7 @@ class SegmentStore:
             # loudly when any update could pk-conflict (order-dependent)
             news: dict[int, Row] = {}
             for i, r in enumerate(rows):
-                if not r["__trough_mask__"]:
+                if not mask[i]:
                     continue
                 new = updated_row(r)
                 if umode == "IGNORE" and self._row_violates(ts, new):
@@ -3894,7 +3810,7 @@ class SegmentStore:
                             "table whose PRIMARY KEY is not an INTEGER "
                             "rowid alias: SQLite resolves these in rowid "
                             "(insertion) order, which this engine does not "
-                            f"track — rejected loudly: {m.string[:80]!r}"
+                            f"track — rejected loudly: {stmt[:80]!r}"
                         )
                     seen_new.add(nk)
             survivors = [news.get(i, r) for i, r in enumerate(rows)]
@@ -4817,49 +4733,57 @@ class SegmentStore:
     def _dml_with_triggers(
         self, segment_id: str, stmt: str, kind: str, pending: dict
     ) -> None:
-        """UPDATE/DELETE with trigger firing: compute the affected (OLD, NEW)
-        rows once, fire BEFORE bodies, apply the partition rewrite, fire
-        AFTER bodies.  Row collection is gated on a matching trigger —
-        trigger-free DML keeps the zero-collect path."""
+        """UPDATE/DELETE: evaluate the statement's change set once, fire
+        BEFORE bodies on its (OLD, NEW) pairs, apply it, fire AFTER bodies.
+        Like SQLite, a triggered statement applies the change it fired on,
+        computed before BEFORE; only when a body (or its cascade) may write
+        the target table is the partition after BEFORE another than the
+        one the change set read, and the statement is applied again."""
         if kind == "DELETE":
             m = _DELETE_STMT_RE.match(stmt)
             if not m:
                 raise QueryRejected(f"unsupported DELETE form: {stmt[:80]!r}")
-            table, sets, from_text = self._stmt_table(segment_id, m), None, None
+            table, sets, from_text = self._stmt_table(segment_id, m), [], None
+            where = m.group("where")
+            ts = self._table_schema(segment_id, table)
             trigs = self._triggers_for(segment_id, table, "DELETE")
         else:
             m = _UPDATE_STMT_RE.match(stmt)
             if not m:
                 raise QueryRejected(f"unsupported UPDATE form: {stmt[:80]!r}")
             table = self._stmt_table(segment_id, m)
-            sets_text, from_text, upd_where = _update_parts(m)
-            sets = dict(_split_assignments(sets_text))
-            if self._view_name_of(segment_id, table) is None:
-                self._reject_generated_targets(
-                    self._table_schema(segment_id, table), list(sets), "UPDATE"
-                )
+            sets_text, from_text, where = _update_parts(m)
+            sets = _split_assignments(sets_text)
+            ts = self._table_schema(segment_id, table)
+            self._reject_generated_targets(ts, [c for c, _e in sets], "UPDATE")
             trigs = self._triggers_for(
-                segment_id, table, "UPDATE", set_cols=list(sets)
+                segment_id, table, "UPDATE", set_cols=[c for c, _e in sets]
             )
-            if from_text is not None:
-                # UPDATE ... FROM (SQLite 3.33): triggers are supported
-                # since round 10 via the pairs path below (the OR-mode
-                # interplay stays a loud reject)
-                if _update_mode(m) is not None:
+            umode = _update_mode(m)
+            if umode is not None:
+                # UPDATE ... FROM (SQLite 3.33) takes triggers since round
+                # 10; its OR-mode interplay stays a loud reject
+                if from_text is not None:
                     raise QueryRejected(
                         "UPDATE OR IGNORE/REPLACE ... FROM is not "
                         f"supported: {stmt[:80]!r}"
                     )
-            if trigs and _update_mode(m) is not None:
-                raise QueryRejected(
-                    "UPDATE OR IGNORE/REPLACE on a table with UPDATE "
-                    "triggers is not supported (conflict-resolution × "
-                    f"trigger firing interplay out of scope): {stmt[:80]!r}"
-                )
-        if not trigs:
-            self._rewrite_partition(segment_id, stmt, kind)
-            return
-        if kind == "UPDATE" and self._table_schema(segment_id, table).has_extended_uniqueness():
+                if trigs:
+                    raise QueryRejected(
+                        "UPDATE OR IGNORE/REPLACE on a table with UPDATE "
+                        "triggers is not supported (conflict-resolution × "
+                        f"trigger firing interplay out of scope): {stmt[:80]!r}"
+                    )
+                # UPDATE OR IGNORE/REPLACE: SQLite applies rows
+                # SEQUENTIALLY in rowid order, resolving each row's pk
+                # conflict against the evolving table (probed: OR IGNORE
+                # on (1,2,3) with id=id+1 WHERE id<3 changes NOTHING —
+                # each bump collides with the still-present next row; OR
+                # REPLACE deletes the collided-with row), and OR IGNORE
+                # also skips rows whose update violates CHECK/NOT NULL
+                self._update_with_conflict_mode(segment_id, ts, sets, where, umode, stmt)
+                return
+        if trigs and kind == "UPDATE" and ts.has_extended_uniqueness():
             # per-row triggered UPDATE rewrites skip the UNIQUE/collation
             # dup checks — reject LOUDLY (round-8 UNIQUE support scope
             # note).  DELETE never moves a key and is allowed (round 10);
@@ -4869,17 +4793,13 @@ class SegmentStore:
                 "constraints or non-BINARY key collations is not "
                 f"supported: {stmt[:80]!r}"
             )
-        if kind == "UPDATE" and from_text is not None:
-            ts_f = self._table_schema(segment_id, table)
-            pairs = self._affected_rows_from(
-                segment_id, table, ts_f, sets, from_text, upd_where
-            )
-        else:
-            pairs = self._affected_rows(
-                segment_id, table,
-                upd_where if kind == "UPDATE" else m.group("where"),
-                sets, kind,
-            )
+        cs = self._change_set(segment_id, ts, kind, where, sets, from_text)
+        if not trigs:
+            self._apply_change_set(segment_id, cs)
+            if self._ret_capturing(table):
+                self._ret_add(table, cs.returned())
+            return
+        pairs = cs.pairs()
         if len(pairs) > 1 and self._bodies_observe_state(segment_id, trigs):
             # SQLite interleaves UPDATE/DELETE trigger firing per row
             # (probed: an AFTER UPDATE body's SUM(x) sees partially-updated
@@ -4890,7 +4810,6 @@ class SegmentStore:
             # statement's target table mutates the row set SQLite itself
             # documents as undefined, and a pk-less table has no stable row
             # identity for the single-row rewrite.
-            ts = self._table_schema(segment_id, table)
             written = self._body_write_closure(segment_id, trigs)
             if table.lower() in written:
                 raise QueryRejected(
@@ -4947,83 +4866,29 @@ class SegmentStore:
         self._ret_add(
             table, [p[0] if kind == "DELETE" else p[1] for p in pairs]
         )
-        if kind == "UPDATE" and from_text is not None:
-            # triggered UPDATE..FROM: apply the exact pairs the triggers
-            # fired on (a statement re-run could see BEFORE-body writes
-            # to the FROM relations)
+        if table.lower() not in self._body_write_closure(segment_id, trigs):
+            self._apply_change_set(segment_id, cs)
+        elif from_text is not None:
+            # UPDATE..FROM applies the exact pairs the triggers fired on (a
+            # statement re-run could see BEFORE-body writes to the FROM
+            # relations)
             if pairs:
-                self._apply_update_pairs(
-                    segment_id, table, self._table_schema(segment_id, table), pairs
-                )
-        elif self._ret is not None:
-            # affected rows already captured from the pairs above — keep
-            # the rewrite from re-capturing them
-            self._ret.depth += 1
-            try:
-                self._rewrite_partition(segment_id, stmt, kind)
-            finally:
-                self._ret.depth -= 1
+                self._apply_update_pairs(segment_id, table, ts, pairs)
         else:
-            self._rewrite_partition(segment_id, stmt, kind)
+            self._rewrite_partition(segment_id, ts, kind, where, sets)
         self._fire_triggers(segment_id, trigs, "AFTER", pairs, pending)
         self._flush_inserts(segment_id, pending)
-
-    def _affected_rows_from(
-        self,
-        segment_id: str,
-        table: str,
-        ts: TableSchema,
-        sets: dict,
-        from_text: str,
-        where: str | None,
-    ) -> list[tuple]:
-        """(OLD, NEW) pairs for ``UPDATE ... FROM`` on a TRIGGERED table
-        (round 10 — previously a loud reject): the shared
-        `_update_from_picked` computation joined back to the current rows,
-        so trigger firing sees exactly the deterministic greatest-tuple
-        change `_apply_update_pairs` will apply."""
-        assignments = list(sets.items())
-        picked = self._update_from_picked(
-            segment_id, table, ts, assignments, from_text, where
-        )
-        df = self._read_partition(segment_id, table)
-        pk = ts.primary_key
-        joined = df.join(
-            picked,
-            [df[k] == picked[f"__pk_{j}"] for j, k in enumerate(pk)],
-            "inner",
-        )
-        types = {n.lower(): t for n, t in ts.fields}
-        lowered = {c.lower(): i for i, (c, _e) in enumerate(assignments)}
-        post = joined.select(
-            F.struct(*[df[n] for n in df.columns]).alias("_o"),
-            *[
-                (
-                    picked["__s"][f"__set_{lowered[n.lower()]}"].cast(
-                        types[n.lower()]
-                    )
-                    if n.lower() in lowered
-                    else df[n]
-                ).alias(n)
-                for n in df.columns
-            ],
-        )
-        post = self._apply_generated_df(ts, post)
-        rows = post.select(
-            "_o",
-            F.struct(*[F.col(n) for n in df.columns]).alias("_n"),
-        ).collect()
-        return [(r["_o"], r["_n"]) for r in rows]
 
     def _apply_update_pairs(
         self, segment_id: str, table: str, ts: TableSchema, pairs: list[tuple]
     ) -> None:
         """One join-back partition rewrite applying pre-computed (OLD, NEW)
-        update pairs by the OLD row's PRIMARY KEY — the apply step of the
-        triggered UPDATE..FROM batch path.  Applying the pairs themselves
-        (rather than re-running the join rewrite) closes the window where
-        a BEFORE body's write to a FROM relation would shift the re-joined
-        row set away from what the triggers fired on."""
+        update pairs by the OLD row's PRIMARY KEY — the apply step of a
+        triggered UPDATE..FROM whose bodies may write its target table.
+        Applying the pairs themselves (rather than re-running the join)
+        closes the window where a BEFORE body's write to a FROM relation
+        would shift the re-joined row set away from what the triggers
+        fired on."""
         from pyspark.sql import types as _T
 
         pk = ts.primary_key
@@ -5054,40 +4919,6 @@ class SegmentStore:
             ]
         )
         self._overwrite_partition(segment_id, table, out)
-
-    def _affected_rows(
-        self, segment_id: str, table: str, where: str | None, sets, kind: str
-    ) -> list[tuple]:
-        """(OLD, NEW) pairs a DML statement touches — one filtered scan of
-        the single segment partition (same bounded-work argument as
-        _rewrite_partition)."""
-        df = self._read_partition(segment_id, table)
-        mask = (
-            f"coalesce(({dialect.sqlite_to_spark(where)}), false)" if where else "true"
-        )
-        hit = df.filter(mask)
-        if kind == "DELETE":
-            return [(r, None) for r in hit.collect()]
-        ts = self._table_schema(segment_id, table)
-        types = {n.lower(): t for n, t in ts.fields}
-        lowered = {c.lower(): dialect.sqlite_to_spark(e) for c, e in sets.items()}
-        post = hit.select(
-            F.struct(*[F.col(n) for n in df.columns]).alias("_o"),
-            *[
-                (
-                    F.expr(lowered[n.lower()]).cast(types[n.lower()])
-                    if n.lower() in lowered
-                    else F.col(n)
-                ).alias(n)
-                for n in df.columns
-            ],
-        )
-        # generated columns recompute from the post-update base values
-        post = self._apply_generated_df(ts, post)
-        rows = post.select(
-            "_o", F.struct(*[F.col(n) for n in df.columns]).alias("_n")
-        ).collect()
-        return [(r["_o"], r["_n"]) for r in rows]
 
     def _overwrite_partition(
         self, segment_id: str, table: str, rows: DataFrame | pa.Table, *, check=True, rowid=False
